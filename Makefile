@@ -2,7 +2,7 @@
 # full tests/ tree in eight concurrent pytest lanes (tools/run_tests.sh;
 # same sharding the round close uses), ~12-13 min overlapped vs 20+ min
 # single-process.
-.PHONY: test test-serial bench verify plans
+.PHONY: test test-serial bench verify plans perf perf-selftest
 
 test:
 	bash tools/run_tests.sh
@@ -20,3 +20,13 @@ verify:
 
 plans:
 	PYTHONPATH=. python tools/explain_plans.py > /dev/null
+
+# the relay benchmark (BENCHMARK.json, perfbench/README.md): both
+# workloads, untraced, one window each — the spelling before/after
+# comparisons use
+perf:
+	python3 perfbench/run.py --workload update_storm --seed 1 --seconds 12 --trace 0
+	python3 perfbench/run.py --workload live_tail --seed 1 --seconds 12 --trace 0
+
+perf-selftest:
+	python3 -m pytest perfbench/tests -q -p no:cacheprovider

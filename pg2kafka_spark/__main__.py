@@ -14,7 +14,7 @@ an operator of pg2kafka can map their deployment 1:1:
 | (drain then LISTEN, main.go:85-93)       | ``RELAY_ONCE``          | "true": availableNow drain then exit; else continuous micro-batches |
 | (poll pacing)        | ``RELAY_TRIGGER``       | processingTime interval for continuous mode (default "5 seconds") |
 | (page size O12)      | ``RELAY_PAGE_FILES``    | maxFilesPerTrigger |
-| (murmur2 key partitioning + sync produce, README.md:38-40) | ``ORDERED_DELIVERY`` | "true": repartition each micro-batch on external_id + sort (key, id) so a parallel sink preserves per-entity order; ``ORDERED_PARTITIONS`` sizes the shuffle |
+| (murmur2 key partitioning + sync produce, README.md:38-40) | ``ORDERED_DELIVERY`` | "true": sort each micro-batch by (key, id) so a parallel sink preserves per-entity order — a batch at or below AQE's coalescing floor (``spark.sql.adaptive.coalescePartitions.minPartitionSize``, 1 MB) as one task with no shuffle, a larger one after a repartition on external_id; ``ORDERED_PARTITIONS`` always keeps that shuffle and sizes it |
 
 Exit behavior matches O19: RELAY_ONCE drains the backlog and stops;
 continuous mode runs until interrupted (checkpoint makes either mode

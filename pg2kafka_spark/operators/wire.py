@@ -69,6 +69,25 @@ def wire_value(timestamp_format: str = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX") -> Col
     )
 
 
+def _fits_one_task(events: DataFrame) -> bool:
+    """Whether the optimizer's size estimate of ``events`` (for a file
+    scan, the sum of its file sizes) is at or below AQE's coalescing
+    floor, ``spark.sql.adaptive.coalescePartitions.minPartitionSize``.
+    A keyed exchange of such a frame would be coalesced back into one
+    reduce task anyway. False when the size is unknown: Spark then
+    reports ``spark.sql.defaultSizeInBytes`` (above any floor), and a
+    Spark Connect frame exposes no plan statistics at all."""
+    jdf = getattr(events, "_jdf", None)
+    if jdf is None:
+        return False
+    spark = events.sparkSession
+    size = jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    floor = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
+    return int(size) <= floor
+
+
 def ordered_for_delivery(
     events: DataFrame,
     num_partitions: int | None = None,
@@ -91,17 +110,30 @@ def ordered_for_delivery(
     but carry no ordering contract, same as the reference's
     round-robin produce.
 
+    Without ``num_partitions``, a frame whose planned input size is at
+    or below AQE's coalescing floor
+    (``spark.sql.adaptive.coalescePartitions.minPartitionSize``, 1 MB
+    by default) skips the exchange: it is read as ONE task
+    (``coalesce(1)``, no shuffle) and sorted there. AQE would merge
+    its keyed shuffle into a single reduce task anyway, so the output
+    shape is the same and the shuffle, the AQE re-plan and the second
+    job are saved — the common case for a live tail's small
+    micro-batches. A frame above the floor, or of unknown size, keeps
+    the keyed exchange; an explicit ``num_partitions`` always does.
+
     The wire projection (:func:`to_wire`) is narrow, so applying it
-    AFTER this preserves the per-partition order. Scale: one shuffle
-    of the micro-batch (bounded by the paging knob), sort is per-task
-    over that batch's rows — the price of the reference's contract at
-    any parallelism, vs the reference's single-process serial produce.
+    AFTER this preserves the per-partition order. Scale: at most one
+    shuffle of the micro-batch (bounded by the paging knob), sort is
+    per-task over that batch's rows — the price of the reference's
+    contract at any parallelism, vs the reference's single-process
+    serial produce.
     """
-    parted = (
-        events.repartition(int(num_partitions), F.col(key_col))
-        if num_partitions
-        else events.repartition(F.col(key_col))
-    )
+    if num_partitions:
+        parted = events.repartition(int(num_partitions), F.col(key_col))
+    elif _fits_one_task(events):
+        parted = events.coalesce(1)
+    else:
+        parted = events.repartition(F.col(key_col))
     return parted.sortWithinPartitions(key_col, seq_col)
 
 
@@ -173,6 +205,30 @@ def from_wire(
     return messages.select("*", *cols)
 
 
+def wire_columns(
+    database: str,
+    topic_namespace: str | None = None,
+    timestamp_format: str = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+) -> list[Column]:
+    """The :func:`to_wire` projection as a column list. The columns are
+    unresolved expressions, so one list serves any number of frames: a
+    streaming relay builds it once per query and each micro-batch pays
+    only its ``select``."""
+    return [
+        F.col("external_id").alias("key"),
+        wire_value(timestamp_format).alias("value"),
+        topic_column(database, topic_namespace).alias("topic"),
+        F.array(
+            F.struct(
+                F.lit("created_at").alias("key"),
+                F.encode(
+                    F.date_format(F.col("created_at"), timestamp_format), "UTF-8"
+                ).alias("value"),
+            )
+        ).alias("headers"),
+    ]
+
+
 def to_wire(
     events: DataFrame,
     database: str,
@@ -192,16 +248,4 @@ def to_wire(
     payload field) in addition to the JSON body. Consumers that read
     the reference's timestamped messages read the header instead.
     """
-    return events.select(
-        F.col("external_id").alias("key"),
-        wire_value(timestamp_format).alias("value"),
-        topic_column(database, topic_namespace).alias("topic"),
-        F.array(
-            F.struct(
-                F.lit("created_at").alias("key"),
-                F.encode(
-                    F.date_format(F.col("created_at"), timestamp_format), "UTF-8"
-                ).alias("value"),
-            )
-        ).alias("headers"),
-    )
+    return events.select(*wire_columns(database, topic_namespace, timestamp_format))

@@ -14,7 +14,6 @@ cursor is the checkpoint:
 
 from pg2kafka_spark.streaming.relay import (
     bootstrap_outbox,
-    drain_backlog,
     read_event_stream,
     start_relay,
 )
@@ -29,7 +28,6 @@ from pg2kafka_spark.streaming.windows import (
 
 __all__ = [
     "bootstrap_outbox",
-    "drain_backlog",
     "read_event_stream",
     "start_relay",
     "change_stats_stream",

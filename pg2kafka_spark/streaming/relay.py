@@ -33,6 +33,9 @@ first co-locate and sort them — ``operators/wire.py::
 ordered_for_delivery`` (repartition on key + sortWithinPartitions on
 (key, id)), pinned end-to-end by
 tests/test_streaming.py::test_per_key_order_survives_parallel_sink.
+A micro-batch whose planned input is at or below AQE's coalescing
+floor (1 MB by default) skips that shuffle: it is read and sorted as
+one task, the shape AQE would have coalesced the shuffle into anyway.
 """
 
 from __future__ import annotations
@@ -44,7 +47,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from pg2kafka_spark.event import EVENT_SCHEMA
 from pg2kafka_spark.operators.snapshot import snapshot_events
-from pg2kafka_spark.operators.wire import to_wire
+from pg2kafka_spark.operators.wire import ordered_for_delivery, to_wire, wire_columns
 
 
 def bootstrap_outbox(
@@ -118,8 +121,14 @@ def start_relay(
     ``ordered``). For the Kafka sink the producer side must also keep
     retries ordered, which the default
     :func:`~pg2kafka_spark.sources.kafka_sink_options` map does via
-    enable.idempotence. Costs one keyed shuffle of the micro-batch
-    (bounded by the paging knob).
+    enable.idempotence. A micro-batch whose planned input size is at
+    or below AQE's coalescing floor
+    (``spark.sql.adaptive.coalescePartitions.minPartitionSize``, 1 MB
+    by default) is sorted as one task with no shuffle; a larger one
+    costs one keyed shuffle (bounded by the paging knob). An explicit
+    ``ordered_partitions`` always keeps the keyed shuffle, sized to
+    that many tasks. The wire projection is built once per query;
+    each micro-batch only sorts and selects.
 
     ``sink``:
       * ``"kafka"``  — O17: key/value/topic columns route per row;
@@ -134,8 +143,6 @@ def start_relay(
     phase); a ``processing_time`` trigger = the steady-state loop.
     """
     if ordered:
-        from pg2kafka_spark.operators.wire import ordered_for_delivery
-
         if sink == "memory" and foreach_batch is None:
             raise ValueError(
                 "ordered delivery requires a batch-writable sink "
@@ -143,13 +150,10 @@ def start_relay(
                 "no batch twin"
             )
         user_fb = foreach_batch
+        wire_cols = wire_columns(database, topic_namespace)
 
         def _ordered_fb(batch_df: DataFrame, batch_id: int) -> None:
-            w = to_wire(
-                ordered_for_delivery(batch_df, ordered_partitions),
-                database,
-                topic_namespace,
-            )
+            w = ordered_for_delivery(batch_df, ordered_partitions).select(*wire_cols)
             if user_fb is not None:
                 user_fb(w, batch_id)
             elif sink == "kafka":
@@ -185,31 +189,6 @@ def start_relay(
     else:
         writer = writer.format(sink)
     return writer.start()
-
-
-def drain_backlog(
-    spark: SparkSession,
-    outbox_dir: str,
-    database: str,
-    topic_namespace: str | None = None,
-    page_files: int | None = None,
-    checkpoint_dir: str | None = None,
-    **relay_kwargs,
-) -> StreamingQuery:
-    """O13+O19 start-up drain: process every event currently in the
-    outbox in bounded micro-batches, then stop. The page-count loop
-    (``ceil(count/1000)`` at main.go:106-115) is what AvailableNow
-    *is* — bounded batches until the recorded end offset."""
-    events = read_event_stream(spark, outbox_dir, max_files_per_trigger=page_files)
-    q = start_relay(
-        events,
-        database,
-        topic_namespace,
-        checkpoint_dir=checkpoint_dir,
-        available_now=True,
-        **relay_kwargs,
-    )
-    return q
 
 
 def scrub_virgin_checkpoint(spark: SparkSession, checkpoint_dir: str) -> int:

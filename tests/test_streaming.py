@@ -1750,6 +1750,140 @@ def test_start_relay_ordered_mode_delivers_per_key_in_order(
         assert seen[f"k{k}"] == want, f"k{k} out of order"
 
 
+def _write_scattered_chunks(spark, outbox, n_keys, n_chunks, per_chunk):
+    """Append ``n_chunks`` writes of ``per_chunk`` versions of each of
+    ``n_keys`` keys, two files per write, so one key's rows in a
+    micro-batch span source partitions; file mtimes follow write order.
+    Event ``v * n_keys + k`` is version ``v`` of key ``k<k>`` and
+    carries ``{"v": id}``, with a NULL-key row per chunk."""
+    import os
+
+    stamped: set[str] = set()
+    for c in range(n_chunks):
+        rows = [
+            _event(v * n_keys + k, "users", "UPDATE",
+                   '{"v": %d}' % (v * n_keys + k), key=f"k{k}")
+            for v in range(c * per_chunk, (c + 1) * per_chunk)
+            for k in range(n_keys)
+        ]
+        rows.append(_event(10_000 + c, "users", "INSERT", '{"v": null}'))
+        _write_events(spark, rows, outbox, n_files=2)
+        for f in sorted(os.listdir(outbox)):
+            fp = os.path.join(outbox, f)
+            if f.endswith(".parquet") and fp not in stamped:
+                stamped.add(fp)
+                os.utime(fp, (1_700_000_000 + c, 1_700_000_000 + c))
+
+
+@pytest.mark.parametrize(
+    "floor, partitions, exchange",
+    [(None, None, False), ("1b", None, True), (None, 3, True)],
+    ids=["below_floor", "above_floor", "explicit_partitions"],
+)
+def test_ordered_default_partitions_skip_exchange_below_floor(
+    spark, outbox, tmp_path, floor, partitions, exchange
+):
+    """start_relay(ordered=True) without ``ordered_partitions``: a
+    micro-batch whose planned input is at or below AQE's coalescing
+    floor (spark.sql.adaptive.coalescePartitions.minPartitionSize)
+    reaches foreach_batch as one sorted task with no Exchange. Above
+    the floor (the floor lowered to 1 byte here), or with explicit
+    partitions, the keyed exchange stays. Either way every key sits in
+    one task per batch and its ids ascend across paged batches."""
+    conf = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    n_keys, n_chunks, per_chunk = 6, 4, 2
+    _write_scattered_chunks(spark, outbox, n_keys, n_chunks, per_chunk)
+
+    plans: list[str] = []
+    seen: dict[str, list[int]] = {}
+
+    def fb(wire_df, batch_id):
+        plans.append(wire_df._jdf.queryExecution().executedPlan().toString())
+        parts = (
+            wire_df.select(
+                "key",
+                F.get_json_object(F.col("value"), "$.data.v").cast("long").alias("seq"),
+            )
+            .rdd.mapPartitionsWithIndex(lambda pid, it: [(pid, [(r.key, r.seq) for r in it])])
+            .collect()
+        )
+        owner: dict[str, int] = {}
+        for pid, lst in parts:
+            for key, seq in lst:
+                if key is None:
+                    continue
+                assert owner.setdefault(key, pid) == pid, (
+                    f"key {key} split across tasks in batch {batch_id}"
+                )
+                seen.setdefault(key, []).append(seq)
+
+    if floor is not None:
+        spark.conf.set(conf, floor)
+    try:
+        q = start_relay(
+            read_event_stream(spark, outbox, max_files_per_trigger=2),
+            database="testdb",
+            foreach_batch=fb,
+            available_now=True,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            ordered=True,
+            ordered_partitions=partitions,
+        )
+        q.awaitTermination(120)
+    finally:
+        spark.conf.unset(conf)
+    assert q.exception() is None
+    assert len(plans) >= 2, "paging must yield several micro-batches"
+    for plan in plans:
+        if exchange:
+            assert "Exchange hashpartitioning(external_id" in plan, plan
+        else:
+            assert "Exchange" not in plan, plan
+    for k in range(n_keys):
+        want = [v * n_keys + k for v in range(n_chunks * per_chunk)]
+        assert seen[f"k{k}"] == want, f"k{k} out of order"
+
+
+def test_ordered_relay_wire_matches_to_wire_bytes(spark, outbox, tmp_path):
+    """The wire frames start_relay(ordered=True) delivers, across
+    several micro-batches, equal to_wire of the same outbox rows byte
+    for byte in key, value, topic and headers: the relay builds the
+    wire projection once per query and reuses it for every batch."""
+    from pg2kafka_spark.operators.wire import to_wire
+
+    _write_scattered_chunks(spark, outbox, n_keys=5, n_chunks=3, per_chunk=2)
+
+    def rows_of(df):
+        return [
+            (r.key, r.value, r.topic, [(h.key, bytes(h.value)) for h in r.headers])
+            for r in df.collect()
+        ]
+
+    delivered: dict[int, list] = {}
+    q = start_relay(
+        read_event_stream(spark, outbox, max_files_per_trigger=2),
+        database="testdb",
+        topic_namespace="staging",
+        foreach_batch=lambda df, batch_id: delivered.setdefault(batch_id, rows_of(df)),
+        available_now=True,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        ordered=True,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert len(delivered) >= 2, "paging must yield several micro-batches"
+    got = sorted(
+        (row for batch in delivered.values() for row in batch),
+        key=lambda r: (r[1], r[0] or ""),
+    )
+    want = sorted(
+        rows_of(to_wire(spark.read.schema(EVENT_SCHEMA).parquet(outbox), "testdb", "staging")),
+        key=lambda r: (r[1], r[0] or ""),
+    )
+    assert got == want
+    assert {r[2] for r in got} == {"pg2kafka.staging.testdb.users"}
+
+
 def test_wire_roundtrip_through_relay_sink(spark, outbox, tmp_path):
     """The full produce→consume loop: outbox rows drained through the
     relay's wire projection into a sink directory, then CONSUMED back

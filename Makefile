@@ -2,7 +2,7 @@
 # full tests/ tree in eight concurrent pytest lanes (tools/run_tests.sh;
 # same sharding the round close uses), ~12-13 min overlapped vs 20+ min
 # single-process.
-.PHONY: test test-serial bench verify plans perf perf-selftest
+.PHONY: test test-serial test-relay bench verify plans perf perf-selftest
 
 test:
 	bash tools/run_tests.sh
@@ -10,6 +10,11 @@ test:
 # the old single-process spelling, for bisecting lane interference
 test-serial:
 	python -m pytest tests/ -x -q
+
+# the quick lane for relay-path edits (streaming/relay.py,
+# operators/wire.py, __main__.py): the relay e2e and daemon tests only
+test-relay:
+	python -m pytest tests/test_streaming.py tests/test_deploy_surface.py -q -p no:cacheprovider
 
 bench:
 	python bench.py

@@ -14,7 +14,10 @@ an operator of pg2kafka can map their deployment 1:1:
 | (drain then LISTEN, main.go:85-93)       | ``RELAY_ONCE``          | "true": availableNow drain then exit; else continuous micro-batches |
 | (poll pacing)        | ``RELAY_TRIGGER``       | processingTime interval for continuous mode (default "5 seconds") |
 | (page size O12)      | ``RELAY_PAGE_FILES``    | maxFilesPerTrigger |
-| (murmur2 key partitioning + sync produce, README.md:38-40) | ``ORDERED_DELIVERY`` | "true": sort each micro-batch by (key, id) so a parallel sink preserves per-entity order — a batch at or below AQE's coalescing floor (``spark.sql.adaptive.coalescePartitions.minPartitionSize``, 1 MB) as one task with no shuffle, a larger one after a repartition on external_id; ``ORDERED_PARTITIONS`` always keeps that shuffle and sizes it |
+
+Every micro-batch is delivered in per-key id order (the reference's
+murmur2 key partitioning + sync produce, README.md:38-40); see
+``streaming.relay.start_relay``.
 
 Exit behavior matches O19: RELAY_ONCE drains the backlog and stops;
 continuous mode runs until interrupted (checkpoint makes either mode
@@ -49,8 +52,6 @@ def main(env: dict[str, str] | None = None) -> int:
     once = env.get("RELAY_ONCE", "true").lower() in ("1", "true", "yes")
     trigger = env.get("RELAY_TRIGGER", "5 seconds")
     page_files = env.get("RELAY_PAGE_FILES")
-    ordered = env.get("ORDERED_DELIVERY", "").lower() in ("1", "true", "yes")
-    ordered_parts = env.get("ORDERED_PARTITIONS")
     checkpoint = env.get("CHECKPOINT_DIR", os.path.join(outbox, "_checkpoint"))
     brokers = env.get("KAFKA_BROKER")
 
@@ -71,8 +72,6 @@ def main(env: dict[str, str] | None = None) -> int:
         available_now=once,
         processing_time=None if once else trigger,
         kafka_options=kafka_options,
-        ordered=ordered,
-        ordered_partitions=int(ordered_parts) if ordered_parts else None,
     )
     query.awaitTermination()
     return 0

@@ -90,7 +90,6 @@ def _fits_one_task(events: DataFrame) -> bool:
 
 def ordered_for_delivery(
     events: DataFrame,
-    num_partitions: int | None = None,
     key_col: str = "external_id",
     seq_col: str = "id",
 ) -> DataFrame:
@@ -101,25 +100,25 @@ def ordered_for_delivery(
     A micro-batch's rows for one key can span source partitions
     (different outbox files), and a parallel sink would interleave
     them. This is the standard Spark fix, applied ONCE at the sink
-    edge: hash-repartition on the key so every key lands in exactly
-    one task, then sort within each task by (key, seq). A foreachBatch
-    producer that iterates its partition in order then emits each
-    key's events in outbox-id order; with the checkpoint's ordered
-    micro-batches that extends to the whole stream. NULL keys (the
-    reference's unkeyed ByteString-nil messages) all hash to one task
-    but carry no ordering contract, same as the reference's
-    round-robin produce.
+    edge: co-locate each key in exactly one task, then sort within
+    each task by (key, seq). A foreachBatch producer that iterates its
+    partition in order then emits each key's events in outbox-id
+    order; with the checkpoint's ordered micro-batches that extends to
+    the whole stream. NULL keys (the reference's unkeyed ByteString-nil
+    messages) all land in one task but carry no ordering contract,
+    same as the reference's round-robin produce.
 
-    Without ``num_partitions``, a frame whose planned input size is at
-    or below AQE's coalescing floor
+    The co-location is chosen from the frame's measured size, not from
+    a setting. A frame whose planned input size is at or below AQE's
+    coalescing floor
     (``spark.sql.adaptive.coalescePartitions.minPartitionSize``, 1 MB
-    by default) skips the exchange: it is read as ONE task
-    (``coalesce(1)``, no shuffle) and sorted there. AQE would merge
-    its keyed shuffle into a single reduce task anyway, so the output
-    shape is the same and the shuffle, the AQE re-plan and the second
-    job are saved — the common case for a live tail's small
-    micro-batches. A frame above the floor, or of unknown size, keeps
-    the keyed exchange; an explicit ``num_partitions`` always does.
+    by default) is read as ONE task (``coalesce(1)``, no shuffle) and
+    sorted there: AQE would merge its keyed shuffle into a single
+    reduce task anyway, so the output shape is the same and the
+    shuffle, the AQE re-plan and the second job are saved — the common
+    case for a live tail's small micro-batches. A frame above the
+    floor, or of unknown size, is hash-repartitioned on the key into
+    ``spark.sql.shuffle.partitions`` tasks (before AQE coalescing).
 
     The wire projection (:func:`to_wire`) is narrow, so applying it
     AFTER this preserves the per-partition order. Scale: at most one
@@ -128,9 +127,7 @@ def ordered_for_delivery(
     contract at any parallelism, vs the reference's single-process
     serial produce.
     """
-    if num_partitions:
-        parted = events.repartition(int(num_partitions), F.col(key_col))
-    elif _fits_one_task(events):
+    if _fits_one_task(events):
         parted = events.coalesce(1)
     else:
         parted = events.repartition(F.col(key_col))

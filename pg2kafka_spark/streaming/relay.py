@@ -22,20 +22,22 @@ Spark-first mapping — none of that machinery survives as code:
   ByteString-nil behavior), at-least-once from checkpointing — the
   same floor as the reference's produce-then-mark protocol, but
   batched and pipelined instead of one in-flight message.
-* DRY_RUN (main.go:158-160) is the console/memory sink.
+* DRY_RUN (main.go:158-160) is the console sink.
 
 At 100 TB the relay is embarrassingly parallel: the wire projection is
 stateless, so throughput scales with source partitions. Per-key
 ordering (README.md:38-40, the reference's core delivery contract)
-needs one more step at the sink edge: a micro-batch's rows for one
-key can span source files/partitions, so a parallel producer must
-first co-locate and sort them — ``operators/wire.py::
+always holds and needs one more step at the sink edge: a micro-batch's
+rows for one key can span source files/partitions, so a parallel
+producer must first co-locate and sort them — ``operators/wire.py::
 ordered_for_delivery`` (repartition on key + sortWithinPartitions on
-(key, id)), pinned end-to-end by
+(key, id)) on every micro-batch, pinned end-to-end by
 tests/test_streaming.py::test_per_key_order_survives_parallel_sink.
 A micro-batch whose planned input is at or below AQE's coalescing
 floor (1 MB by default) skips that shuffle: it is read and sorted as
 one task, the shape AQE would have coalesced the shuffle into anyway.
+Above the floor, ``spark.sql.shuffle.partitions`` sizes the keyed
+exchange.
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from pg2kafka_spark.event import EVENT_SCHEMA
 from pg2kafka_spark.operators.snapshot import snapshot_events
-from pg2kafka_spark.operators.wire import ordered_for_delivery, to_wire, wire_columns
+from pg2kafka_spark.operators.wire import ordered_for_delivery, wire_columns
 
 
 def bootstrap_outbox(
@@ -96,99 +98,75 @@ def start_relay(
     events: DataFrame,
     database: str,
     topic_namespace: str | None = None,
-    sink: str = "memory",
+    sink: str = "console",
     query_name: str = "pg2kafka_relay",
     checkpoint_dir: str | None = None,
     available_now: bool = False,
     processing_time: str | None = None,
     kafka_options: dict[str, str] | None = None,
     foreach_batch: Callable[[DataFrame, int], None] | None = None,
-    ordered: bool = False,
-    ordered_partitions: int | None = None,
+    ordered: bool = True,
 ) -> StreamingQuery:
-    """Run the relay: canonical events → wire projection → sink.
+    """Run the relay: canonical events → per-key order → wire
+    projection → sink.
 
-    ``ordered=True`` applies :func:`~pg2kafka_spark.operators.wire.
-    ordered_for_delivery` to each micro-batch before the wire
-    projection: repartition on external_id + sort (key, id) within
-    tasks, so a PARALLEL sink emits every entity's events in outbox
-    order — the reference's delivery contract (README.md:38-40) at
-    any parallelism. A streaming frame cannot sort pre-sink
-    (Spark forbids it), so ordered mode routes through foreachBatch
-    where the batch is static: your ``foreach_batch`` then receives
-    the ordered wire frame; without one, kafka/console batch writers
-    are generated (``memory`` has no batch twin — unsupported with
-    ``ordered``). For the Kafka sink the producer side must also keep
-    retries ordered, which the default
-    :func:`~pg2kafka_spark.sources.kafka_sink_options` map does via
-    enable.idempotence. A micro-batch whose planned input size is at
-    or below AQE's coalescing floor
+    Every micro-batch goes through :func:`~pg2kafka_spark.operators.
+    wire.ordered_for_delivery` before the wire projection, so a
+    PARALLEL sink emits every entity's events in outbox order — the
+    reference's delivery contract (README.md:38-40) at any
+    parallelism. A streaming frame cannot sort pre-sink (Spark forbids
+    it), so the relay runs through foreachBatch, where the batch is
+    static. A micro-batch whose planned input size is at or below
+    AQE's coalescing floor
     (``spark.sql.adaptive.coalescePartitions.minPartitionSize``, 1 MB
     by default) is sorted as one task with no shuffle; a larger one
-    costs one keyed shuffle (bounded by the paging knob). An explicit
-    ``ordered_partitions`` always keeps the keyed shuffle, sized to
-    that many tasks. The wire projection is built once per query;
+    costs one keyed shuffle (bounded by the paging knob), sized by
+    ``spark.sql.shuffle.partitions``. For the Kafka sink the producer
+    side must also keep retries ordered, which the default
+    :func:`~pg2kafka_spark.sources.kafka_sink_options` map does via
+    enable.idempotence. The wire projection is built once per query;
     each micro-batch only sorts and selects.
 
-    ``sink``:
+    ``sink`` (any batch-writable format):
       * ``"kafka"``  — O17: key/value/topic columns route per row;
         pass brokers etc. via ``kafka_options`` (compression, acks
         and partitioner are producer configs, exactly like the
         reference's librdkafka map at main.go:179-201).
-      * ``"memory"`` / ``"console"`` — DRY_RUN analogs (O18).
+      * ``"console"`` — the DRY_RUN analog (O18). ``"memory"`` has no
+        batch twin and is rejected.
       * ``foreach_batch`` — custom per-micro-batch delivery (e.g.
-        transactional sinks); receives the wire-shaped DataFrame.
+        transactional sinks); receives the ordered wire frame.
 
     ``available_now=True`` = drain-the-backlog-then-stop (O19's start
     phase); a ``processing_time`` trigger = the steady-state loop.
+
+    ``ordered`` accepts only ``True``: it stays because perfbench still
+    passes ``ordered=True``, and goes with perfbench's next change.
     """
-    if ordered:
-        if sink == "memory" and foreach_batch is None:
-            raise ValueError(
-                "ordered delivery requires a batch-writable sink "
-                "(kafka/console/foreach_batch) — the memory sink has "
-                "no batch twin"
-            )
-        user_fb = foreach_batch
-        wire_cols = wire_columns(database, topic_namespace)
+    if ordered is not True:
+        raise ValueError("start_relay always delivers in per-key order; ordered must be True")
+    if sink == "memory":
+        raise ValueError(
+            "the relay needs a batch-writable sink (kafka/console/"
+            "foreach_batch) — the memory sink has no batch twin"
+        )
+    wire_cols = wire_columns(database, topic_namespace)
 
-        def _ordered_fb(batch_df: DataFrame, batch_id: int) -> None:
-            w = ordered_for_delivery(batch_df, ordered_partitions).select(*wire_cols)
-            if user_fb is not None:
-                user_fb(w, batch_id)
-            elif sink == "kafka":
-                wr = w.write.format("kafka")
-                for k, v in (kafka_options or {}).items():
-                    wr = wr.option(k, v)
-                wr.save()
-            else:
-                w.write.format(sink).save()
+    def _deliver(batch_df: DataFrame, batch_id: int) -> None:
+        wire = ordered_for_delivery(batch_df).select(*wire_cols)
+        if foreach_batch is not None:
+            foreach_batch(wire, batch_id)
+            return
+        wire.write.format(sink).options(**(kafka_options or {})).save()
 
-        writer = events.writeStream.queryName(query_name)
-        if checkpoint_dir is not None:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time is not None:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.foreachBatch(_ordered_fb).start()
-    wire = to_wire(events, database, topic_namespace)
-    writer = wire.writeStream.queryName(query_name)
+    writer = events.writeStream.queryName(query_name)
     if checkpoint_dir is not None:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
     elif processing_time is not None:
         writer = writer.trigger(processingTime=processing_time)
-    if foreach_batch is not None:
-        writer = writer.foreachBatch(foreach_batch)
-    elif sink == "kafka":
-        writer = writer.format("kafka")
-        for k, v in (kafka_options or {}).items():
-            writer = writer.option(k, v)
-    else:
-        writer = writer.format(sink)
-    return writer.start()
+    return writer.foreachBatch(_deliver).start()
 
 
 def scrub_virgin_checkpoint(spark: SparkSession, checkpoint_dir: str) -> int:

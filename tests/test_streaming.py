@@ -2,9 +2,9 @@
 
 Mirrors the reference's e2e relay test strategy (main_test.go: seed
 outbox rows, run the drain, assert message count/keys/payloads —
-SURVEY.md §5 layer 3) with file-source → availableNow → memory-sink
-streams, plus parity checks that the streaming window operators agree
-with their batch formulations.
+SURVEY.md §5 layer 3) with file-source → availableNow → foreachBatch
+relay runs and memory-sink streams, plus parity checks that the
+streaming window operators agree with their batch formulations.
 """
 
 from __future__ import annotations
@@ -83,17 +83,17 @@ def test_relay_snapshot_then_changes_to_memory(spark, outbox, tmp_path):
     )
 
     events = read_event_stream(spark, outbox)
+    out: list[Row] = []
     q = start_relay(
         events,
         database="testdb",
         topic_namespace="staging",
-        sink="memory",
         query_name="relay_out",
         checkpoint_dir=str(tmp_path / "ckpt"),
         available_now=True,
+        foreach_batch=lambda df, _e: out.extend(df.collect()),
     )
     q.awaitTermination(120)
-    out = spark.table("relay_out").collect()
 
     assert len(out) == 6  # 3 SNAPSHOT + 3 changes
     assert all(r.topic == "pg2kafka.staging.testdb.users" for r in out)
@@ -634,16 +634,16 @@ def test_legacy_create_statement_through_full_relay(spark, outbox, tmp_path):
         outbox,
     )
     events = read_event_stream(spark, outbox)
+    out: list[Row] = []
     q = start_relay(
         events,
         database="mydb",
-        sink="memory",
         query_name="relay_legacy",
         checkpoint_dir=str(tmp_path / "ckpt"),
         available_now=True,
+        foreach_batch=lambda df, _e: out.extend(df.collect()),
     )
     q.awaitTermination(120)
-    out = spark.table("relay_legacy").collect()
     assert len(out) == 3
     assert all(r.topic == "pg2kafka.mydb.users" for r in out)
     stmts = sorted(json.loads(r.value)["statement"] for r in out)
@@ -1551,7 +1551,7 @@ def test_per_key_order_survives_parallel_sink(spark, outbox, tmp_path):
     captured: list[tuple[int, int, list]] = []
 
     def fb(batch_df, batch_id):
-        ordered = ordered_for_delivery(batch_df, num_partitions=4)
+        ordered = ordered_for_delivery(batch_df)
         wire = to_wire(ordered, "testdb")  # narrow: order must survive
         parts = (
             wire.select(
@@ -1569,14 +1569,31 @@ def test_per_key_order_survives_parallel_sink(spark, outbox, tmp_path):
             if lst:
                 captured.append((int(batch_id), pid, lst))
 
-    events = read_event_stream(spark, outbox, max_files_per_trigger=2)
-    q = (
-        events.writeStream.queryName("order_e2e")
-        .foreachBatch(fb)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    # force the keyed exchange into 4 uncoalesced tasks: tiny batches
+    # would otherwise be sorted as one task below AQE's floor
+    confs = {
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "4",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        events = read_event_stream(spark, outbox, max_files_per_trigger=2)
+        q = (
+            events.writeStream.queryName("order_e2e")
+            .foreachBatch(fb)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
     batches = sorted({b for b, _, _ in captured})
     assert len(batches) >= 2, "paging must yield several micro-batches"
@@ -1690,66 +1707,6 @@ def test_funnel_state_stream_stages_matches_batch_4stage(spark, tmp_path):
     assert n_full > 0, "fixture must drive some user through all 4 stages"
 
 
-def test_start_relay_ordered_mode_delivers_per_key_in_order(
-    spark, outbox, tmp_path
-):
-    """ordered=True through start_relay itself: the user foreach_batch
-    receives the ORDERED wire frame — per-key id sequences must come
-    out ascending across paged micro-batches."""
-    import os
-
-    n_keys, n_versions = 6, 8
-    stamped: set[str] = set()
-    for c in range(4):
-        rows = [
-            _event(v * n_keys + k, "users", "UPDATE",
-                   '{"v": %d}' % (v * n_keys + k), key=f"k{k}")
-            for v in range(c * 2, c * 2 + 2)
-            for k in range(n_keys)
-        ]
-        _write_events(spark, rows, outbox, n_files=2)
-        for f in sorted(os.listdir(outbox)):
-            fp = os.path.join(outbox, f)
-            if f.endswith(".parquet") and fp not in stamped:
-                stamped.add(fp)
-                os.utime(fp, (1_700_000_000 + c, 1_700_000_000 + c))
-
-    seen: dict[str, list[int]] = {}
-
-    def fb(wire_df, batch_id):
-        parts = (
-            wire_df.select(
-                "key",
-                F.get_json_object(F.col("value"), "$.data.v")
-                .cast("long")
-                .alias("seq"),
-            )
-            .rdd.mapPartitionsWithIndex(
-                lambda pid, it: [[(r.key, r.seq) for r in it]]
-            )
-            .collect()
-        )
-        for lst in parts:
-            for key, seq in lst:
-                seen.setdefault(key, []).append(seq)
-
-    events = read_event_stream(spark, outbox, max_files_per_trigger=2)
-    q = start_relay(
-        events,
-        database="testdb",
-        foreach_batch=fb,
-        available_now=True,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        ordered=True,
-        ordered_partitions=3,
-    )
-    q.awaitTermination(120)
-    assert len(seen) == n_keys
-    for k in range(n_keys):
-        want = [v * n_keys + k for v in range(n_versions)]
-        assert seen[f"k{k}"] == want, f"k{k} out of order"
-
-
 def _write_scattered_chunks(spark, outbox, n_keys, n_chunks, per_chunk):
     """Append ``n_chunks`` writes of ``per_chunk`` versions of each of
     ``n_keys`` keys, two files per write, so one key's rows in a
@@ -1776,20 +1733,20 @@ def _write_scattered_chunks(spark, outbox, n_keys, n_chunks, per_chunk):
 
 
 @pytest.mark.parametrize(
-    "floor, partitions, exchange",
-    [(None, None, False), ("1b", None, True), (None, 3, True)],
-    ids=["below_floor", "above_floor", "explicit_partitions"],
+    "floor, exchange",
+    [(None, False), ("1b", True)],
+    ids=["below_floor", "above_floor"],
 )
 def test_ordered_default_partitions_skip_exchange_below_floor(
-    spark, outbox, tmp_path, floor, partitions, exchange
+    spark, outbox, tmp_path, floor, exchange
 ):
-    """start_relay(ordered=True) without ``ordered_partitions``: a
-    micro-batch whose planned input is at or below AQE's coalescing
-    floor (spark.sql.adaptive.coalescePartitions.minPartitionSize)
-    reaches foreach_batch as one sorted task with no Exchange. Above
-    the floor (the floor lowered to 1 byte here), or with explicit
-    partitions, the keyed exchange stays. Either way every key sits in
-    one task per batch and its ids ascend across paged batches."""
+    """start_relay: a micro-batch whose planned input is at or below
+    AQE's coalescing floor
+    (spark.sql.adaptive.coalescePartitions.minPartitionSize) reaches
+    foreach_batch as one sorted task with no Exchange. Above the floor
+    (lowered to 1 byte here) the keyed exchange stays. Either way every
+    key sits in one task per batch and its ids ascend across paged
+    batches."""
     conf = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     n_keys, n_chunks, per_chunk = 6, 4, 2
     _write_scattered_chunks(spark, outbox, n_keys, n_chunks, per_chunk)
@@ -1826,8 +1783,6 @@ def test_ordered_default_partitions_skip_exchange_below_floor(
             foreach_batch=fb,
             available_now=True,
             checkpoint_dir=str(tmp_path / "ckpt"),
-            ordered=True,
-            ordered_partitions=partitions,
         )
         q.awaitTermination(120)
     finally:
@@ -1844,8 +1799,50 @@ def test_ordered_default_partitions_skip_exchange_below_floor(
         assert seen[f"k{k}"] == want, f"k{k} out of order"
 
 
+def test_start_relay_orders_every_batch_by_default(spark, outbox, tmp_path):
+    """start_relay with no ordering argument sorts each micro-batch by
+    (external_id, id) before foreach_batch sees it, so a scattered
+    outbox drained in pages delivers every key's ids ascending. There
+    is no unordered mode: ``ordered=False`` and the memory sink are
+    rejected."""
+    n_keys, n_chunks, per_chunk = 5, 3, 2
+    _write_scattered_chunks(spark, outbox, n_keys, n_chunks, per_chunk)
+
+    plans: list[str] = []
+    seen: dict[str, list[int]] = {}
+
+    def fb(wire_df, batch_id):
+        plans.append(wire_df._jdf.queryExecution().executedPlan().toString())
+        seq = F.get_json_object(F.col("value"), "$.data.v").cast("long")
+        for r in wire_df.select("key", seq.alias("seq")).collect():
+            if r.key is not None:
+                seen.setdefault(r.key, []).append(r.seq)
+
+    q = start_relay(
+        read_event_stream(spark, outbox, max_files_per_trigger=2),
+        database="testdb",
+        foreach_batch=fb,
+        available_now=True,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert len(plans) >= 2, "paging must yield several micro-batches"
+    for plan in plans:
+        assert "Sort [external_id" in plan, plan
+    for k in range(n_keys):
+        want = [v * n_keys + k for v in range(n_chunks * per_chunk)]
+        assert seen[f"k{k}"] == want, f"k{k} out of order"
+
+    events = read_event_stream(spark, outbox)
+    with pytest.raises(ValueError, match="ordered"):
+        start_relay(events, database="testdb", ordered=False)
+    with pytest.raises(ValueError, match="memory"):
+        start_relay(events, database="testdb", sink="memory")
+
+
 def test_ordered_relay_wire_matches_to_wire_bytes(spark, outbox, tmp_path):
-    """The wire frames start_relay(ordered=True) delivers, across
+    """The wire frames start_relay delivers, across
     several micro-batches, equal to_wire of the same outbox rows byte
     for byte in key, value, topic and headers: the relay builds the
     wire projection once per query and reuses it for every batch."""
@@ -1867,7 +1864,6 @@ def test_ordered_relay_wire_matches_to_wire_bytes(spark, outbox, tmp_path):
         foreach_batch=lambda df, batch_id: delivered.setdefault(batch_id, rows_of(df)),
         available_now=True,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        ordered=True,
     )
     q.awaitTermination(120)
     assert q.exception() is None

@@ -29,19 +29,39 @@ def test_partitioned_jdbc_read_requires_bounds(spark):
 def test_daemon_dry_run_drains_and_exits(spark, tmp_path):
     # RELAY_ONCE + DRY_RUN = the reference's startup drain with the
     # stdout producer (main.go:106-115,158-160): processes the backlog,
-    # prints, returns 0. Each micro-batch is ordered per key before the
-    # console batch writer (README.md:38-40), and the NULL-key row
-    # drains as an unkeyed message.
+    # prints, returns 0.
     outbox = str(tmp_path / "outbox")
-    users = spark.createDataFrame(
-        [Row(uid="u1", name="a"), Row(uid="u2", name="b"), Row(uid=None, name="c")]
-    )
+    users = spark.createDataFrame([Row(uid="u1", name="a"), Row(uid="u2", name="b")])
     bootstrap_outbox(users, outbox, "users", "uid")
     rc = daemon.main(
         {
             "OUTBOX_DIR": outbox,
             "DATABASE": "testdb",
             "TOPIC_NAMESPACE": "staging",
+            "DRY_RUN": "true",
+            "RELAY_ONCE": "true",
+            "CHECKPOINT_DIR": str(tmp_path / "ckpt"),
+        }
+    )
+    assert rc == 0
+
+
+def test_daemon_ordered_delivery_drains_and_exits(spark, tmp_path):
+    """Every micro-batch goes through ordered_for_delivery before the
+    wire projection (the reference's per-entity order contract,
+    README.md:38-40), with no option to turn it off — the daemon must
+    drain cleanly with the per-key sort in the loop and a NULL-key row
+    delivered as an unkeyed message."""
+    outbox = str(tmp_path / "outbox")
+    users = spark.createDataFrame(
+        [Row(uid="u1", name="a"), Row(uid="u2", name="b"),
+         Row(uid=None, name="c")]
+    )
+    bootstrap_outbox(users, outbox, "users", "uid")
+    rc = daemon.main(
+        {
+            "OUTBOX_DIR": outbox,
+            "DATABASE": "testdb",
             "DRY_RUN": "true",
             "RELAY_ONCE": "true",
             "CHECKPOINT_DIR": str(tmp_path / "ckpt"),

@@ -11,10 +11,12 @@ test:
 test-serial:
 	python -m pytest tests/ -x -q
 
-# the quick lane for relay-path edits (streaming/relay.py,
-# operators/wire.py, __main__.py): the relay e2e and daemon tests only
+# the quick lane for relay-core edits (event.py, operators/{snapshot,
+# diff,wire,compaction}.py, streaming/relay.py, sources.py,
+# __main__.py): the relay e2e, daemon and source/sink tests plus the
+# capture/diff/fold unit tests
 test-relay:
-	python -m pytest tests/test_streaming.py tests/test_deploy_surface.py -q -p no:cacheprovider
+	python -m pytest tests/test_streaming.py tests/test_deploy_surface.py tests/test_cdc_semantics.py tests/test_diff_fuzz.py -q -p no:cacheprovider
 
 bench:
 	python bench.py

@@ -13,7 +13,7 @@ an operator of pg2kafka can map their deployment 1:1:
 | ``PERFORM_MIGRATIONS`` (main.go:58-61) | ``PERFORM_MIGRATIONS`` | bootstrap the outbox on start (dir + schema/registry manifest, migrations.py) |
 | (drain then LISTEN, main.go:85-93)       | ``RELAY_ONCE``          | "true": availableNow drain then exit; else continuous micro-batches |
 | (poll pacing)        | ``RELAY_TRIGGER``       | processingTime interval for continuous mode (default "5 seconds") |
-| (page size O12)      | ``RELAY_PAGE_FILES``    | maxFilesPerTrigger |
+| (page size O12)      | ``RELAY_PAGE_FILES``    | maxFilesPerTrigger, a positive integer (unset: one unbounded batch) |
 
 Every micro-batch is delivered in per-key id order (the reference's
 murmur2 key partitioning + sync produce, README.md:38-40); see
@@ -40,6 +40,10 @@ def main(env: dict[str, str] | None = None) -> int:
     if not outbox:
         print("OUTBOX_DIR is required", file=sys.stderr)
         return 2
+    page_files = env.get("RELAY_PAGE_FILES")
+    if page_files and not (page_files.isdecimal() and int(page_files) > 0):
+        print(f"RELAY_PAGE_FILES must be a positive integer, got {page_files!r}", file=sys.stderr)
+        return 2
     if env.get("PERFORM_MIGRATIONS", "").lower() in ("1", "true", "yes"):
         # main.go:58-61: run migrations before relaying; idempotent,
         # fails fast on an envelope conflict
@@ -51,7 +55,6 @@ def main(env: dict[str, str] | None = None) -> int:
     dry_run = env.get("DRY_RUN", "").lower() in ("1", "true", "yes")
     once = env.get("RELAY_ONCE", "true").lower() in ("1", "true", "yes")
     trigger = env.get("RELAY_TRIGGER", "5 seconds")
-    page_files = env.get("RELAY_PAGE_FILES")
     checkpoint = env.get("CHECKPOINT_DIR", os.path.join(outbox, "_checkpoint"))
     brokers = env.get("KAFKA_BROKER")
 

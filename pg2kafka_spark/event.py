@@ -13,7 +13,7 @@ columns) — SURVEY.md §1.3.
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 # Statement enum — sql/triggers.sql:40,70; legacy CREATE in main_test.go:43.
 STMT_SNAPSHOT = "SNAPSHOT"
@@ -41,3 +41,31 @@ EVENT_SCHEMA = T.StructType(
 WIRE_FIELDS = ("uuid", "external_id", "statement", "data", "created_at")
 
 EVENT_COLUMNS = tuple(f.name for f in EVENT_SCHEMA.fields)
+
+
+def envelope(
+    frame: DataFrame,
+    table_name: str,
+    external_id: Column | None,
+    statement: Column,
+    data: Column,
+    id_column: Column | None = None,
+) -> DataFrame:
+    """Project ``frame`` to outbox rows in ``EVENT_COLUMNS`` order — the
+    one place the outbox column defaults (sql/migrations.sql:7-13) are
+    decided. ``id`` is ``id_column`` or ``monotonically_increasing_id()``
+    (unique, ascending within a write's partition, NOT ordered across
+    writes — ROADMAP item 1); ``uuid()``, ``current_timestamp()`` and
+    ``processed = false`` fill the rest. ``external_id`` None ⇒ NULL
+    key (untracked table, unkeyed Kafka message)."""
+    cols = {
+        "id": id_column if id_column is not None else F.monotonically_increasing_id(),
+        "uuid": F.expr("uuid()"),
+        "external_id": external_id if external_id is not None else F.lit(None).cast("string"),
+        "table_name": F.lit(table_name),
+        "statement": statement,
+        "data": data,
+        "created_at": F.current_timestamp(),
+        "processed": F.lit(False),
+    }
+    return frame.select(*[cols[c].alias(c) for c in EVENT_COLUMNS])

@@ -12,7 +12,7 @@ from pg2kafka_spark.operators.diff import (
     capture_changes,
     suppress_noops,
 )
-from pg2kafka_spark.operators.wire import to_wire, topic_name, with_topic
+from pg2kafka_spark.operators.wire import to_wire, topic_name
 from pg2kafka_spark.operators.compaction import latest_state, latest_state_agg
 from pg2kafka_spark.operators.queue import (
     unprocessed,
@@ -28,7 +28,6 @@ __all__ = [
     "suppress_noops",
     "to_wire",
     "topic_name",
-    "with_topic",
     "latest_state",
     "latest_state_agg",
     "unprocessed",

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from pg2kafka_spark.event import STMT_DELETE
+
 
 def latest_state(
     df: DataFrame,
@@ -65,14 +67,13 @@ def apply_change_feed(
     version_col: str,
     payload_col: str,
     columns: Sequence[str],
-    statement_col: str = "statement",
-    delete_statement: str = "DELETE",
 ) -> DataFrame:
     """Materialize current state from a changed-columns-only CDC feed —
     the consumer-side inverse of the trigger's diff (sql/triggers.sql:
     23-37): INSERT/SNAPSHOT rows carry the full row as JSON, UPDATE
     rows carry only changed columns (explicit JSON null = set to NULL,
-    absent key = unchanged), DELETE removes the key.
+    absent key = unchanged), DELETE removes the key. ``feed`` carries
+    the event's ``statement`` column.
 
     Per key and column, the final value is the payload value of the
     LATEST feed row (by ``version_col``) whose JSON contains that
@@ -99,10 +100,10 @@ def apply_change_feed(
                 F.when(touched, F.col(version_col)),
             ).alias(f"__s_{c}")
         )
-    aggs.append(F.max_by(F.col(statement_col), F.col(version_col)).alias("__last"))
+    aggs.append(F.max_by(F.col("statement"), F.col(version_col)).alias("__last"))
     state = df.groupBy(*key_cols).agg(*aggs)
     return state.filter(
-        F.col("__last").isNull() | (F.col("__last") != delete_statement)
+        F.col("__last").isNull() | (F.col("__last") != STMT_DELETE)
     ).select(*key_cols, *[F.col(f"__s_{c}.v").alias(c) for c in columns])
 
 

@@ -33,12 +33,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from pg2kafka_spark.event import (
-    EVENT_COLUMNS,
-    STMT_DELETE,
-    STMT_INSERT,
-    STMT_UPDATE,
-)
+from pg2kafka_spark.event import STMT_INSERT, STMT_UPDATE, envelope
 
 EMPTY_OBJECT = "{}"
 
@@ -101,11 +96,9 @@ def changed_columns_json(
     return F.concat(F.lit("{"), F.concat_ws(",", *fragments), F.lit("}"))
 
 
-def suppress_noops(df: DataFrame, statement_col: str = "statement", data_col: str = "data") -> DataFrame:
+def suppress_noops(df: DataFrame) -> DataFrame:
     """O6 — drop UPDATE events whose diff is empty (sql/triggers.sql:34-37)."""
-    return df.filter(
-        ~((F.col(statement_col) == STMT_UPDATE) & (F.col(data_col) == EMPTY_OBJECT))
-    )
+    return df.filter(~((F.col("statement") == STMT_UPDATE) & (F.col("data") == EMPTY_OBJECT)))
 
 
 def capture_changes(
@@ -113,9 +106,6 @@ def capture_changes(
     table_name: str,
     external_id_column: str | None,
     columns: Sequence[str],
-    op_col: str = "op",
-    before_col: str = "before",
-    after_col: str = "after",
     id_column: Column | None = None,
 ) -> DataFrame:
     """O2..O8 composed — turn a change feed with before/after images
@@ -126,21 +116,24 @@ def capture_changes(
     image). This is the Spark equivalent of the trigger body
     (sql/triggers.sql:1-47): key extraction from NEW on INSERT else OLD
     (lines 14-18), payload build (20-32), no-op filter (34-37), outbox
-    append with defaults (39-41).
+    append with defaults (39-41), the defaults set by
+    :func:`~pg2kafka_spark.event.envelope` (``id_column`` overrides
+    the outbox id).
 
     Scale: narrow map-only pipeline — preserves source partitioning, no
     shuffle; safe to run on an arbitrarily wide change feed.
     """
-    op = F.col(op_col)
-    before = F.col(before_col)
-    after = F.col(after_col)
-    after_type = changes.schema[after_col].dataType
+    op = F.col("op")
+    before = F.col("before")
+    after = F.col("after")
+    after_type = changes.schema["after"].dataType
     field_types = (
         {f.name: f.dataType for f in after_type.fields}
         if isinstance(after_type, T.StructType)
         else {}
     )
 
+    key = None
     if external_id_column is not None:
         # INSERT keys off NEW, UPDATE/DELETE key off OLD (sql/triggers.sql:14-18).
         key = (
@@ -148,8 +141,6 @@ def capture_changes(
             .otherwise(before[external_id_column])
             .cast("string")
         )
-    else:
-        key = F.lit(None).cast("string")
 
     data = (
         F.when(op == STMT_INSERT, full_row_json(after, columns))
@@ -157,14 +148,4 @@ def capture_changes(
         .otherwise(F.lit(EMPTY_OBJECT))  # O7 DELETE projection (sql/triggers.sql:30-32)
     )
 
-    out = changes.select(
-        (id_column if id_column is not None else F.monotonically_increasing_id()).alias("id"),
-        F.expr("uuid()").alias("uuid"),
-        key.alias("external_id"),
-        F.lit(table_name).alias("table_name"),
-        op.alias("statement"),
-        data.alias("data"),
-        F.current_timestamp().alias("created_at"),
-        F.lit(False).alias("processed"),
-    ).select(*EVENT_COLUMNS)
-    return suppress_noops(out)
+    return suppress_noops(envelope(changes, table_name, key, op, data, id_column))

@@ -11,27 +11,26 @@ straight to event rows; Catalyst prunes unread columns if the caller
 projects, and the JSON serialization runs inside whole-stage codegen.
 
 ``id`` ordering: the reference gets a global sequence from Postgres.
-A global order is inherently serial, so at scale we keep only what the
-contract needs — per-key order (Kafka keys it anyway, README.md:38-40) —
-and use ``monotonically_increasing_id()`` (partition-major, unique,
-monotone within a partition) as the outbox ``id`` analog.
+Here the id is the :func:`~pg2kafka_spark.event.envelope` default,
+``monotonically_increasing_id()``: unique, but it restarts at
+``partition << 33`` on every write, so it does NOT order a snapshot
+before later writes. Per-key delivery order (README.md:38-40) holds
+only when every later writer's ids, and its outbox files' times,
+exceed the snapshot's; with default ids on both sides a key's UPDATE
+can be delivered before its SNAPSHOT (ROADMAP item 1).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import Column, DataFrame, functions as F
-
-from pg2kafka_spark.event import EVENT_COLUMNS, STMT_SNAPSHOT
+from pg2kafka_spark.event import STMT_SNAPSHOT, envelope
 
 
 def snapshot_events(
     df: DataFrame,
     table_name: str,
     external_id_column: str | None,
-    payload_columns: Sequence[str] | None = None,
-    id_column: Column | None = None,
 ) -> DataFrame:
     """Wrap every row of ``df`` as a SNAPSHOT event.
 
@@ -39,30 +38,9 @@ def snapshot_events(
     unkeyed Kafka message, sql/sql_test.go:220-222). A NULL value in
     the key column likewise passes through as NULL (ByteString nil
     semantics, eventqueue/event_queue.go:157-164).
-
-    ``payload_columns`` restricts ``row_to_json`` to a projection
-    (default: all columns). ``id_column`` overrides the outbox-id
-    expression (e.g. a source offset for exactly-ordered handoff).
     """
-    cols = list(payload_columns) if payload_columns is not None else df.columns
-    key = (
-        F.col(external_id_column).cast("string")
-        if external_id_column is not None
-        else F.lit(None).cast("string")
-    )
-    out = df.select(
-        (id_column if id_column is not None else F.monotonically_increasing_id()).alias("id"),
-        F.expr("uuid()").alias("uuid"),
-        key.alias("external_id"),
-        F.lit(table_name).alias("table_name"),
-        F.lit(STMT_SNAPSHOT).alias("statement"),
-        # row_to_json(rec) analog (sql/triggers.sql:66); nulls kept as
-        # JSON null — an explicit reference behavior (sql/sql_test.go:92-110).
-        F.to_json(
-            F.struct(*[F.col(c) for c in cols]),
-            {"ignoreNullFields": "false"},
-        ).alias("data"),
-        F.current_timestamp().alias("created_at"),
-        F.lit(False).alias("processed"),
-    )
-    return out.select(*EVENT_COLUMNS)
+    key = F.col(external_id_column).cast("string") if external_id_column is not None else None
+    # row_to_json(rec) analog (sql/triggers.sql:66); nulls kept as
+    # JSON null — an explicit reference behavior (sql/sql_test.go:92-110).
+    data = F.to_json(F.struct(*[F.col(c) for c in df.columns]), {"ignoreNullFields": "false"})
+    return envelope(df, table_name, key, F.lit(STMT_SNAPSHOT), data)

@@ -20,6 +20,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+#: ``created_at`` on the wire: ISO-8601 with microseconds and offset,
+#: the Postgres/Go rendering (README.md:85).
+TIMESTAMP_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+
 
 def parse_topic_namespace(database: str, topic_namespace: str | None = None) -> str:
     """``parseTopicNamespace`` (main.go:215-222): optional prefix + dbname."""
@@ -39,25 +43,20 @@ def topic_column(database: str, topic_namespace: str | None = None) -> Column:
     return F.concat_ws(".", F.lit("pg2kafka"), F.lit(ns), F.col("table_name"))
 
 
-def with_topic(events: DataFrame, database: str, topic_namespace: str | None = None) -> DataFrame:
-    return events.withColumn("topic", topic_column(database, topic_namespace))
-
-
-def wire_value(timestamp_format: str = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX") -> Column:
+def wire_value() -> Column:
     """The JSON wire payload (O15). ``data`` is already a JSON string;
     re-parsing it server-side just to re-serialize would be wasted work
     at scale, so we splice it in as a raw fragment: serialize the other
     four fields, strip the closing brace, append ``"data": <raw>``.
 
-    ``created_at`` renders ISO-8601 with microseconds, matching
-    Postgres/Go wire output (README.md:85).
+    ``created_at`` renders as :data:`TIMESTAMP_FORMAT`.
     """
     head = F.to_json(
         F.struct(
             F.col("uuid"),
             F.col("external_id"),
             F.col("statement"),
-            F.date_format(F.col("created_at"), timestamp_format).alias("created_at"),
+            F.date_format(F.col("created_at"), TIMESTAMP_FORMAT).alias("created_at"),
         ),
         {"ignoreNullFields": "false"},
     )
@@ -88,11 +87,7 @@ def _fits_one_task(events: DataFrame) -> bool:
     return int(size) <= floor
 
 
-def ordered_for_delivery(
-    events: DataFrame,
-    key_col: str = "external_id",
-    seq_col: str = "id",
-) -> DataFrame:
+def ordered_for_delivery(events: DataFrame) -> DataFrame:
     """Enforce the reference's per-key delivery order for a PARALLEL
     producer (README.md:38-40: murmur2 partitioning on external_id +
     one-in-flight sync produce ⇒ strict per-entity order).
@@ -101,9 +96,9 @@ def ordered_for_delivery(
     (different outbox files), and a parallel sink would interleave
     them. This is the standard Spark fix, applied ONCE at the sink
     edge: co-locate each key in exactly one task, then sort within
-    each task by (key, seq). A foreachBatch producer that iterates its
-    partition in order then emits each key's events in outbox-id
-    order; with the checkpoint's ordered micro-batches that extends to
+    each task by (external_id, id). A foreachBatch producer that
+    iterates its partition in order then emits each key's events in
+    outbox-id order; with the checkpoint's ordered micro-batches that extends to
     the whole stream. NULL keys (the reference's unkeyed ByteString-nil
     messages) all land in one task but carry no ordering contract,
     same as the reference's round-robin produce.
@@ -130,27 +125,21 @@ def ordered_for_delivery(
     if _fits_one_task(events):
         parted = events.coalesce(1)
     else:
-        parted = events.repartition(F.col(key_col))
-    return parted.sortWithinPartitions(key_col, seq_col)
+        parted = events.repartition(F.col("external_id"))
+    return parted.sortWithinPartitions("external_id", "id")
 
 
-def from_wire(
-    messages: DataFrame,
-    data_schema: str,
-    value_col: str = "value",
-    timestamp_format: str = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-    rescue: bool = False,
-) -> DataFrame:
-    """CONSUMER-side decode — the inverse of :func:`wire_value`, the
-    parse every downstream service of the reference writes by hand
-    against the documented payload (README.md:75-90): one
-    ``from_json`` recovers the envelope (uuid, external_id,
-    statement, created_at) and the TYPED row under ``data``
-    (``data_schema`` is the tracked table's DDL — schema-pinned like
-    every text source here, never inferred). Returns the input
-    columns plus the five decoded ones; gate on ``data IS NULL`` for
-    quarantine (PERMISSIVE parse, malformed payloads decode to
-    NULL row).
+def from_wire(messages: DataFrame, data_schema: str, rescue: bool = False) -> DataFrame:
+    """CONSUMER-side decode of the ``value`` column — the inverse of
+    :func:`wire_value`, the parse every downstream service of the
+    reference writes by hand against the documented payload
+    (README.md:75-90): one ``from_json`` recovers the envelope (uuid,
+    external_id, statement, created_at) and the TYPED row under
+    ``data`` (``data_schema`` is the tracked table's DDL —
+    schema-pinned like every text source here, never inferred).
+    Returns the input columns plus the five decoded ones; gate on
+    ``data IS NULL`` for quarantine (PERMISSIVE parse, malformed
+    payloads decode to NULL row).
 
     ``rescue=True`` adds a ``rescued`` column — ``map<string,string>``
     of the payload keys NOT in the pinned schema, each value the raw
@@ -160,78 +149,62 @@ def from_wire(
     sql/triggers.sql:21-29) would otherwise be invisible downstream;
     with rescue the drifted keys are observable (alert on
     ``size(rescued) > 0``, backfill from the raw text after the
-    schema catches up). Empty map = no drift; NULL = the payload
-    itself failed to parse (the quarantine gate above).
+    schema catches up). Empty map = no drift; NULL = ``data`` is
+    missing, null, not an object, or the message failed to parse.
 
     Scale shape: JVM-side JacksonParser projections inside codegen
     next to whatever scan carries the messages — the decode twin of
-    the encode's splice, no Python, no shuffle; ``rescue`` adds two
-    more parser passes over the same in-register string (envelope as
-    map to slice the raw ``data`` fragment, fragment as map to diff
-    keys), still map-only."""
+    the encode's splice, no Python, no shuffle. The envelope is parsed
+    ONCE: it is projected under an alias that the decoded columns all
+    read, and the optimizer does not inline a non-cheap expression
+    referenced more than once. ``rescue`` costs one more parser pass
+    (``data`` read as a ``map<string,string>``), still map-only."""
     full = (
         "uuid string, external_id string, statement string, "
         f"created_at string, data struct<{data_schema}>"
     )
-    w = F.from_json(F.col(value_col), full)
+    w = F.col("__w")
     cols = [
         w.getField("uuid").alias("uuid"),
         w.getField("external_id").alias("external_id"),
         w.getField("statement").alias("statement"),
-        F.to_timestamp(
-            w.getField("created_at"), timestamp_format
-        ).alias("created_at"),
+        F.to_timestamp(w.getField("created_at"), TIMESTAMP_FORMAT).alias("created_at"),
         w.getField("data").alias("data"),
     ]
     if rescue:
         from pyspark.sql.types import StructType
 
-        known = [f.name for f in StructType.fromDDL(data_schema).fields]
-        # map<string,string> parse keeps unknown structure: non-string
-        # JSON values (numbers, nested objects) come through as their
-        # raw text, so nothing the producer added is lost.
-        raw_data = F.from_json(
-            F.col(value_col), "map<string,string>"
-        ).getItem("data")
-        cols.append(
-            F.map_filter(
-                F.from_json(raw_data, "map<string,string>"),
-                lambda k, _v: ~k.isin(known),
-            ).alias("rescued")
-        )
-    return messages.select("*", *cols)
+        known = StructType.fromDDL(data_schema).names
+        # map<string,string> keeps unknown structure: non-string JSON
+        # values (numbers, nested objects) come through as raw text, so
+        # nothing the producer added is lost.
+        raw = F.from_json(F.col("value"), "data map<string,string>").getField("data")
+        cols.append(F.map_filter(raw, lambda k, _v: ~k.isin(known)).alias("rescued"))
+    staged = messages.select("*", F.from_json(F.col("value"), full).alias("__w"))
+    return staged.select("*", *cols).drop("__w")
 
 
-def wire_columns(
-    database: str,
-    topic_namespace: str | None = None,
-    timestamp_format: str = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-) -> list[Column]:
+def wire_columns(database: str, topic_namespace: str | None = None) -> list[Column]:
     """The :func:`to_wire` projection as a column list. The columns are
     unresolved expressions, so one list serves any number of frames: a
     streaming relay builds it once per query and each micro-batch pays
     only its ``select``."""
     return [
         F.col("external_id").alias("key"),
-        wire_value(timestamp_format).alias("value"),
+        wire_value().alias("value"),
         topic_column(database, topic_namespace).alias("topic"),
         F.array(
             F.struct(
                 F.lit("created_at").alias("key"),
                 F.encode(
-                    F.date_format(F.col("created_at"), timestamp_format), "UTF-8"
+                    F.date_format(F.col("created_at"), TIMESTAMP_FORMAT), "UTF-8"
                 ).alias("value"),
             )
         ).alias("headers"),
     ]
 
 
-def to_wire(
-    events: DataFrame,
-    database: str,
-    topic_namespace: str | None = None,
-    timestamp_format: str = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-) -> DataFrame:
+def to_wire(events: DataFrame, database: str, topic_namespace: str | None = None) -> DataFrame:
     """Project canonical events to Kafka sink shape:
     ``key`` (nullable binary-safe string), ``value`` (JSON),
     ``topic``, ``headers``.
@@ -245,4 +218,4 @@ def to_wire(
     payload field) in addition to the JSON body. Consumers that read
     the reference's timestamped messages read the header instead.
     """
-    return events.select(*wire_columns(database, topic_namespace, timestamp_format))
+    return events.select(*wire_columns(database, topic_namespace))

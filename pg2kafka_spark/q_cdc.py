@@ -448,7 +448,7 @@ def wire_rescued_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload, ``json_keys`` minus the pinned names, raw-text values
     via ``json_extract_string`` — hash-matching proves the rescue
     path recovers exactly the unknown keys with their values intact
-    (string AND numeric). Map-only both halves: encode, three
+    (string AND numeric). Map-only both halves: encode, two
     JacksonParser passes, one explode — no shuffle."""
     from pg2kafka_spark.operators.wire import from_wire
 

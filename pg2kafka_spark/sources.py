@@ -90,25 +90,21 @@ def read_kafka_event_stream(
     return raw.select(parsed.alias("e")).select("e.*")
 
 
-def kafka_sink_options(
-    brokers: str,
-    compression: str = "snappy",
-    acks: str = "all",
-    idempotent: bool = True,
-) -> dict[str, str]:
+def kafka_sink_options(brokers: str) -> dict[str, str]:
     """O17 producer config, mirroring main.go:179-201: snappy
-    compression; ordering under retries via the idempotent producer
-    (the batched equivalent of the reference's one-in-flight sync
-    ack); the default partitioner is already murmur2-compatible with
-    Java clients, so keyed placement matches pg2kafka's."""
-    opts = {
+    compression, acks from all replicas, and ordering under retries via
+    the idempotent producer (the batched equivalent of the reference's
+    one-in-flight sync ack — turning it off would break per-key order).
+    The default partitioner is already murmur2-compatible with Java
+    clients, so keyed placement matches pg2kafka's. The settings are
+    the contract, not options; a deployment that must differ edits the
+    returned dict."""
+    return {
         "kafka.bootstrap.servers": brokers,
-        "kafka.compression.type": compression,
-        "kafka.acks": acks,
+        "kafka.compression.type": "snappy",
+        "kafka.acks": "all",
+        "kafka.enable.idempotence": "true",
     }
-    if idempotent:
-        opts["kafka.enable.idempotence"] = "true"
-    return opts
 
 
 __all__ = [

@@ -57,7 +57,6 @@ def bootstrap_outbox(
     outbox_dir: str,
     table_name: str,
     external_id_column: str | None,
-    mode: str = "append",
 ) -> None:
     """O10 setup/snapshot: write the current table state into the
     outbox log as SNAPSHOT events *before* the change feed starts
@@ -65,14 +64,20 @@ def bootstrap_outbox(
 
     The reference guarantees no gap/overlap between snapshot and
     trigger installation with an ACCESS EXCLUSIVE lock
-    (sql/triggers.sql:100-111). The log equivalent: files written here
-    sort before later change files, and the stream reads the directory
-    in file order — the snapshot is simply the log prefix. On a real
-    deployment the same holds with Kafka/Delta offsets: record the
-    offset after the snapshot write, start the change producer at it.
+    (sql/triggers.sql:100-111), and its BIGSERIAL id orders the
+    snapshot before every later event. Here the write only appends —
+    an overwrite would erase the log. The snapshot is delivered before
+    a key's later changes only when every later writer's outbox ids
+    AND file modification times exceed the snapshot's: the file source
+    pages by file time and ``ordered_for_delivery`` sorts by id. The
+    default ids (``monotonically_increasing_id()``, restarted per
+    write) do not guarantee that — ROADMAP item 1 reproduces an UPDATE
+    delivered before its key's SNAPSHOT. On a Kafka/Delta log the same
+    holds with offsets: record the offset after the snapshot write,
+    start the change producer at it.
     """
     events = snapshot_events(table_df, table_name, external_id_column)
-    events.write.mode(mode).parquet(outbox_dir)
+    events.write.mode("append").parquet(outbox_dir)
 
 
 def read_event_stream(
@@ -122,7 +127,7 @@ def start_relay(
     by default) is sorted as one task with no shuffle; a larger one
     costs one keyed shuffle (bounded by the paging knob), sized by
     ``spark.sql.shuffle.partitions``. For the Kafka sink the producer
-    side must also keep retries ordered, which the default
+    side must also keep retries ordered, which the
     :func:`~pg2kafka_spark.sources.kafka_sink_options` map does via
     enable.idempotence. The wire projection is built once per query;
     each micro-batch only sorts and selects.

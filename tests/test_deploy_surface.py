@@ -74,6 +74,23 @@ def test_daemon_requires_outbox_dir():
     assert daemon.main({}) == 2
 
 
+@pytest.mark.parametrize("page_files", ["0", "-1", "abc"])
+def test_daemon_rejects_bad_page_size(tmp_path, capsys, page_files):
+    """A RELAY_PAGE_FILES that is not a positive integer is a config
+    error like a missing OUTBOX_DIR: exit 2 with a message, before any
+    Spark work — not a ValueError from int() or an
+    IllegalArgumentException when the stream starts."""
+    rc = daemon.main(
+        {
+            "OUTBOX_DIR": str(tmp_path / "outbox"),
+            "RELAY_PAGE_FILES": page_files,
+            "CHECKPOINT_DIR": str(tmp_path / "ckpt"),
+        }
+    )
+    assert rc == 2
+    assert "RELAY_PAGE_FILES" in capsys.readouterr().err
+
+
 # --- migrations bootstrap (PERFORM_MIGRATIONS analog, main.go:58-61) ------
 
 
@@ -351,26 +368,35 @@ def test_from_wire_rescues_drifted_producer_columns(spark):
     unknown keys with raw-text values — numbers and nested objects
     included — while the typed decode stays intact; an undrifted
     payload rescues an EMPTY map and a malformed one rescues NULL
-    (same quarantine gate as data)."""
+    (same quarantine gate as data). The edge rows pin the decode of a
+    non-object, missing or null ``data``, a type mismatch inside it,
+    and a top-level array."""
     from pg2kafka_spark.operators.wire import from_wire
 
     msgs = spark.createDataFrame(
         [
             # drifted: upstream added added_s (string), added_n
             # (number) and added_o (nested object)
-            ('{"external_id":"1","statement":"UPDATE",'
-             '"data":{"uid":7,"plan":"pro","added_s":"x",'
-             '"added_n":25,"added_o":{"a":1}}}',),
+            (0, '{"external_id":"1","statement":"UPDATE",'
+                '"data":{"uid":7,"plan":"pro","added_s":"x",'
+                '"added_n":25,"added_o":{"a":1}}}'),
             # clean producer, no drift
-            ('{"external_id":"2","statement":"INSERT",'
-             '"data":{"uid":8,"plan":"basic"}}',),
-            ("{not json",),
+            (1, '{"external_id":"2","statement":"INSERT",'
+                '"data":{"uid":8,"plan":"basic"}}'),
+            (2, "{not json"),
+            (3, '{"external_id":"3","statement":"INSERT","data":5}'),
+            (4, '{"external_id":"4","statement":"INSERT"}'),
+            (5, '{"external_id":"5","statement":"INSERT","data":null}'),
+            (6, '{"external_id":"6","statement":"INSERT",'
+                '"data":{"uid":"notanumber","plan":"pro"}}'),
+            (7, '[{"external_id":"7","statement":"INSERT",'
+                '"data":{"uid":9,"plan":"x"}}]'),
         ],
-        "value string",
+        "i int, value string",
     )
     out = from_wire(msgs, "uid bigint, plan string", rescue=True)
-    rows = {r.external_id: r for r in out.collect()}
-    drifted = rows["1"]
+    rows = {r.i: r for r in out.collect()}
+    drifted = rows[0]
     # typed decode unaffected by the unknown keys
     assert drifted.data.uid == 7 and drifted.data.plan == "pro"
     assert drifted.rescued == {
@@ -378,8 +404,38 @@ def test_from_wire_rescues_drifted_producer_columns(spark):
         "added_n": "25",
         "added_o": '{"a":1}',
     }
-    assert rows["2"].rescued == {}
-    assert rows[None].rescued is None
+    assert rows[1].rescued == {}
+    assert rows[2].external_id is None and rows[2].rescued is None
+    # non-object, missing and null data: the envelope survives, data
+    # and rescued are NULL
+    for i in (3, 4, 5):
+        r = rows[i]
+        assert (r.external_id, r.statement) == (str(i), "INSERT")
+        assert r.data is None and r.rescued is None
+    # a type mismatch nulls only the mismatched field; no key drifted
+    assert (rows[6].data.uid, rows[6].data.plan) == (None, "pro")
+    assert rows[6].rescued == {}
+    # a top-level array is not an envelope: everything NULL
+    r = rows[7]
+    assert (r.uuid, r.external_id, r.statement, r.created_at) == (None,) * 4
+    assert r.data is None and r.rescued is None
+
+
+@pytest.mark.parametrize("rescue, parses", [(False, 1), (True, 2)], ids=["plain", "rescue"])
+def test_from_wire_parses_each_message_once(spark, rescue, parses):
+    """The envelope is parsed ONCE per message: the five decoded
+    columns read one aliased from_json instead of each pruning into its
+    own parse; rescue adds exactly one more (data as a string map)."""
+    from pg2kafka_spark.operators.wire import from_wire
+
+    msgs = spark.createDataFrame(
+        [('{"external_id":"1","statement":"INSERT","data":{"uid":7}}',)],
+        "value string",
+    )
+    out = from_wire(msgs, "uid bigint, plan string", rescue=rescue)
+    assert out.collect()[0].data.uid == 7
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("from_json(") == parses, plan
 
 
 def test_source_signature_tracks_content_identity(spark, tmp_path):

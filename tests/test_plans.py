@@ -95,7 +95,7 @@ def test_wire_encode_is_map_only(spark, sf_dir):
 
 
 def test_wire_rescue_decode_is_map_only(spark, sf_dir):
-    # encode → three JacksonParser passes → key diff → explode, all
+    # encode → two JacksonParser passes → key diff → explode, all
     # in one stage over one scan: the rescue path adds parsers, never
     # a shuffle (r16)
     p = plan_of(spark, "wire_rescued_keys", sf_dir)

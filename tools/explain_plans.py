@@ -1358,9 +1358,9 @@ COMMENTARY.update({
     "wire_rescued_keys": (
         "Schema-drift rescue (r16): a drifted producer's unknown "
         "payload keys recovered as a map<string,string> of raw JSON "
-        "text — three JacksonParser passes (typed envelope, envelope "
-        "as map to slice the raw data fragment, fragment as map to "
-        "diff keys vs the pinned schema) all inside one codegen "
+        "text — two JacksonParser passes (typed envelope, and the "
+        "envelope with data as a map to diff keys vs the pinned "
+        "schema) all inside one codegen "
         "stage over one scan, then one explode. No shuffle; the "
         "oracle re-derives the rescued set with DuckDB json_keys "
         "minus the pinned names."

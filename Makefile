@@ -1,8 +1,7 @@
 # Developer entry points. `make test` is the default suite run — the
-# full tests/ tree in eight concurrent pytest lanes (tools/run_tests.sh;
-# same sharding the round close uses), ~12-13 min overlapped vs 20+ min
-# single-process.
-.PHONY: test test-serial test-relay bench verify plans perf perf-selftest
+# full tests/ tree in eight concurrent pytest lanes (tools/run_tests.sh),
+# ~12-13 min overlapped vs 20+ min single-process.
+.PHONY: test test-serial test-relay bench verify perf perf-selftest
 
 test:
 	bash tools/run_tests.sh
@@ -18,15 +17,15 @@ test-serial:
 test-relay:
 	python -m pytest tests/test_streaming.py tests/test_deploy_surface.py tests/test_cdc_semantics.py tests/test_diff_fuzz.py -q -p no:cacheprovider
 
+# the analytics timing of every registered query (not the relay
+# benchmark; see perf): stdout is one JSON line, the full payload —
+# total, per-query best and {best, median, runs, JIT/GC} stats, errors
 bench:
 	python bench.py
 
 # full-surface DuckDB parity at sf0.01 (what the driver grades)
 verify:
 	PYTHONPATH=. python tools/check_parity.py /root/testdata/sf0.01
-
-plans:
-	PYTHONPATH=. python tools/explain_plans.py > /dev/null
 
 # the relay benchmark (BENCHMARK.json, perfbench/README.md): both
 # workloads, untraced, one window each — the spelling before/after

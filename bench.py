@@ -1,66 +1,38 @@
-"""Benchmark harness — runs the headline queries at
+"""Analytics benchmark — times every registered query at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line on stdout:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "total_query_wall_seconds", "value": N, "unit": "sec",
+     "queries": {name: best_secs}, "query_stats": {...}, "sf": ...,
+     "warmup_secs": N, "errors": {name: traceback}}
+
+``errors`` is present only when a query failed. Nothing is written to
+disk. The relay's own benchmark is ``perfbench/`` (``make perf``).
 
 Each query executes end-to-end into the ``noop`` sink: the full plan
 runs (scan → shuffle → agg/window), nothing is converted to Python
 rows — measuring collect() would benchmark Py4J serialization of
 result sets, not the engine.
 
-Methodology (the round-5 lesson, recorded in BASELINE.md):
-
 * **Per-plan warmup at sf0.001.** First execution of a plan pays a
   fixed JVM cost — Janino compilation of the generated projection plus
   C2 JIT of the interpreted higher-order-function eval chain — that is
   keyed to the PLAN SHAPE, not the data (measured: ~3 s for the deep
   portable-hash expression tree, after which the same plan over 100×
-  the rows runs in 0.3 s). Best-of-2 within one process usually hides
-  it, but on a loaded host both timed runs can land inside the warmup
-  window (the r5 ``minhash_signatures_portable`` 2.83 s artifact row vs
-  0.32 s steady-state). Running every query once at the smallest scale
-  factor compiles/JITs every plan for pennies, so the timed section
-  measures the plans, not the JVM.
+  the rows runs in 0.3 s). Running every query once at the smallest
+  scale factor compiles/JITs every plan for pennies, so the timed
+  section measures the plans, not the JVM.
 
-* **Best-of-2 at the target scale factor** (best-of-3 for queries
-  whose best is ≥ 2 s — they are the whole adjudication spread) — the
-  min is the engine's capability; single-run local timings have
-  multi-second noise on a shared host. ``query_stats`` reports
-  {best, median, runs} per query so round-over-round comparisons can
-  be adjudicated against host noise without re-running.
+* **Best-of-2 at the target scale factor** — the min is the engine's
+  capability; single-run local timings have multi-second noise on a
+  shared host. ``query_stats`` reports {best, median, runs} per query
+  plus each rep's JIT-compile and GC milliseconds (two JMX reads per
+  rep), which split a slow rep into "compile storm" (JIT delta ≈ the
+  stall) and "interpreted path" (flat JIT, high wall).
 
-* **stdout discipline.** The driver parses stdout as JSON; Spark and
-  Ivy write banners to fd 1. We re-point fd 1 at stderr for the whole
-  run (so even JVM-side writes land in the log, not the artifact) and
-  write the result line to the saved real stdout at the end. The FULL
-  payload (every query, {best, median, runs} stats) goes to
-  ``BENCH_LOCAL.json`` next to this file.
-
-* **Noise sentinel.** The same fixed cheap plan (lineitem returnflag
-  aggregate) is timed once at the START and once at the END of the
-  timed section and reported as ``sentinel_secs`` [first, last] in
-  the stdout line. The plan never changes across rounds, so a
-  sentinel reading far above its committed BASELINE.md value tells
-  the next judge the whole run is inflated by host load — discount
-  without re-timing (the r10 artifact carried ~10 s of pure host
-  noise on unchanged queries that only a manual re-run exposed).
-
-* **Bounded stdout line.** The driver keeps only the last ~2000
-  characters of stdout (BENCH_r02..r09 all record ``parsed: null``
-  with a mid-JSON ``tail`` — the 129-query payload overflowed the
-  buffer, so eight rounds of driver bench artifacts were
-  unparseable). The stdout line is therefore a COMPACT summary:
-  total/unit/sf plus per-query seconds for as many queries as fit
-  under a 1700-char budget (the cheap tail it drops is summarized in
-  ``queries_omitted`` / ``queries_omitted_secs`` and fully recorded
-  in the committed BENCH_LOCAL.json). Selection (r19 verdict item 6):
-  every name that appeared in the previous round's parsed stdout line
-  is ALWAYS included — additions-only, so a query that merely got
-  faster can never vanish from the line and be mis-reported as
-  "dropped_from_bench" by the round-over-round diff (r19's PERF
-  artifact flagged 8 healthy, faster rows that way) — then the most
-  expensive remaining queries fill the leftover budget.
+* **stdout discipline.** Spark and Ivy write banners to fd 1, so fd 1
+  points at stderr for the whole run (JVM-side writes included) and
+  the result line goes to the saved real stdout at the end.
 """
 
 from __future__ import annotations
@@ -72,6 +44,7 @@ import time
 import traceback
 
 WARM_SF_DIR = "/root/testdata/sf0.001"
+REPS = 2
 
 
 def main() -> int:
@@ -125,54 +98,6 @@ def main() -> int:
     print(f"[bench] warmup pass ({len(qs)} plans @ sf0.001): {warm_secs}s",
           file=sys.stderr)
 
-    # Timed section: best-of-2, plus a THIRD rep for any query whose
-    # best is ≥ 2 s (the heavy ANN/layout rows are the entire
-    # adjudication spread — r7's driver artifact swung 1.6× vs the
-    # committed local run on host noise alone). `queries` stays the
-    # flat name→seconds map the driver parses; `query_stats` carries
-    # {best, median, runs} so a judge can adjudicate variance without
-    # re-running.
-    def sentinel_run() -> float:
-        from pyspark.sql import functions as F
-
-        from pg2kafka_spark.catalog import load_table
-
-        df = (
-            load_table(spark, "lineitem", sf_dir)
-            .groupBy("l_returnflag")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("q"),
-            )
-        )
-        t0 = time.perf_counter()
-        run(df)
-        return round(time.perf_counter() - t0, 4)
-
-    # Settle before the first timed reading: the first run warms the
-    # sentinel plan itself (JIT is plan-keyed), but right after the
-    # concurrent warmup pool the JVM is still digesting (GC of the
-    # warmup garbage, code-cache churn) — the r12 driver artifact read
-    # 1.12 s for a 0.16–0.45 s plan on exactly that edge. Run untimed
-    # reps until two consecutive ones agree within 25% (≤5 reps), so
-    # the artifact's [first, last] pair reads clean without a
-    # BASELINE.md exclusion footnote.
-    prev = sentinel_run()
-    for _ in range(4):
-        cur = sentinel_run()
-        if abs(cur - prev) <= 0.25 * max(cur, prev):
-            break
-        prev = cur
-    sentinel_first = sentinel_run()
-
-    # Per-rep JIT+GC deltas ride along with every timing: the
-    # intermittent single-rep stall class (r12 forensics; recurred
-    # r13 and in one r14 rep) fires only inside full-suite runs and
-    # never in dedicated probes (40 clean reps, BASELINE.md r13→r14
-    # adjudication) — so the artifact itself must carry the split
-    # between "compile storm" (JIT delta ≈ the stall) and
-    # "interpreted path" (flat JIT, high wall) for whichever rep next
-    # exhibits it. Two JMX reads per rep, microseconds.
     _jmf = (
         spark.sparkContext._jvm.java.lang.management.ManagementFactory
     )
@@ -194,73 +119,10 @@ def main() -> int:
         rep_jit: list[int] = []
         rep_gc: list[int] = []
         try:
-            while len(runs) < (2 if not runs or min(runs) < 2.0 else 3):
-                # label jobs so an event-log forensics pass
-                # (tools/evlog_stages.py) can attribute a stall rep
-                spark.sparkContext.setJobDescription(
-                    f"{name}#rep{len(runs)}"
-                )
-                df = qs[name](spark, sf_dir)
-                j0, g0 = _jit_gc_ms()
-                t0 = time.perf_counter()
-                run(df)
-                runs.append(time.perf_counter() - t0)
-                j1, g1 = _jit_gc_ms()
-                rep_jit.append(j1 - j0)
-                rep_gc.append(g1 - g0)
-                # drop persisted sketch intermediates between runs so
-                # the suite measures each query cold and storage never
-                # accrues
-                release_sketch_caches()
-            srt = sorted(runs)
-            mid = len(srt) // 2
-            median = (
-                srt[mid] if len(srt) % 2 else (srt[mid - 1] + srt[mid]) / 2
-            )
-            timings[name] = round(srt[0], 4)
-            stats[name] = {
-                "best": round(srt[0], 4),
-                "median": round(median, 4),
-                "runs": [round(r, 4) for r in runs],
-                "rep_jit_ms": rep_jit,
-                "rep_gc_ms": rep_gc,
-            }
-        except Exception:
-            errors[name] = traceback.format_exc(limit=3)
-
-    # Drift retry + annotation (the r14 adjudication lesson,
-    # BASELINE.md "r13→r14 adjudication"): inter-session variance on
-    # this host spans 1.3–1.6× per row at quiet sentinels and the
-    # sentinel cannot sense it. Compare each row's best against the
-    # PREVIOUS committed run's median; rows ≥1.8× get two extra reps
-    # NOW (splitting one-off rep noise from session-sticky slowness)
-    # and are annotated in the payload so the judge gets the
-    # adjudication context without re-running.
-    prev_medians: dict[str, float] = {}
-    local_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "BENCH_LOCAL.json")
-    try:
-        with open(local_path) as fh:
-            prev = json.load(fh)
-        prev_medians = {
-            n: s.get("median", 0.0)
-            for n, s in prev.get("query_stats", {}).items()
-        }
-    except (OSError, ValueError):
-        pass
-    drift: dict[str, dict] = {}
-    for name in sorted(timings):
-        pm = prev_medians.get(name)
-        if not pm or timings[name] < 1.8 * pm:
-            continue
-        runs = stats[name]["runs"]
-        rep_jit = stats[name]["rep_jit_ms"]
-        rep_gc = stats[name]["rep_gc_ms"]
-        try:
-            for _ in range(2):
-                spark.sparkContext.setJobDescription(
-                    f"{name}#driftrep{len(runs)}"
-                )
+            for rep in range(REPS):
+                # label jobs so an event-log pass (tools/evlog_stages.py)
+                # can attribute a slow rep
+                spark.sparkContext.setJobDescription(f"{name}#rep{rep}")
                 df = qs[name](spark, sf_dir)
                 j0, g0 = _jit_gc_ms()
                 t0 = time.perf_counter()
@@ -269,127 +131,39 @@ def main() -> int:
                 j1, g1 = _jit_gc_ms()
                 rep_jit.append(j1 - j0)
                 rep_gc.append(g1 - g0)
+                # drop persisted sketch intermediates between runs so
+                # the suite measures each query cold and storage never
+                # accrues
                 release_sketch_caches()
         except Exception:
-            pass  # keep the original reps; annotation still lands
-        srt = sorted(runs)
-        mid = len(srt) // 2
-        median = srt[mid] if len(srt) % 2 else (srt[mid - 1] + srt[mid]) / 2
-        timings[name] = round(srt[0], 4)
+            errors[name] = traceback.format_exc(limit=3)
+            continue
+        timings[name] = min(runs)
         stats[name] = {
-            "best": round(srt[0], 4),
-            "median": round(median, 4),
+            "best": min(runs),
+            "median": round(sum(runs) / len(runs), 4),
             "runs": runs,
             "rep_jit_ms": rep_jit,
             "rep_gc_ms": rep_gc,
         }
-        drift[name] = {
-            "prev_median": pm,
-            "best": timings[name],
-            "ratio": round(timings[name] / pm, 2),
-            "still_drifted": timings[name] >= 1.8 * pm,
-        }
-        print(f"[bench] drift retry {name}: runs={runs} "
-              f"prev_median={pm}", file=sys.stderr)
 
-    sentinel_last = sentinel_run()
-    sentinel = [sentinel_first, sentinel_last]
-
-    total = round(sum(timings.values()), 4)
     payload: dict = {
         "metric": "total_query_wall_seconds",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "query_stats": stats,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "warmup_secs": warm_secs,
-        "sentinel_secs": sentinel,
     }
     if errors:
         payload["errors"] = errors
-    if drift:
-        payload["drift_vs_prev"] = drift
-    line = json.dumps(payload)
-
-    try:
-        with open(local_path, "w") as fh:
-            fh.write(line + "\n")
-    except OSError:
-        pass
-
-    # Compact stdout line: must fit the driver's ~2000-char stdout
-    # tail in full or BENCH_r{N}.json records parsed:null. Include
-    # per-query seconds most-expensive-first until the 1700-char
-    # budget is hit; the dropped cheap tail is summarized.
-    compact: dict = {
-        "metric": "total_query_wall_seconds",
-        "value": total,
-        "unit": "sec",
-        "sf": payload["sf"],
-        "n_queries": len(timings),
-        "warmup_secs": warm_secs,
-        "sentinel_secs": sentinel,
-        "detail": "full per-query stats in committed BENCH_LOCAL.json",
-        "queries": {},
-    }
-    if errors:
-        compact["n_errors"] = len(errors)
-    if drift:
-        compact["n_drift_vs_prev"] = len(drift)
-        compact["n_drift_persisting"] = sum(
-            1 for d in drift.values() if d["still_drifted"]
-        )
-    # Names published in the r19 driver-parsed stdout line
-    # (BENCH_r19.json "queries" keys). Additions-only contract: once a
-    # name has appeared in a parsed line it keeps appearing, so the
-    # driver's round-over-round diff never sees a healthy row
-    # disappear. Extend this list with any NEW names the next
-    # committed BENCH_LOCAL run publishes.
-    _published = [
-        "embedding_ann_ivf_pq", "embedding_ann_pq_sampled",
-        "embedding_ann_ivf_sq8", "part_pair_cooccurrence",
-        "embedding_ann_ivf", "embedding_prototype_prune",
-        "embedding_knn_graph", "orders_table_profile",
-        "minhash_lsh_pairs", "embedding_ann_ivf_sampled",
-        "economy_revenue_share", "shingle_jaccard_pairs",
-        "embedding_diversity_sample", "embedding_ann_ivf_incremental",
-        "training_corpus_assembly", "semantic_dedup_embeddings",
-        "embedding_cell_drift", "doc_bigram_surprisal",
-        "multimodal_features_real", "embedding_ann_pq",
-        "embedding_near_dup_lsh_pairs", "bpe_encode_documents",
-        "brand_share_by_year", "important_part_stock",
-        "brand_supplier_revenue", "revenue_by_region",
-        "near_dup_keep_list", "zorder_layout_stats",
-        "hilbert_layout_stats", "media_near_dup_real",
-        "large_quantity_orders", "embedding_topk_quantized",
-        "bpe_encode_production", "doc_repetition",
-        "orders_table_profile_approx", "lang_ngram_profile",
-        "order_line_arrays", "daily_ingest_keep_list",
-        "bloom_semijoin_prune", "regional_min_cost_supplier",
-        "ann_ivf_pq_served_incremental", "dsir_importance_weights",
-    ]
-    sel: dict[str, float] = {
-        n: timings[n] for n in _published if n in timings
-    }
-    compact["queries"] = sel
-    for name, secs in sorted(timings.items(), key=lambda kv: -kv[1]):
-        if name in sel:
-            continue
-        sel[name] = secs
-        if len(json.dumps(compact)) > 1700:
-            del sel[name]
-            break
-    compact["queries_omitted"] = len(timings) - len(sel)
-    compact["queries_omitted_secs"] = round(
-        total - sum(sel.values()), 4)
-    out_line = json.dumps(compact)
 
     spark.stop()
-    os.write(real_stdout, (out_line + "\n").encode())
-    # rc stays 0 on per-query errors: a parseable artifact with an
-    # "errors" field beats an rc=1 with no artifact (the r4 failure
-    # mode). Total-crash still raises out of main().
+    os.write(real_stdout, (json.dumps(payload) + "\n").encode())
+    # rc stays 0 on per-query errors: a parseable line with an
+    # "errors" field beats an rc=1 with no result. A total crash still
+    # raises out of main().
     return 0
 
 

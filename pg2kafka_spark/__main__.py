@@ -12,7 +12,7 @@ an operator of pg2kafka can map their deployment 1:1:
 | ``DATABASE`` (from url, main.go:207-213) | ``DATABASE`` | db segment of the topic name |
 | ``PERFORM_MIGRATIONS`` (main.go:58-61) | ``PERFORM_MIGRATIONS`` | bootstrap the outbox on start (dir + schema/registry manifest, migrations.py) |
 | (drain then LISTEN, main.go:85-93)       | ``RELAY_ONCE``          | "true": availableNow drain then exit; else continuous micro-batches |
-| (poll pacing)        | ``RELAY_TRIGGER``       | processingTime interval for continuous mode (default "5 seconds") |
+| (poll pacing)        | ``RELAY_TRIGGER``       | processingTime interval for continuous mode (default "5 seconds"; one Spark cannot parse exits 2) |
 | (page size O12)      | ``RELAY_PAGE_FILES``    | maxFilesPerTrigger, a positive integer (unset: one unbounded batch) |
 
 Every micro-batch is delivered in per-key id order (the reference's
@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import os
 import sys
+
+from pyspark.errors import IllegalArgumentException
 
 from pg2kafka_spark.session import get_spark
 from pg2kafka_spark.sources import kafka_sink_options
@@ -62,6 +64,14 @@ def main(env: dict[str, str] | None = None) -> int:
     events = read_event_stream(
         spark, outbox, max_files_per_trigger=int(page_files) if page_files else None
     )
+    if not once:
+        # only Spark's parser knows its interval syntax: try the trigger
+        # on an unstarted writer so a bad value is a config error too
+        try:
+            events.writeStream.trigger(processingTime=trigger)
+        except (IllegalArgumentException, ValueError) as e:
+            print(f"RELAY_TRIGGER must be a processing-time interval, got {trigger!r}: {e}", file=sys.stderr)
+            return 2
     if dry_run or not brokers:
         sink, kafka_options = "console", None
     else:

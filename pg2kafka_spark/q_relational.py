@@ -2172,7 +2172,7 @@ def economy_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf parquet is ONE row group, so the scan stage (decode + BHJ
     # probe + DECIMAL partial aggregation, ~0.95 task-s) ran as a
     # single real task and wall == that task (guide §2.5, the 8-core
-    # inversion in PERF_r19 scaling: 0.74). Project to the four used
+    # inversion in the r19 scaling check: 0.74). Project to the four used
     # columns (§2.3 insurance) and hash-spread the small scan by
     # l_partkey (200 k distinct — no sortBeforeRepartition cost, see
     # spread_small_input) so the decimal compute and partial agg run

@@ -91,6 +91,49 @@ def test_daemon_rejects_bad_page_size(tmp_path, capsys, page_files):
     assert "RELAY_PAGE_FILES" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("trigger", ["abc", "-1 seconds"])
+def test_daemon_rejects_bad_trigger(spark, tmp_path, capsys, trigger):
+    """A RELAY_TRIGGER Spark cannot parse (or a negative interval) is a
+    config error like a bad RELAY_PAGE_FILES: exit 2 with a message
+    naming the variable, not a traceback out of writeStream.trigger."""
+    outbox = tmp_path / "outbox"
+    outbox.mkdir()
+    rc = daemon.main(
+        {
+            "OUTBOX_DIR": str(outbox),
+            "RELAY_ONCE": "false",
+            "RELAY_TRIGGER": trigger,
+            "CHECKPOINT_DIR": str(tmp_path / "ckpt"),
+        }
+    )
+    assert rc == 2
+    err = capsys.readouterr().err
+    assert "RELAY_TRIGGER" in err
+    assert "Traceback" not in err
+    assert not (tmp_path / "ckpt").exists()
+
+
+def test_make_recipes_name_existing_files():
+    """Every script a Makefile recipe runs (tools/…, tests/…, bench.py,
+    perfbench/…) exists, so deleting a file cannot leave a target
+    that fails only when someone runs it."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    recipes = [
+        line for line in (root / "Makefile").read_text().splitlines()
+        if line.startswith("\t")
+    ]
+    paths = {
+        m.group(0)
+        for line in recipes
+        for m in re.finditer(r"(?:tools|perfbench|tests)/[\w./-]+|\bbench\.py\b", line)
+    }
+    assert "bench.py" in paths and any(p.startswith("tools/") for p in paths)
+    assert not [p for p in sorted(paths) if not (root / p).exists()]
+
+
 # --- migrations bootstrap (PERFORM_MIGRATIONS analog, main.go:58-61) ------
 
 

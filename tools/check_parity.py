@@ -1,12 +1,9 @@
-"""Local stand-in for the driver's correctness gate: run every
+"""The DuckDB oracle-parity gate (``make verify``): run every
 registered query AND its DuckDB oracle at sf0.01, compare row count,
 sorted-column schema, and an order-insensitive value hash.
 
-The driver's own artifact (CORRECTNESS_rN.json) caps at 50 of the
-registered queries, so queries past the cap would otherwise have no
-durable evidence trail; a full run of this tool writes the same
-fields for EVERY query to the path named in $PARITY_OUT (e.g.
-CORRECTNESS_LOCAL_r05.json), committed alongside the driver's file.
+With $PARITY_OUT set, a full run (no query names given) also writes
+each query's fields (rows, schema, hash, err) to that path as JSON.
 
 Usage: [PARITY_OUT=path] python tools/check_parity.py [sf_dir] [query ...]
 """

@@ -1,9 +1,7 @@
 #!/bin/bash
-# Default developer test entry (r15 verdict item 4): the full suite in
-# EIGHT concurrent pytest lanes — the same sharding round_close.sh
-# runs, promoted out of the round-close path so the everyday
-# `make test` pays the overlapped wall instead of the 20+ min
-# single-process run.
+# Default developer test entry: the full suite in EIGHT concurrent
+# pytest lanes, so the everyday `make test` pays the overlapped wall
+# instead of the 20+ min single-process run.
 #
 #   make test            # or: bash tools/run_tests.sh
 #   PYTEST_ARGS="-k wire" bash tools/run_tests.sh   # forwarded to ALL lanes
@@ -36,11 +34,9 @@ set -uo pipefail
 cd "$(dirname "$0")/.."
 
 # Full coverage here, always: the heavy_e2e-marked streaming/store
-# e2e tests (skipped in a PLAIN `pytest tests/` run so the grading
-# driver's sequential wall-budgeted run finishes even on the 4x-slow
-# host class — r19 verdict item 2, see tests/conftest.py) are
-# enabled for every lane of this runner and for round_close.sh,
-# which calls it.
+# e2e tests (skipped in a PLAIN `pytest tests/` run so a sequential
+# wall-budgeted run finishes even on a 4x-slow host, see
+# tests/conftest.py) are enabled for every lane of this runner.
 export PG2KAFKA_HEAVY_E2E=1
 
 STREAM_A="tests/test_streaming.py"

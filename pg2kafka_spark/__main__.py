@@ -5,7 +5,7 @@ an operator of pg2kafka can map their deployment 1:1:
 
 | reference env        | engine env              | meaning |
 |----------------------|-------------------------|---------|
-| ``DATABASE_URL``     | ``OUTBOX_DIR``          | where the outbox/change log lives (file dir here; jdbc/kafka via sources.py) |
+| ``DATABASE_URL``     | ``OUTBOX_DIR``          | where the outbox/change log lives (file dir here; jdbc/kafka via sources.py); one Spark cannot read exits 2 |
 | ``KAFKA_BROKER``     | ``KAFKA_BROKER``        | sink brokers |
 | ``TOPIC_NAMESPACE``  | ``TOPIC_NAMESPACE``     | optional topic prefix (main.go:215-222) |
 | ``DRY_RUN``          | ``DRY_RUN``             | log to console instead of producing (main.go:158-160) |
@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.errors import IllegalArgumentException
+from pyspark.errors import AnalysisException, IllegalArgumentException
 
 from pg2kafka_spark.session import get_spark
 from pg2kafka_spark.sources import kafka_sink_options
@@ -61,9 +61,16 @@ def main(env: dict[str, str] | None = None) -> int:
     brokers = env.get("KAFKA_BROKER")
 
     spark = get_spark("pg2kafka_spark-relay")
-    events = read_event_stream(
-        spark, outbox, max_files_per_trigger=int(page_files) if page_files else None
-    )
+    # the file source checks the path through its own file system, so a
+    # missing outbox is caught here rather than by a local path test
+    # that a remote outbox URI would fail
+    try:
+        events = read_event_stream(
+            spark, outbox, max_files_per_trigger=int(page_files) if page_files else None
+        )
+    except AnalysisException as e:
+        print(f"OUTBOX_DIR {outbox!r} cannot be read as the outbox: {e}", file=sys.stderr)
+        return 2
     if not once:
         # only Spark's parser knows its interval syntax: try the trigger
         # on an unstarted writer so a bad value is a config error too

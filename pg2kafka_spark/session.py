@@ -3,9 +3,10 @@
 Single place where every entry point (tests, bench, driver harness)
 builds its session, so scale-relevant knobs are set once:
 
-* AQE on (runtime re-plan: partition coalescing, skew-join splitting,
-  dynamic broadcast) — at 100 TB the static plan is always wrong
-  somewhere; AQE fixes it from runtime stats.
+* AQE on (Spark's default, not restated here; runtime re-plan:
+  partition coalescing, skew-join splitting, dynamic broadcast) — at
+  100 TB the static plan is always wrong somewhere; AQE fixes it from
+  runtime stats.
 * ``spark.sql.shuffle.partitions`` sized to local cores here; on a real
   cluster this is overridden to ~2-3× total cores (AQE coalescing makes
   over-partitioning cheap, under-partitioning is what kills you).
@@ -38,11 +39,11 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         # --- shuffle sizing: match parallelism, let AQE coalesce down ---
+        # (local[cpus] already makes the default parallelism cpus)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.default.parallelism", str(cpus))
-        # --- adaptive execution: runtime re-plan from real stats ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # --- adaptive execution: runtime re-plan from real stats. AQE,
+        # its partition coalescing and its skew-join splitting are on
+        # by Spark's defaults, so they are not restated here. ---
         # parallelismFirst stays at its DEFAULT (true). r19 tried
         # false (respect advisoryPartitionSizeInBytes when coalescing,
         # per the AQE docs' production note) and it lost badly on
@@ -59,7 +60,6 @@ def get_spark(
         # scale-independent in kind (bytes are the wrong proxy for
         # generate-heavy stages), so the default holds in production
         # too.
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # --- joins: allow shuffled-hash where its size conditions hold
         # (guide §3.1/§9). The planner still requires the build side to
         # fit a per-partition hash map, and AQE additionally rewrites a
@@ -94,8 +94,6 @@ def get_spark(
         # --- TIMESTAMP(NANOS) parquet (events.ts) reads as LONG ns;
         # the catalog converts to µs timestamps explicitly ---
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # --- parquet scan sizing: 128 MB splits is the scan sweet spot ---
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # --- shuffle writer: always the sort-based writer (r19).
         # Below 200 reduce partitions Spark picks the bypass writer,
         # which creates one file PER REDUCE PARTITION per map task and

@@ -8,7 +8,7 @@ cursor is the checkpoint:
 * O12 paginated scan   → ``maxFilesPerTrigger`` micro-batch pacing
 * O13 page-count drain → ``Trigger.AvailableNow`` backlog drain
 * O14 mark-processed   → ``checkpointLocation`` offset commit
-* O17 keyed produce    → ``writeStream`` with key/value/topic columns
+* O17 keyed produce    → a per-micro-batch sink write with key/value/topic columns
 * O19 drain-then-listen→ availableNow run, then processingTime run
 """
 

@@ -77,6 +77,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pg2kafka_spark.operators.similarity import as_double, assign_cells
+from pg2kafka_spark.streaming.relay import (
+    await_drain,
+    read_file_stream,
+    start_stream,
+)
 
 
 def _manifest_read_path(p: str) -> str:
@@ -196,23 +201,15 @@ def start_pq_index_ingest_stream(
     reads (the serve path never touches them)."""
     import os
 
-    if os.path.exists(_retrain_sentinel(index_path)):
-        raise RuntimeError(
-            f"index {index_path!r} is mid-retrain (sentinel present) — "
-            "a concurrent retrain is running or crashed mid-swap; "
-            "complete/clear it before resuming ingest"
-        )
+    _refuse_mid_retrain(index_path)
     coarse = spark.read.parquet(f"{index_path}/centroids")
     books = spark.read.parquet(f"{index_path}/codebooks")
     keep_raw = os.path.isdir(f"{index_path}/raw")
     keep_manifest = os.path.isdir(f"{index_path}/manifest")
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    stream = reader.parquet(incoming_dir)
+    stream = read_file_stream(
+        spark, incoming_dir, schema, max_files_per_trigger
+    )
     if keep_manifest:
         # the landing file IS the durable source the manifest points
         # at; capture its path per row before foreachBatch detaches
@@ -250,14 +247,9 @@ def start_pq_index_ingest_stream(
             "batch_id", F.lit(int(batch_id))
         ).write.mode("append").parquet(f"{index_path}/drift")
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_stream(
+        stream, _process, checkpoint_dir, available_now, "10 seconds"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()
 
 
 def drift_stats(assigned: DataFrame, id_col: str = "vec_id") -> DataFrame:
@@ -298,22 +290,12 @@ def start_index_ingest_stream(
     ``save_ivf_index`` — the nightly bootstrap); this loop only
     accretes. ``available_now=True`` drains the backlog then stops
     (the nightly-job mode)."""
-    import os
-
-    if os.path.exists(_retrain_sentinel(index_path)):
-        raise RuntimeError(
-            f"index {index_path!r} is mid-retrain (sentinel present) — "
-            "a concurrent retrain_index is running or crashed mid-swap; "
-            "complete/clear it before resuming ingest"
-        )
+    _refuse_mid_retrain(index_path)
     cents = spark.read.parquet(f"{index_path}/centroids")
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    stream = reader.parquet(incoming_dir)
+    stream = read_file_stream(
+        spark, incoming_dir, schema, max_files_per_trigger
+    )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint()  # sever the source lineage
@@ -334,18 +316,26 @@ def start_index_ingest_stream(
             "batch_id", F.lit(int(batch_id))
         ).write.mode("append").parquet(f"{index_path}/drift")
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_stream(
+        stream, _process, checkpoint_dir, available_now, "10 seconds"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()
 
 
 def _retrain_sentinel(index_path: str) -> str:
     return index_path.rstrip("/") + ".__retraining__"
+
+
+def _refuse_mid_retrain(index_path: str) -> None:
+    """Raise when a retrain's sentinel is on disk: ingest must not
+    accrete to (and a cycle must not serve) a half-swapped index."""
+    import os
+
+    if os.path.exists(_retrain_sentinel(index_path)):
+        raise RuntimeError(
+            f"index {index_path!r} is mid-retrain (sentinel present) — "
+            "a concurrent retrain is running or crashed mid-swap; "
+            "complete/clear it before resuming ingest"
+        )
 
 
 def compact_cells(
@@ -653,22 +643,9 @@ def run_index_maintenance(
     external corpus handle needed. ``compact=True`` runs
     ``compact_cells`` on the no-retrain path (retrain already folds),
     on whatever cadence the caller schedules — file-count
-    maintenance, not a correctness need."""
-    import os
-
-    if os.path.exists(_retrain_sentinel(index_path)):
-        raise RuntimeError(
-            f"index {index_path!r} is mid-retrain (sentinel present) — "
-            "a concurrent retrain_index is running or crashed mid-swap; "
-            "complete/clear it before resuming ingest"
-        )
-    from pg2kafka_spark.streaming.relay import scrub_virgin_checkpoint
-
-    # a prior cycle's stop/crash can interrupt the FIRST offset write,
-    # leaving an orphan .tmp that Spark 4.x refuses to restart over
-    # (STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY) — scrub it; a no-op
-    # the moment any offset has committed.
-    scrub_virgin_checkpoint(spark, checkpoint_dir)
+    maintenance, not a correctness need. A drain that outlives
+    ``timeout_s`` is stopped and raises ``TimeoutError`` before any
+    retrain or compaction (``relay.await_drain``)."""
     q = start_index_ingest_stream(
         spark,
         incoming_dir,
@@ -680,17 +657,7 @@ def run_index_maintenance(
         max_files_per_trigger=max_files_per_trigger,
         available_now=True,
     )
-    # awaitTermination returns False on timeout with the stream STILL
-    # RUNNING; retraining/compacting then is the exact between-runs
-    # race this module documents — the staged swap would silently drop
-    # vectors appended during the read-to-swap window (r15 advice).
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"index drain exceeded {timeout_s}s; stream stopped, "
-            "retrain/compaction skipped — re-run the cycle (drain is "
-            "checkpointed, so no progress is lost)"
-        )
+    await_drain(q, timeout_s, "index drain")
     if retrain_on_flag:
         latest = (
             retrain_flag(spark, index_path, min_mean_sim, max_top_share)
@@ -742,19 +709,7 @@ def run_pq_index_maintenance(
     with no source re-read) or ``manifest/`` (``manifest_source=...``;
     re-reads only the manifest-referenced source files, r17); without
     either, schedule the rebuild from the retained corpus yourself.
-    Same drain-timeout abort contract as the raw cycle."""
-    import os
-
-    if os.path.exists(_retrain_sentinel(index_path)):
-        raise RuntimeError(
-            f"index {index_path!r} is mid-retrain (sentinel present) — "
-            "a concurrent retrain is running or crashed mid-swap; "
-            "complete/clear it before resuming ingest"
-        )
-    from pg2kafka_spark.streaming.relay import scrub_virgin_checkpoint
-
-    # same virgin-checkpoint scrub as the raw cycle (see there).
-    scrub_virgin_checkpoint(spark, checkpoint_dir)
+    Same drain-timeout abort as the raw cycle (``relay.await_drain``)."""
     q = start_pq_index_ingest_stream(
         spark,
         incoming_dir,
@@ -768,13 +723,7 @@ def run_pq_index_maintenance(
         max_files_per_trigger=max_files_per_trigger,
         available_now=True,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"index drain exceeded {timeout_s}s; stream stopped, "
-            "retrain skipped — re-run the cycle (drain is "
-            "checkpointed, so no progress is lost)"
-        )
+    await_drain(q, timeout_s, "PQ index drain")
     if retrain_on_flag:
         latest = (
             retrain_flag(spark, index_path, min_mean_sim, max_top_share)

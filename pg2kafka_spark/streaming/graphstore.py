@@ -57,6 +57,11 @@ from pg2kafka_spark.operators.graph import (
     connected_components,
     incremental_components,
 )
+from pg2kafka_spark.streaming.relay import (
+    await_drain,
+    read_file_stream,
+    start_stream,
+)
 
 
 def _swap_sentinel(labels_dir: str) -> str:
@@ -159,12 +164,9 @@ def start_components_stream(
             "present) — clear the crashed fold before resuming ingest"
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    stream = reader.parquet(incoming_dir)
+    stream = read_file_stream(
+        spark, incoming_dir, schema, max_files_per_trigger
+    )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint()
@@ -182,14 +184,9 @@ def start_components_stream(
             n_partitions,
         )
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_stream(
+        stream, _process, checkpoint_dir, available_now, "10 seconds"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()
 
 
 def run_components_maintenance(
@@ -212,21 +209,14 @@ def run_components_maintenance(
     ``run_retention_maintenance``: drain the candidate-pair backlog
     with an availableNow run of :func:`start_components_stream`, with
     the same drain-timeout contract (stop + raise, never proceed over
-    a still-running drain). Unlike the other three loops there is NO
-    post-drain compaction or retrain step: the state is a REPLACED
-    fold, not a log — every micro-batch already rewrites the label
-    table to its compacted form, so the cycle is drain-only. The
-    mid-swap sentinel check lives in ``start_components_stream``; a
-    timeout leaves the checkpoint intact, so re-running the cycle
-    resumes the drain with no progress lost (the fold is
-    idempotent)."""
-    from pg2kafka_spark.streaming.relay import scrub_virgin_checkpoint
-
-    # a prior cycle's stop/crash can interrupt the FIRST offset write,
-    # leaving an orphan .tmp that Spark 4.x refuses to restart over
-    # (STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY) — scrub it; a no-op
-    # the moment any offset has committed.
-    scrub_virgin_checkpoint(spark, checkpoint_dir)
+    a still-running drain, ``relay.await_drain``). Unlike the other
+    three loops there is NO post-drain compaction or retrain step: the
+    state is a REPLACED fold, not a log — every micro-batch already
+    rewrites the label table to its compacted form, so the cycle is
+    drain-only. The mid-swap sentinel check lives in
+    ``start_components_stream``; a timeout leaves the checkpoint
+    intact, so re-running the cycle resumes the drain with no progress
+    lost (the fold is idempotent)."""
     q = start_components_stream(
         spark,
         incoming_dir,
@@ -242,14 +232,4 @@ def run_components_maintenance(
         available_now=True,
         n_partitions=n_partitions,
     )
-    # awaitTermination returns False on timeout with the stream STILL
-    # RUNNING; returning then would let a caller read/serve labels
-    # while folds continue behind its back — the between-runs race
-    # discipline of the other maintained-state loops.
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"label-store drain exceeded {timeout_s}s; stream stopped "
-            "— re-run the cycle (drain is checkpointed and the fold "
-            "is idempotent, so no progress is lost)"
-        )
+    await_drain(q, timeout_s, "label-store drain")

@@ -48,6 +48,7 @@ from pg2kafka_spark.operators.dedup import (
     incremental_near_dup,
 )
 from pg2kafka_spark.operators.text import fingerprint
+from pg2kafka_spark.streaming.relay import read_file_stream, start_stream
 
 
 def _store_or_empty(
@@ -244,10 +245,9 @@ def start_ingest_stream(
     store docs permanently invisible to near-dup discovery."""
     if band_table is not None and band_dir is None:
         raise ValueError("band_table requires band_dir (external location)")
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(incoming_dir)
+    stream = read_file_stream(
+        spark, incoming_dir, schema, max_files_per_trigger
+    )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint()  # sever the source lineage
@@ -320,11 +320,6 @@ def start_ingest_stream(
         else:
             keep.write.mode("append").parquet(store_dir)
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_stream(
+        stream, _process, checkpoint_dir, available_now, "10 seconds"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()

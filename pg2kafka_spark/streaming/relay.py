@@ -38,6 +38,11 @@ floor (1 MB by default) skips that shuffle: it is read and sorted as
 one task, the shape AQE would have coalesced the shuffle into anyway.
 Above the floor, ``spark.sql.shuffle.partitions`` sizes the keyed
 exchange.
+
+The relay and every maintained-state loop start their streams here:
+:func:`read_file_stream`, :func:`start_stream` (which first scrubs a
+checkpoint with no committed progress, so a kill during the first
+offset write never blocks the restart) and :func:`await_drain`.
 """
 
 from __future__ import annotations
@@ -80,6 +85,20 @@ def bootstrap_outbox(
     events.write.mode("append").parquet(outbox_dir)
 
 
+def read_file_stream(
+    spark: SparkSession,
+    path: str,
+    schema,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Parquet files landing under ``path`` as a stream of ``schema``
+    rows; ``max_files_per_trigger`` bounds each micro-batch."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
+    return reader.parquet(path)
+
+
 def read_event_stream(
     spark: SparkSession,
     outbox_dir: str,
@@ -93,10 +112,47 @@ def read_event_stream(
     ``max_files_per_trigger`` bounds each micro-batch like the
     reference's ``LIMIT 1000`` page bounds a drain iteration.
     """
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(outbox_dir)
+    return read_file_stream(spark, outbox_dir, EVENT_SCHEMA, max_files_per_trigger)
+
+
+def start_stream(
+    stream: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str | None,
+    available_now: bool = False,
+    processing_time: str | None = None,
+    query_name: str | None = None,
+) -> StreamingQuery:
+    """Run ``process`` on every micro-batch of ``stream``, after
+    :func:`scrub_virgin_checkpoint` on ``checkpoint_dir``.
+    ``available_now`` drains what is present and stops; otherwise the
+    query runs until stopped, every ``processing_time`` if given."""
+    if checkpoint_dir is not None:
+        scrub_virgin_checkpoint(stream.sparkSession, checkpoint_dir)
+    writer = stream.writeStream.foreachBatch(process)
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time is not None:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
+def await_drain(query: StreamingQuery, timeout_s: float, what: str) -> None:
+    """Wait up to ``timeout_s`` for an availableNow ``query``; past it,
+    stop the query and raise ``TimeoutError``. A maintenance cycle must
+    not compact, retrain or serve over a still-running drain: a staged
+    swap drops the rows appended in its read-to-swap window."""
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise TimeoutError(
+            f"{what} exceeded {timeout_s}s; stream stopped and the rest "
+            "of the cycle skipped — re-run the cycle (the drain is "
+            "checkpointed, so no progress is lost)"
+        )
 
 
 def start_relay(
@@ -144,6 +200,8 @@ def start_relay(
 
     ``available_now=True`` = drain-the-backlog-then-stop (O19's start
     phase); a ``processing_time`` trigger = the steady-state loop.
+    :func:`start_stream` scrubs a ``checkpoint_dir`` with no committed
+    progress (a kill during the first offset write) before the start.
 
     ``ordered`` accepts only ``True``: it stays because perfbench still
     passes ``ordered=True``, and goes with perfbench's next change.
@@ -164,35 +222,34 @@ def start_relay(
             return
         wire.write.format(sink).options(**(kafka_options or {})).save()
 
-    writer = events.writeStream.queryName(query_name)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.foreachBatch(_deliver).start()
+    return start_stream(
+        events, _deliver, checkpoint_dir, available_now, processing_time, query_name
+    )
 
 
 def scrub_virgin_checkpoint(spark: SparkSession, checkpoint_dir: str) -> int:
     """Remove orphan metadata-log temp files from a checkpoint that has
     made NO committed progress; returns how many files were removed.
+    :func:`start_stream` runs it before every query start.
 
-    The maintained-state loops' drain-timeout contract is "stop + raise,
-    re-run the cycle" — but a ``q.stop()`` (or crash) that interrupts the
-    very FIRST offset write leaves only a ``.0.<uuid>.tmp`` behind in
-    ``<checkpoint>/offsets``: the batch never committed, yet Spark 4.x's
-    restart validation (MicroBatchExecution.verifyNewCheckpointDirectory)
-    sees a non-empty directory for what the empty offset log says is a
-    NEW checkpoint and refuses to start with
-    [STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY], breaking the re-run.
+    A ``q.stop()`` (a maintenance cycle's drain timeout) or a kill that
+    interrupts the very FIRST offset write leaves only a
+    ``.0.<uuid>.tmp`` behind in ``<checkpoint>/offsets``: the batch
+    never committed, yet Spark 4.x's restart validation
+    (MicroBatchExecution.verifyNewCheckpointDirectory) sees a non-empty
+    directory for what the empty offset log says is a NEW checkpoint
+    and refuses to start with
+    [STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY], breaking the restart.
     Temp files are never progress (HDFSMetadataLog publishes entries by
     atomic rename), and the scrub refuses to touch a checkpoint holding
     ANY committed offset entry, so real resume state is unreachable by
     construction. Goes through the Hadoop FileSystem of the checkpoint
-    path, so non-local checkpoint schemes behave the same.
+    path, so non-local checkpoint schemes behave the same; a session
+    without a JVM handle (Spark Connect) skips the scrub.
     """
-    jvm = spark._jvm
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is None:
+        return 0
     hadoop_path = jvm.org.apache.hadoop.fs.Path
     root = hadoop_path(checkpoint_dir)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())

@@ -63,6 +63,11 @@ from pg2kafka_spark.operators.retention import (
     retention_day_partial,
 )
 from pg2kafka_spark.streaming.ingest import _store_or_empty
+from pg2kafka_spark.streaming.relay import (
+    await_drain,
+    read_file_stream,
+    start_stream,
+)
 
 
 def _to_micros(df: DataFrame, ts_col: str) -> tuple[DataFrame, str]:
@@ -173,12 +178,9 @@ def start_retention_sketch_stream(
     AND events. Serve with
     ``operators/retention.retention_from_sketches`` over the sketches
     table."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    stream = reader.parquet(incoming_dir)
+    stream = read_file_stream(
+        spark, incoming_dir, schema, max_files_per_trigger
+    )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint()
@@ -203,14 +205,9 @@ def start_retention_sketch_stream(
             "append"
         ).parquet(sketches_dir)
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_stream(
+        stream, _process, checkpoint_dir, available_now, "10 seconds"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()
 
 
 def compact_sketches(
@@ -304,12 +301,9 @@ def start_retention_stream(
     drains the backlog then stops (the nightly-job mode);
     ``max_files_per_trigger`` bounds batch size, same knob as the
     ingest stream's."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    stream = reader.parquet(incoming_dir)
+    stream = read_file_stream(
+        spark, incoming_dir, schema, max_files_per_trigger
+    )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint()  # sever the source lineage
@@ -336,14 +330,9 @@ def start_retention_stream(
             "append"
         ).partitionBy("cohort_day").parquet(partials_dir)
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_stream(
+        stream, _process, checkpoint_dir, available_now, "10 seconds"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()
 
 
 def run_retention_maintenance(
@@ -365,16 +354,11 @@ def run_retention_maintenance(
     precondition — fold the candidates table. This is the loop that
     actually schedules the compaction the module docstring prescribes;
     call it per night/backfill window. Idempotent end to end: the
-    drain is checkpointed, the compaction value-preserving."""
+    drain is checkpointed, the compaction value-preserving. A drain
+    that outlives ``timeout_s`` is stopped and raises ``TimeoutError``
+    with the compaction skipped (``relay.await_drain``)."""
     import os
 
-    from pg2kafka_spark.streaming.relay import scrub_virgin_checkpoint
-
-    # a prior cycle's stop/crash can interrupt the FIRST offset write,
-    # leaving an orphan .tmp that Spark 4.x refuses to restart over
-    # (STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY) — scrub it; a no-op
-    # the moment any offset has committed.
-    scrub_virgin_checkpoint(spark, checkpoint_dir)
     q = start_retention_stream(
         spark,
         incoming_dir,
@@ -387,17 +371,6 @@ def run_retention_maintenance(
         max_files_per_trigger=max_files_per_trigger,
         available_now=True,
     )
-    # awaitTermination returns False on timeout with the stream STILL
-    # RUNNING; compacting then would race appends (the between-runs
-    # precondition compact_first_seen documents) and the staged swap
-    # would drop rows landed during the read-to-swap window. Stop the
-    # stream and refuse the compaction for this cycle (r15 advice).
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"retention drain exceeded {timeout_s}s; stream stopped, "
-            "compaction skipped — re-run the cycle (drain is "
-            "checkpointed, so no progress is lost)"
-        )
+    await_drain(q, timeout_s, "retention drain")
     if compact and os.path.isdir(first_seen_dir):
         compact_first_seen(spark, first_seen_dir, user_col)

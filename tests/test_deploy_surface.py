@@ -113,6 +113,73 @@ def test_daemon_rejects_bad_trigger(spark, tmp_path, capsys, trigger):
     assert not (tmp_path / "ckpt").exists()
 
 
+def test_daemon_restarts_over_orphan_first_offset(spark, tmp_path):
+    """A daemon killed during its very first offset write leaves only
+    ``offsets/.0.<uuid>.tmp`` in the checkpoint; the RELAY_ONCE
+    restart drains over it and exits 0."""
+    outbox = str(tmp_path / "outbox")
+    ckpt = tmp_path / "ckpt"
+    bootstrap_outbox(spark.createDataFrame([Row(uid="u1", name="a")]), outbox, "users", "uid")
+    (ckpt / "offsets").mkdir(parents=True)
+    (ckpt / "offsets" / ".0.6ba7b810-9dad-11d1-80b4-00c04fd430c8.tmp").touch()
+    rc = daemon.main(
+        {
+            "OUTBOX_DIR": outbox,
+            "DRY_RUN": "true",
+            "RELAY_ONCE": "true",
+            "CHECKPOINT_DIR": str(ckpt),
+        }
+    )
+    assert rc == 0
+    assert (ckpt / "commits" / "0").exists()
+
+
+def test_daemon_rejects_missing_outbox(spark, tmp_path, capsys):
+    """An OUTBOX_DIR the file source cannot find is a config error:
+    exit 2 with a message naming the variable, not an
+    AnalysisException traceback out of the stream read."""
+    rc = daemon.main(
+        {
+            "OUTBOX_DIR": str(tmp_path / "missing"),
+            "RELAY_ONCE": "true",
+            "CHECKPOINT_DIR": str(tmp_path / "ckpt"),
+        }
+    )
+    assert rc == 2
+    err = capsys.readouterr().err
+    assert "OUTBOX_DIR" in err
+    assert "Traceback" not in err
+    assert not (tmp_path / "ckpt").exists()
+
+
+def test_streaming_modules_share_one_stream_runner():
+    """Only streaming/relay.py builds, starts or awaits a stream: every
+    maintained-state loop goes through its read_file_stream /
+    start_stream / await_drain, and the checkpoint scrub is called in
+    one place in the package (inside start_stream)."""
+    import re
+    from pathlib import Path
+
+    import pg2kafka_spark
+
+    package = Path(pg2kafka_spark.__file__).parent
+    needles = ("readStream", "writeStream", "awaitTermination(", "raise TimeoutError", "scrub_virgin_checkpoint(")
+    offenders = [
+        (path.name, n)
+        for path in sorted((package / "streaming").glob("*.py"))
+        if path.name != "relay.py"
+        for n in needles
+        if n in path.read_text()
+    ]
+    assert not offenders
+    calls = [
+        path.name
+        for path in sorted(package.rglob("*.py"))
+        for _ in re.finditer(r"(?<!def )\bscrub_virgin_checkpoint\(", path.read_text())
+    ]
+    assert calls == ["relay.py"]
+
+
 def test_make_recipes_name_existing_files():
     """Every script a Makefile recipe runs (tools/…, tests/…, bench.py,
     perfbench/…) exists, so deleting a file cannot leave a target

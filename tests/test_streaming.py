@@ -1985,3 +1985,58 @@ def test_scrub_virgin_checkpoint_semantics(spark, tmp_path):
     assert scrub_virgin_checkpoint(spark, ckpt) == 0
     assert os.path.exists(t1)
     assert os.path.exists(os.path.join(off, "0"))
+
+
+def _orphan_first_offset(ckpt):
+    """The checkpoint a kill during the very first offset write leaves:
+    ``offsets/`` holding one temp file and no committed entry."""
+    import os
+
+    os.makedirs(os.path.join(ckpt, "offsets"))
+    with open(
+        os.path.join(ckpt, "offsets", ".0.6ba7b810-9dad-11d1-80b4-00c04fd430c8.tmp"), "w"
+    ):
+        pass
+
+
+def test_relay_restarts_over_orphan_first_offset(spark, outbox, tmp_path):
+    """The relay restarts over a checkpoint whose first offset write was
+    interrupted: start_relay scrubs the zero-progress temp file at start
+    and delivers the event, instead of the query failing with
+    STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY."""
+    _write_events(spark, [_event(1, "users", "INSERT", '{"uid":1}', key="1")], outbox)
+    ckpt = str(tmp_path / "ckpt")
+    _orphan_first_offset(ckpt)
+    got = []
+    q = start_relay(
+        read_event_stream(spark, outbox),
+        database="testdb",
+        checkpoint_dir=ckpt,
+        available_now=True,
+        foreach_batch=lambda df, _e: got.extend(r.key for r in df.collect()),
+    )
+    assert q.awaitTermination(120)
+    assert got == ["1"]
+
+
+def test_scrub_skips_session_without_jvm(tmp_path):
+    """A session without a JVM handle (Spark Connect raises
+    JVM_ATTRIBUTE_NOT_SUPPORTED for ``_jvm``) skips the scrub: the
+    stream start goes on, and the checkpoint is left untouched."""
+    import os
+
+    from pyspark.errors import PySparkAttributeError
+
+    from pg2kafka_spark.streaming.relay import scrub_virgin_checkpoint
+
+    class NoJvmSession:
+        def __getattr__(self, name):
+            raise PySparkAttributeError(
+                errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+                messageParameters={"attr_name": name},
+            )
+
+    ckpt = str(tmp_path / "ckpt")
+    _orphan_first_offset(ckpt)
+    assert scrub_virgin_checkpoint(NoJvmSession(), ckpt) == 0
+    assert len(os.listdir(os.path.join(ckpt, "offsets"))) == 1

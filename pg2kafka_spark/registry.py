@@ -50,15 +50,3 @@ class Registry:
     def as_dict(self) -> dict[str, str]:
         return dict(self._mapping)
 
-
-#: Default registry for the synthetic test tables (FIXTURES.md §B).
-def default_registry() -> Registry:
-    return Registry(
-        {
-            "events": "user_id",
-            "orders": "o_orderkey",
-            "customer": "c_custkey",
-            "part": "p_partkey",
-            "documents": "doc_id",
-        }
-    )

@@ -8,8 +8,6 @@ is visible and testable without a live server:
 * Postgres  → ``spark.read.jdbc`` with range partitioning (a snapshot
   scan O1 at scale must split: one JDBC cursor is the reference's
   single-threaded loop all over again);
-* Kafka in  → ``readStream.format("kafka")`` (the outbox topic as the
-  change feed);
 * Kafka out → producer options mirroring the reference's config map:
   snappy compression and the Java-compatible murmur2 default
   partitioner (main.go:190-195) so key placement matches what a
@@ -22,8 +20,6 @@ Nothing here imports a driver: JDBC/Kafka jars are deploy-time
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from pg2kafka_spark.event import EVENT_SCHEMA
 
 
 def read_postgres_table(
@@ -62,34 +58,6 @@ def read_postgres_table(
     return reader.load()
 
 
-def read_kafka_event_stream(
-    spark: SparkSession,
-    brokers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """O2 change source over Kafka: value holds the JSON event
-    envelope; parse to the canonical schema. ``maxOffsetsPerTrigger``
-    is the page-size analog (O12)."""
-    from pyspark.sql import functions as F
-
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    raw = reader.load()
-    parsed = F.from_json(
-        F.col("value").cast("string"),
-        EVENT_SCHEMA,
-    )
-    return raw.select(parsed.alias("e")).select("e.*")
-
-
 def kafka_sink_options(brokers: str) -> dict[str, str]:
     """O17 producer config, mirroring main.go:179-201: snappy
     compression, acks from all replicas, and ordering under retries via
@@ -109,7 +77,6 @@ def kafka_sink_options(brokers: str) -> dict[str, str]:
 
 __all__ = [
     "read_postgres_table",
-    "read_kafka_event_stream",
     "kafka_sink_options",
     "read_jsonl",
     "read_csv",

@@ -62,7 +62,9 @@ and serving absorbs them with a (query, id) max-aggregate before
 ranking (``load_ivf_topk(absorb_duplicates=True)`` — value-identical
 when no replay happened, one partial-aggregated exchange when it
 did). Same consumer-dedups convention as the wire events and the
-retention partials.
+retention partials. Retrains and ``compact_cells`` replace
+directories through ``swap.swap_in`` under a ``<path>.__retraining__``
+sentinel, which both ingest loops refuse.
 
 Scale notes: per-batch cost is O(batch × n_centroids) rounded
 cosines + one cid-partitioned append — independent of index size.
@@ -82,6 +84,7 @@ from pg2kafka_spark.streaming.relay import (
     read_file_stream,
     start_stream,
 )
+from pg2kafka_spark.streaming.swap import refuse_mid_swap, swap_in
 
 
 def _manifest_read_path(p: str) -> str:
@@ -196,12 +199,14 @@ def start_pq_index_ingest_stream(
     vector at rest instead of ``dim × 8`` bytes but requiring the
     landing files to be durably retained — or retain the source
     corpus and rebuild from it when ``retrain_flag`` fires, behind
-    the same sentinel swap. The raw side store costs the full bytes
+    the same ``swap_in``. The raw side store costs the full bytes
     the codes avoided; both side stores are cold storage only retrain
     reads (the serve path never touches them)."""
     import os
 
-    _refuse_mid_retrain(index_path)
+    refuse_mid_swap(
+        _retrain_sentinel(index_path), f"index {index_path!r}", "mid-retrain"
+    )
     coarse = spark.read.parquet(f"{index_path}/centroids")
     books = spark.read.parquet(f"{index_path}/codebooks")
     keep_raw = os.path.isdir(f"{index_path}/raw")
@@ -290,7 +295,9 @@ def start_index_ingest_stream(
     ``save_ivf_index`` — the nightly bootstrap); this loop only
     accretes. ``available_now=True`` drains the backlog then stops
     (the nightly-job mode)."""
-    _refuse_mid_retrain(index_path)
+    refuse_mid_swap(
+        _retrain_sentinel(index_path), f"index {index_path!r}", "mid-retrain"
+    )
     cents = spark.read.parquet(f"{index_path}/centroids")
 
     stream = read_file_stream(
@@ -325,19 +332,6 @@ def _retrain_sentinel(index_path: str) -> str:
     return index_path.rstrip("/") + ".__retraining__"
 
 
-def _refuse_mid_retrain(index_path: str) -> None:
-    """Raise when a retrain's sentinel is on disk: ingest must not
-    accrete to (and a cycle must not serve) a half-swapped index."""
-    import os
-
-    if os.path.exists(_retrain_sentinel(index_path)):
-        raise RuntimeError(
-            f"index {index_path!r} is mid-retrain (sentinel present) — "
-            "a concurrent retrain is running or crashed mid-swap; "
-            "complete/clear it before resuming ingest"
-        )
-
-
 def compact_cells(
     spark: SparkSession, index_path: str, id_col: str = "vec_id"
 ) -> None:
@@ -347,26 +341,15 @@ def compact_cells(
     merge the per-batch small files each cid directory accumulates —
     the partitioned-layout maintenance every accreting store needs,
     WITHOUT touching the quantizer (cid values unchanged; serving
-    needs no ``absorb_duplicates`` until the next replay). Same
-    between-runs + sentinel contract as ``retrain_index``: the swap
-    reuses the retrain sentinel so ingest and maintenance refuse to
-    race it."""
-    import os
-    import shutil
-
-    cells = spark.read.parquet(f"{index_path}/cells")
-    folded = cells.dropDuplicates([id_col])
+    needs no ``absorb_duplicates`` until the next replay). Run it
+    between stream runs, like ``retrain_index``: ``swap.swap_in``
+    runs under the retrain sentinel, so ingest and maintenance refuse
+    to race it."""
     cells_dir = f"{index_path}/cells"
+    folded = spark.read.parquet(cells_dir).dropDuplicates([id_col])
     staging = cells_dir + ".__compact__"
     folded.write.mode("overwrite").partitionBy("cid").parquet(staging)
-    sentinel = _retrain_sentinel(index_path)
-    with open(sentinel, "w"):
-        pass
-    old = cells_dir + ".__old__"
-    os.rename(cells_dir, old)
-    os.rename(staging, cells_dir)
-    os.remove(sentinel)
-    shutil.rmtree(old)
+    swap_in(staging, cells_dir, _retrain_sentinel(index_path))
 
 
 def retrain_index(
@@ -387,12 +370,12 @@ def retrain_index(
     retrained index serves the same answers as an index bootstrapped
     on everything — pinned by tests.
 
-    Run it BETWEEN stream runs, like ``compact_first_seen``: the
-    directory swap is sentinel-bracketed, and both the ingest loop
-    and a crashed-mid-swap state fail loudly rather than accrete to
-    or serve a half-swapped index. The drift log is RESET (its rows
-    scored the old quantizer) — reset to an EMPTY directory, not a
-    missing one, so the next cycle's ``retrain_flag`` read succeeds.
+    Run it BETWEEN stream runs, like ``compact_first_seen``: the new
+    layout goes in through ``swap.swap_in`` under the retrain
+    sentinel, which the ingest loop refuses. The drift log is RESET
+    (its rows scored the old quantizer) — reset to an EMPTY
+    directory, not a missing one, so the next cycle's
+    ``retrain_flag`` read succeeds.
 
     ``n_centroids``/``dim`` default to the EXISTING index's geometry
     (centroid count / centroid vector length read from the centroids
@@ -400,7 +383,6 @@ def retrain_index(
     non-default index (r15 advice); pass them only to deliberately
     re-size."""
     import os
-    import shutil
 
     from pg2kafka_spark.operators.index_store import save_ivf_index
 
@@ -427,20 +409,8 @@ def retrain_index(
         vec_col="vec",
         train_sample=train_sample,
     )
-    old = index_path.rstrip("/") + ".__old__"
-    # A crash between the sentinel removal and the old-dir rmtree of a
-    # PRIOR retrain leaves a stale __old__; clear it before writing
-    # the sentinel so the rename below can't fail ENOTEMPTY and wedge
-    # the store mid-swap.
-    shutil.rmtree(old, ignore_errors=True)
-    sentinel = _retrain_sentinel(index_path)
-    with open(sentinel, "w"):
-        pass
-    os.rename(index_path, old)
-    os.rename(staging, index_path)
-    os.makedirs(f"{index_path}/drift", exist_ok=True)
-    os.remove(sentinel)
-    shutil.rmtree(old)
+    os.makedirs(f"{staging}/drift", exist_ok=True)
+    swap_in(staging, index_path, _retrain_sentinel(index_path))
 
 
 def retrain_pq_index(
@@ -474,13 +444,11 @@ def retrain_pq_index(
     names the embedding column IN THE SOURCE FILES (manifest mode
     only; the raw store always stores ``vec``).
 
-    Same between-runs + sentinel-bracketed swap contract as
-    ``retrain_index``; drift log reset to empty. Raises if the index
-    has neither side store — rebuild from the retained source corpus
-    instead (the storage-for-independence trade the module header
-    documents)."""
+    Same between-runs ``swap_in`` as ``retrain_index``; drift log
+    reset to empty. Raises if the index has neither side store —
+    rebuild from the retained source corpus instead (the
+    storage-for-independence trade the module header documents)."""
     import os
-    import shutil
 
     from pg2kafka_spark.operators.index_store import save_ivf_pq_index
 
@@ -601,19 +569,8 @@ def retrain_pq_index(
         # is equally self-contained (and replay duplicates are folded
         # at rest, not just at read time)
         manifest.write.mode("overwrite").parquet(f"{staging}/manifest")
-    old = index_path.rstrip("/") + ".__old__"
-    # Same stale-__old__ guard as retrain_index: a crash after a prior
-    # retrain's sentinel removal leaves __old__ behind; clear it before
-    # this swap's sentinel so the rename can't wedge ENOTEMPTY.
-    shutil.rmtree(old, ignore_errors=True)
-    sentinel = _retrain_sentinel(index_path)
-    with open(sentinel, "w"):
-        pass
-    os.rename(index_path, old)
-    os.rename(staging, index_path)
-    os.makedirs(f"{index_path}/drift", exist_ok=True)
-    os.remove(sentinel)
-    shutil.rmtree(old)
+    os.makedirs(f"{staging}/drift", exist_ok=True)
+    swap_in(staging, index_path, _retrain_sentinel(index_path))
 
 
 def run_index_maintenance(

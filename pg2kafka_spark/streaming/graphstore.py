@@ -14,26 +14,26 @@ downstream always reads a label table that is current to the last
 drained batch, and the historical pair log is never re-read.
 
 State under ``labels_dir``: one ``(node, component_id)`` parquet
-table — REPLACED per micro-batch by a staged, sentinel-bracketed
-directory swap. Unlike the other three stores this state is a FOLD,
-not a log: yesterday's labels are a connectivity-exact compression of
-every pair ever ingested (star edges node→component_id), which is
-exactly why the fold's cost tracks |V| + |batch| and never the pair
-history (measured: tools/graph_stress.py — warm fold flat while the
-cold rebuild grows with history).
+table — REPLACED per micro-batch through ``swap.swap_in`` under a
+``<labels_dir>.__swap__`` sentinel. Unlike the other three stores
+this state is a FOLD, not a log: yesterday's labels are a
+connectivity-exact compression of every pair ever ingested (star
+edges node→component_id), which is exactly why the fold's cost tracks
+|V| + |batch| and never the pair history (measured:
+tools/graph_stress.py — warm fold flat while the cold rebuild grows
+with history).
 
 Crash contract (at-least-once, never loss, same discipline as the
 other loops): the fold is IDEMPOTENT — re-folding an already-folded
 batch over the post-fold labels is a no-op (the labels' star edges
 already connect everything the batch connected, and min-labels are
 stable) — so a replay after a crash-before-checkpoint converges to
-the identical fixpoint. A crash INSIDE the swap bracket leaves the
-sentinel on disk; the next batch (and any reader using
-``_labels_or_empty``) fails loudly instead of folding against a
-missing or half-swapped table — the retention compaction's r14
-convention. Either directory state behind the sentinel is
-value-complete (old = pre-fold, staging = post-fold; re-running the
-batch from the checkpoint reproduces post-fold from either).
+the identical fixpoint. A crash INSIDE the swap leaves the sentinel
+on disk; the next batch (and any reader using ``_labels_or_empty``)
+fails loudly instead of folding against a missing or half-swapped
+table. Either directory state behind the sentinel is value-complete
+(old = pre-fold, staging = post-fold; re-running the batch from the
+checkpoint reproduces post-fold from either).
 
 Scale notes: the per-batch fold is the measured graph_stress shape —
 |V| star edges + |batch| pairs through min-label propagation, rounds
@@ -49,7 +49,6 @@ surface (SURVEY.md §7), closing the maintained-state pattern over it.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -62,6 +61,7 @@ from pg2kafka_spark.streaming.relay import (
     read_file_stream,
     start_stream,
 )
+from pg2kafka_spark.streaming.swap import refuse_mid_swap, swap_in
 
 
 def _swap_sentinel(labels_dir: str) -> str:
@@ -75,13 +75,9 @@ def _labels_or_empty(
     RAISES if a swap sentinel is present — a missing/half-swapped
     table must never be read as 'no labels yet' (that would silently
     fork every historical cluster on the next fold)."""
-    if os.path.exists(_swap_sentinel(labels_dir)):
-        raise RuntimeError(
-            f"label store {labels_dir!r} is mid-swap (sentinel "
-            "present) — a fold crashed inside the swap bracket; "
-            "re-run the stream from its checkpoint (the fold is "
-            "idempotent) after re-pointing the directory"
-        )
+    refuse_mid_swap(
+        _swap_sentinel(labels_dir), f"label store {labels_dir!r}", "mid-swap"
+    )
     if not os.path.isdir(labels_dir):
         return None
     return spark.read.parquet(labels_dir)
@@ -99,7 +95,7 @@ def fold_pairs_batch(
     n_partitions: int | None = None,
 ) -> None:
     """Fold ONE batch of candidate pairs into the at-rest label table
-    (staged, sentinel-bracketed swap). This is the unit of work the
+    (staged, then ``swap_in``). This is the unit of work the
     stream runs per micro-batch; callable directly for a scheduled
     batch job. Idempotent: re-folding the same pairs is a no-op.
     ``n_partitions`` sizes the swap write (hash on the node id) — the
@@ -120,21 +116,7 @@ def fold_pairs_batch(
         )
     staging = labels_dir.rstrip("/") + ".__fold__"
     new_labels.write.mode("overwrite").parquet(staging)
-    old = labels_dir.rstrip("/") + ".__old__"
-    # A crash after the sentinel removal but before the old-dir rmtree
-    # leaves a value-complete-but-stale __old__ behind; clearing it
-    # BEFORE writing the sentinel keeps the rename below from failing
-    # ENOTEMPTY and wedging the store mid-swap.
-    shutil.rmtree(old, ignore_errors=True)
-    sentinel = _swap_sentinel(labels_dir)
-    with open(sentinel, "w"):
-        pass
-    if os.path.isdir(labels_dir):
-        os.rename(labels_dir, old)
-    os.rename(staging, labels_dir)
-    os.remove(sentinel)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    swap_in(staging, labels_dir, _swap_sentinel(labels_dir))
 
 
 def start_components_stream(
@@ -158,11 +140,9 @@ def start_components_stream(
     processingTime for a live tail — same knobs as the other loops.
     ``n_partitions`` threads through to the fold's swap write (hash
     on the node id) — the at-scale knob the module header names."""
-    if os.path.exists(_swap_sentinel(labels_dir)):
-        raise RuntimeError(
-            f"label store {labels_dir!r} is mid-swap (sentinel "
-            "present) — clear the crashed fold before resuming ingest"
-        )
+    refuse_mid_swap(
+        _swap_sentinel(labels_dir), f"label store {labels_dir!r}", "mid-swap"
+    )
 
     stream = read_file_stream(
         spark, incoming_dir, schema, max_files_per_trigger

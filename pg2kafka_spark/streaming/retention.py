@@ -50,7 +50,9 @@ join); the partials append is ≤2 rows per active user per batch
 cohort_day (r15) so cohort-windowed triangle queries prune at the
 scan, and ``run_retention_maintenance`` schedules the candidates
 compaction between availableNow drains; neither changes the contract
-above.
+above. Both compactions (``compact_first_seen``, ``compact_sketches``)
+replace their table through ``swap.swap_in`` under a
+``<dir>.__compacting__`` sentinel, which the streams refuse.
 """
 
 from __future__ import annotations
@@ -68,6 +70,7 @@ from pg2kafka_spark.streaming.relay import (
     read_file_stream,
     start_stream,
 )
+from pg2kafka_spark.streaming.swap import refuse_mid_swap, swap_in
 
 
 def _to_micros(df: DataFrame, ts_col: str) -> tuple[DataFrame, str]:
@@ -92,15 +95,11 @@ def _candidates_or_empty(
     compute wrong first-seen values (wrong cohorts) silently. The
     failed micro-batch stays uncommitted in the checkpoint, so fixing
     the sentinel and restarting replays it losslessly."""
-    import os
-
-    if os.path.exists(_compaction_sentinel(first_seen_dir)):
-        raise RuntimeError(
-            f"candidates table {first_seen_dir!r} is mid-compaction "
-            "(sentinel present) — a concurrent compact_first_seen is "
-            "running or crashed mid-swap; complete/clear it before "
-            "resuming the retention stream"
-        )
+    refuse_mid_swap(
+        _compaction_sentinel(first_seen_dir),
+        f"candidates table {first_seen_dir!r}",
+        "mid-compaction",
+    )
     return _store_or_empty(spark, first_seen_dir, like)
 
 
@@ -195,6 +194,11 @@ def start_retention_sketch_stream(
         cands = _candidates_or_empty(
             sess, first_seen_dir, sess.createDataFrame([], like)
         )
+        refuse_mid_swap(
+            _compaction_sentinel(sketches_dir),
+            f"sketch table {sketches_dir!r}",
+            "mid-compaction",
+        )
         day_min, sketches = retention_maintain_batch_sketch(
             batch_df, cands, user_col, ts_col, lg_k
         )
@@ -217,12 +221,10 @@ def compact_sketches(
     (cohort_day, week_offset) cell — HLL union is associative, so
     pre-merging batches preserves every serve estimate bit-for-bit
     while capping the table at O(cells) rows no matter how many
-    batches accreted. Same between-runs + staged-swap contract as
-    ``compact_first_seen`` (folded batch_id = -1 marks pre-merged
-    rows)."""
-    import os
-    import shutil
-
+    batches accreted. Same between-runs ``swap_in`` as
+    ``compact_first_seen``, under a ``<sketches_dir>.__compacting__``
+    sentinel the sketch stream refuses (folded batch_id = -1 marks
+    pre-merged rows)."""
     df = spark.read.parquet(sketches_dir)
     folded = (
         df.groupBy("cohort_day", "week_offset")
@@ -231,15 +233,7 @@ def compact_sketches(
     )
     staging = sketches_dir.rstrip("/") + ".__compact__"
     folded.write.mode("overwrite").parquet(staging)
-    old = sketches_dir.rstrip("/") + ".__old__"
-    # clear a stale __old__ left by a crash after a prior swap's
-    # renames but before its rmtree — the rename below would
-    # otherwise fail ENOTEMPTY and wedge the store (r17, same guard
-    # as the graphstore fold and the annindex retrains)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(sketches_dir, old)
-    os.rename(staging, sketches_dir)
-    shutil.rmtree(old)
+    swap_in(staging, sketches_dir, _compaction_sentinel(sketches_dir))
 
 
 def compact_first_seen(
@@ -252,35 +246,16 @@ def compact_first_seen(
     landing inside the read→swap window would be dropped by the
     directory swap.
 
-    The swap leaves a window where ``first_seen_dir`` does not exist;
-    a sentinel file brackets it so a reader racing the compaction
-    RAISES (``_candidates_or_empty``) instead of mapping the missing
-    path to an empty store — the silent-wrong-cohorts failure the r14
-    advice named. A crash inside the bracket leaves the sentinel on
-    disk plus either the old or the new table; the next micro-batch
-    fails loudly and the operator clears the sentinel after
-    re-pointing the directory (both table states are value-identical,
-    so either rename completes the compaction)."""
-    import os
-    import shutil
-
+    The fold goes in through ``swap.swap_in``, whose sentinel makes a
+    reader racing the compaction RAISE (``_candidates_or_empty``)
+    instead of mapping the missing path to an empty store — silently
+    wrong cohorts. Both table states behind a stranded sentinel are
+    value-identical, so either rename completes the compaction."""
     df = spark.read.parquet(first_seen_dir)
     folded = df.groupBy(user_col).agg(F.min("f_us").alias("f_us"))
     staging = first_seen_dir.rstrip("/") + ".__compact__"
     folded.write.mode("overwrite").parquet(staging)
-    old = first_seen_dir.rstrip("/") + ".__old__"
-    # clear a stale __old__ left by a crash between a prior swap's
-    # sentinel removal and its rmtree — BEFORE this swap's sentinel,
-    # so the rename can't fail ENOTEMPTY with the sentinel stranded
-    # (r17, same guard as the graphstore fold and annindex retrains)
-    shutil.rmtree(old, ignore_errors=True)
-    sentinel = _compaction_sentinel(first_seen_dir)
-    with open(sentinel, "w"):
-        pass
-    os.rename(first_seen_dir, old)
-    os.rename(staging, first_seen_dir)
-    os.remove(sentinel)
-    shutil.rmtree(old)
+    swap_in(staging, first_seen_dir, _compaction_sentinel(first_seen_dir))
 
 
 def start_retention_stream(

@@ -896,8 +896,14 @@ def test_retrain_recovers_from_stale_old_dir(spark, tmp_path):
     prior retrain's sentinel removal and its rmtree must not wedge
     the next retrain ENOTEMPTY mid-swap — it is cleared before the
     swap bracket, same guard as the graphstore fold and the retention
-    compactions."""
-    from pg2kafka_spark.streaming.annindex import retrain_index
+    compactions. compact_cells swaps the cells directory the same way,
+    so a stale cells.__old__ must not wedge it either (nor strand the
+    retrain sentinel that would then block ingest)."""
+    from pg2kafka_spark.streaming.annindex import (
+        _retrain_sentinel,
+        compact_cells,
+        retrain_index,
+    )
 
     emb, path = _bootstrap(spark, tmp_path)
     old = path.rstrip("/") + ".__old__"
@@ -912,3 +918,13 @@ def test_retrain_recovers_from_stale_old_dir(spark, tmp_path):
         spark, path, _queries(spark), k=3, absorb_duplicates=True
     )
     assert got.count() > 0
+
+    cells_old = f"{path}/cells.__old__"
+    os.makedirs(cells_old, exist_ok=True)
+    with open(os.path.join(cells_old, "stale.parquet"), "w") as fh:
+        fh.write("stale")
+    compact_cells(spark, path)  # must not raise
+    assert not os.path.exists(cells_old)
+    assert not os.path.exists(_retrain_sentinel(path))
+    cells = spark.read.parquet(f"{path}/cells")
+    assert cells.count() == cells.select("vec_id").distinct().count()

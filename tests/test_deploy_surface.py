@@ -180,6 +180,25 @@ def test_streaming_modules_share_one_stream_runner():
     assert calls == ["relay.py"]
 
 
+def test_streaming_stores_share_one_directory_swap():
+    """Only streaming/swap.py renames a store directory or names its
+    .__old__ copy: every compaction, retrain and label fold goes
+    through swap_in, so no copy of the swap can drift from the rest."""
+    from pathlib import Path
+
+    import pg2kafka_spark
+
+    streaming = Path(pg2kafka_spark.__file__).parent / "streaming"
+    offenders = [
+        (path.name, n)
+        for path in sorted(streaming.glob("*.py"))
+        if path.name != "swap.py"
+        for n in ("os.rename(", '".__old__"')
+        if n in path.read_text()
+    ]
+    assert not offenders
+
+
 def test_make_recipes_name_existing_files():
     """Every script a Makefile recipe runs (tools/…, tests/…, bench.py,
     perfbench/…) exists, so deleting a file cannot leave a target

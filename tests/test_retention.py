@@ -647,7 +647,11 @@ def test_compactions_recover_from_stale_old_dir(spark, tmp_path):
     swap cleanly instead of wedging ENOTEMPTY mid-swap."""
     import os
 
-    from pg2kafka_spark.streaming.retention import compact_first_seen
+    from pg2kafka_spark.streaming.retention import (
+        _compaction_sentinel,
+        compact_first_seen,
+        compact_sketches,
+    )
 
     fs_dir = str(tmp_path / "first_seen")
     spark.createDataFrame(
@@ -661,3 +665,60 @@ def test_compactions_recover_from_stale_old_dir(spark, tmp_path):
     assert not os.path.exists(old)
     got = {(r.user_id, r.f_us) for r in spark.read.parquet(fs_dir).collect()}
     assert got == {(1, 5), (2, 7)}
+
+    # the sketch compaction: two batches of one cell fold to one row,
+    # through the same stale-__old__ clear and a sentinel it removes
+    sk_dir = str(tmp_path / "sketches")
+    spark.createDataFrame(
+        [(0, 0, 1, 0), (0, 0, 2, 1)],
+        "cohort_day int, week_offset int, user_id bigint, batch_id int",
+    ).groupBy("cohort_day", "week_offset", "batch_id").agg(
+        F.hll_sketch_agg("user_id").alias("sketch")
+    ).write.parquet(sk_dir)
+    old = sk_dir + ".__old__"
+    os.makedirs(old, exist_ok=True)
+    with open(os.path.join(old, "stale.parquet"), "w") as fh:
+        fh.write("stale")
+    compact_sketches(spark, sk_dir)  # must not raise
+    assert not os.path.exists(old)
+    assert not os.path.exists(_compaction_sentinel(sk_dir))
+    assert [
+        (r.batch_id, r.n)
+        for r in spark.read.parquet(sk_dir)
+        .select("batch_id", F.hll_sketch_estimate("sketch").alias("n"))
+        .collect()
+    ] == [(-1, 2)]
+
+
+def test_sketch_stream_raises_mid_compaction(spark, tmp_path):
+    """A compact_sketches crashed inside its swap leaves the sketch
+    table's sentinel on disk; the sketch stream's next batch must
+    fail loudly instead of appending a fresh sketches/ directory
+    that the next compaction would overwrite along with the only
+    copies of the history."""
+    import os
+
+    import pytest as _pytest
+
+    from pg2kafka_spark.streaming.retention import (
+        _compaction_sentinel,
+        start_retention_sketch_stream,
+    )
+
+    incoming = str(tmp_path / "incoming")
+    sk_dir = str(tmp_path / "sketches")
+    spark.createDataFrame(
+        [(1, 86_400_000_000)], "user_id bigint, ts bigint"
+    ).write.parquet(incoming)
+    open(_compaction_sentinel(sk_dir), "w").close()
+    q = start_retention_sketch_stream(
+        spark,
+        incoming,
+        "user_id bigint, ts bigint",
+        first_seen_dir=str(tmp_path / "first_seen"),
+        sketches_dir=sk_dir,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    with _pytest.raises(Exception, match="mid-compaction"):
+        q.awaitTermination(120)
+    assert not os.path.exists(sk_dir)

@@ -10,7 +10,7 @@ an operator of pg2kafka can map their deployment 1:1:
 | ``TOPIC_NAMESPACE``  | ``TOPIC_NAMESPACE``     | optional topic prefix (main.go:215-222) |
 | ``DRY_RUN``          | ``DRY_RUN``             | log to console instead of producing (main.go:158-160) |
 | ``DATABASE`` (from url, main.go:207-213) | ``DATABASE`` | db segment of the topic name |
-| ``PERFORM_MIGRATIONS`` (main.go:58-61) | ``PERFORM_MIGRATIONS`` | bootstrap the outbox on start (dir + schema/registry manifest, migrations.py) |
+| ``PERFORM_MIGRATIONS`` (main.go:58-61) | ``PERFORM_MIGRATIONS`` | bootstrap the outbox on start (dir + schema/registry manifest, migrations.py); a local path or file: URI only, another scheme exits 2 |
 | (drain then LISTEN, main.go:85-93)       | ``RELAY_ONCE``          | "true": availableNow drain then exit; else continuous micro-batches |
 | (poll pacing)        | ``RELAY_TRIGGER``       | processingTime interval for continuous mode (default "5 seconds"; one Spark cannot parse exits 2) |
 | (page size O12)      | ``RELAY_PAGE_FILES``    | maxFilesPerTrigger, a positive integer (unset: one unbounded batch) |
@@ -51,7 +51,11 @@ def main(env: dict[str, str] | None = None) -> int:
         # fails fast on an envelope conflict
         from pg2kafka_spark.migrations import perform_migrations
 
-        perform_migrations(outbox)
+        try:
+            perform_migrations(outbox)
+        except ValueError as e:
+            print(f"PERFORM_MIGRATIONS cannot bootstrap OUTBOX_DIR {outbox!r}: {e}", file=sys.stderr)
+            return 2
     database = env.get("DATABASE", "postgres")
     namespace = env.get("TOPIC_NAMESPACE") or None
     dry_run = env.get("DRY_RUN", "").lower() in ("1", "true", "yes")

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import json
 import os
+from urllib.parse import urlsplit
+from urllib.request import url2pathname
 
 from pg2kafka_spark.event import EVENT_SCHEMA
 from pg2kafka_spark.registry import Registry
@@ -33,6 +35,18 @@ MANIFEST_VERSION = 1
 
 
 def _manifest_path(outbox_dir: str) -> str:
+    """The manifest's local path. A ``file:`` URI names its local path;
+    any other scheme (``s3a://``, ``hdfs://``) raises ``ValueError``,
+    because this bootstrap writes through the local file system and
+    would otherwise create a directory named after the URI."""
+    parts = urlsplit(outbox_dir)
+    if parts.scheme == "file":
+        outbox_dir = url2pathname(parts.path)
+    elif parts.scheme:
+        raise ValueError(
+            f"outbox {outbox_dir!r} is not on the local file system; "
+            "only a local path or a file: URI can be bootstrapped"
+        )
     return os.path.join(outbox_dir, MANIFEST_NAME)
 
 
@@ -44,9 +58,10 @@ def perform_migrations(outbox_dir: str, registry: Registry | None = None) -> boo
     Raises ``RuntimeError`` on a schema conflict — the outbox was
     initialized under a different event envelope (or manifest format),
     the one condition the reference's DDL could also not silently
-    migrate."""
-    os.makedirs(outbox_dir, exist_ok=True)
+    migrate. Raises ``ValueError`` for an outbox URI that is not
+    ``file:``."""
     path = _manifest_path(outbox_dir)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     schema = json.loads(EVENT_SCHEMA.json())
     reg = registry.as_dict() if registry is not None else {}
     if os.path.exists(path):

@@ -14,11 +14,6 @@ from pg2kafka_spark.operators.diff import (
 )
 from pg2kafka_spark.operators.wire import to_wire, topic_name
 from pg2kafka_spark.operators.compaction import latest_state, latest_state_agg
-from pg2kafka_spark.operators.queue import (
-    unprocessed,
-    fetch_page,
-    unprocessed_pages,
-)
 
 __all__ = [
     "snapshot_events",
@@ -30,7 +25,4 @@ __all__ = [
     "topic_name",
     "latest_state",
     "latest_state_agg",
-    "unprocessed",
-    "fetch_page",
-    "unprocessed_pages",
 ]

@@ -6,8 +6,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pg2kafka_spark.catalog import load_table
-from pg2kafka_spark.operators.queue import PAGE_SIZE
 from pg2kafka_spark.qreg import query
+
+PAGE_SIZE = 1000  # reference's hard-coded LIMIT (eventqueue/event_queue.go:20)
 
 
 # ---------------------------------------------------------------------------
@@ -104,13 +105,12 @@ def snapshot_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     check; covered by unit tests instead). Narrow map-only plan — scan
     → project, no shuffle, JSON build inside codegen.
     """
+    from pg2kafka_spark.operators.snapshot import snapshot_events
+
     part = load_table(spark, "part", sf_dir)
     cols = ["p_partkey", "p_name", "p_brand", "p_type", "p_size"]
-    return part.select(
-        F.col("p_partkey").cast("string").alias("external_id"),
-        F.lit("part").alias("table_name"),
-        F.lit("SNAPSHOT").alias("statement"),
-        F.to_json(F.struct(*cols), {"ignoreNullFields": "false"}).alias("data"),
+    return snapshot_events(part.select(*cols), "part", "p_partkey").select(
+        "external_id", "table_name", "statement", "data"
     )
 
 
@@ -495,12 +495,14 @@ def topic_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     event types stand in for table names). Distinct = partial-dedup
     map-side, tiny shuffle.
     """
+    from pg2kafka_spark.operators.wire import topic_column
+
     ev = load_table(spark, "events", sf_dir)
-    return ev.select(
-        F.concat_ws(
-            ".", F.lit("pg2kafka"), F.lit("staging.testdb"), F.col("event_type")
-        ).alias("topic")
-    ).distinct()
+    return (
+        ev.select(F.col("event_type").alias("table_name"))
+        .select(topic_column("testdb", "staging").alias("topic"))
+        .distinct()
+    )
 
 
 @query(

@@ -2085,7 +2085,9 @@ def near_dup_components_served(
 
     Scale: the serve reads |V| label rows regardless of how many pair
     batches ever folded; the folds' cost tracks arrivals (measured,
-    tools/graph_stress.py)."""
+    BASELINE.md round 16: a flat 4.5–5.2 s warm fold per 100k-pair
+    batch at 200k nodes, against a cold rebuild that grew ~3× with
+    8× the pair history)."""
     docs = load_table(spark, "documents", sf_dir)
     labels_dir = _ensure_components_store(spark, sf_dir)
     comps = spark.read.parquet(labels_dir).withColumnRenamed(
@@ -2167,8 +2169,8 @@ def near_dup_canonical_served(
     Scale: |V| label rows + one uniform component_id shuffle,
     independent of how many pair batches ever folded — measured at
     |V|=200k through an 8× pair-history growth: serve flat 1.5–2.8 s
-    while the store-less recompute grows to ~18 s (BASELINE.md r18
-    canonical-serve axis, tools/graph_stress.py CANON=1)."""
+    while the store-less recompute grows to ~18 s (BASELINE.md round
+    18, canonical-serve axis)."""
     docs = load_table(spark, "documents", sf_dir)
     labels_dir = _ensure_components_store(spark, sf_dir)
     comps = spark.read.parquet(labels_dir).withColumnRenamed(

@@ -3807,8 +3807,8 @@ def part_pair_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses to its distinct part set (baskets are small and bounded
     by order size), pairs explode map-side from the per-order array
     (≤ C(lines,2) ≈ 20 rows per order), and only (pair, count)
-    partial aggregates shuffle. Measured trade
-    (tools/relational_stress.py, BASELINE.md r12): the self-join
+    partial aggregates shuffle. Measured trade (BASELINE.md round 12,
+    relational stress axis): the self-join
     plans as TWO fact scans + three exchanges (Spark does not reuse
     the exchange across the inequality self-join), the basket
     explode as ONE scan + two exchanges; on page-cached local data

@@ -17,23 +17,9 @@ from pg2kafka_spark.streaming.relay import (
     read_event_stream,
     start_relay,
 )
-from pg2kafka_spark.streaming.windows import (
-    change_stats_stream,
-    dedup_events_by_uuid,
-    events_per_session_window,
-    events_per_window,
-    join_streams_within,
-    latest_state_stream,
-)
 
 __all__ = [
     "bootstrap_outbox",
     "read_event_stream",
     "start_relay",
-    "change_stats_stream",
-    "dedup_events_by_uuid",
-    "events_per_session_window",
-    "events_per_window",
-    "join_streams_within",
-    "latest_state_stream",
 ]

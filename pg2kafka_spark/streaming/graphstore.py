@@ -19,9 +19,10 @@ table — REPLACED per micro-batch through ``swap.swap_in`` under a
 this state is a FOLD, not a log: yesterday's labels are a
 connectivity-exact compression of every pair ever ingested (star
 edges node→component_id), which is exactly why the fold's cost tracks
-|V| + |batch| and never the pair history (measured:
-tools/graph_stress.py — warm fold flat while the cold rebuild grows
-with history).
+|V| + |batch| and never the pair history (measured, BASELINE.md
+round 16: at 200k nodes the warm fold held 4.5–5.2 s per batch from
+0.4 M to 0.8 M pairs of history while the cold rebuild grew to
+12.9–13.6 s).
 
 Crash contract (at-least-once, never loss, same discipline as the
 other loops): the fold is IDEMPOTENT — re-folding an already-folded
@@ -35,10 +36,10 @@ table. Either directory state behind the sentinel is value-complete
 (old = pre-fold, staging = post-fold; re-running the batch from the
 checkpoint reproduces post-fold from either).
 
-Scale notes: the per-batch fold is the measured graph_stress shape —
-|V| star edges + |batch| pairs through min-label propagation, rounds
-tracking how many existing clusters the batch bridges (stars have
-diameter ≤ 2). The label table is uniform on node id; at 100 TB
+Scale notes: the per-batch fold is the shape measured in BASELINE.md
+round 16 — |V| star edges + |batch| pairs through min-label
+propagation, rounds tracking how many existing clusters the batch
+bridges (stars have diameter ≤ 2). The label table is uniform on node id; at 100 TB
 partition it on ``pmod(node, N)`` so the swap writes in parallel.
 
 Design-note refs: the reference has no graph stage (blendle/pg2kafka

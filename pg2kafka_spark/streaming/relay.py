@@ -11,8 +11,12 @@ Spark-first mapping — none of that machinery survives as code:
 
 * The outbox is a **streaming source** (``readStream`` over the
   append-only event log). ``maxFilesPerTrigger`` is the page-size
-  analog; source offsets give the same id-ordered resumability the
-  ``processed`` flag provided (O12/O14).
+  analog; the checkpoint's committed source offsets replace the
+  ``processed`` flag as the cursor (O12/O14): a restart delivers
+  every outbox file not yet committed, at least once. The file source
+  pages by file modification time, not by ``id``, so id order holds
+  within a micro-batch (per key, below) but across batches only when
+  the writer's files become visible in id order.
 * Backlog drain is ``Trigger.AvailableNow`` (O13/O19): process
   everything present, in bounded micro-batches, then stop. The
   long-running relay is the same query with a processing-time trigger

@@ -8,11 +8,10 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 
 from pg2kafka_spark.event import EVENT_COLUMNS
 from pg2kafka_spark.operators.diff import capture_changes, suppress_noops
-from pg2kafka_spark.operators.queue import fetch_page, unprocessed_pages
 from pg2kafka_spark.operators.snapshot import snapshot_events
 from pg2kafka_spark.operators.wire import parse_topic_namespace, to_wire, topic_name
 from pg2kafka_spark.registry import Registry
@@ -229,30 +228,6 @@ def test_legacy_statement_passes_through_wire_untouched(spark):
         "SOMETHING_ELSE",
     ]
     assert [w.topic for w in wire] == ["pg2kafka.mydb.users"] * 2
-
-
-# --- outbox scan semantics (eventqueue/event_queue.go, main_test.go) ------
-
-
-def _outbox(spark):
-    rows = [
-        Row(id=1, processed=True, external_id="a"),
-        Row(id=4, processed=False, external_id="b"),
-        Row(id=2, processed=False, external_id="c"),
-        Row(id=3, processed=False, external_id=None),
-    ]
-    return spark.createDataFrame(rows)
-
-
-def test_fetch_page_skips_processed_orders_by_id(spark):
-    """Processed rows skipped; commit order (main_test.go:15-101)."""
-    page = fetch_page(_outbox(spark), limit=2).collect()
-    assert [r.id for r in page] == [2, 3]
-
-
-def test_page_count_math(spark):
-    assert unprocessed_pages(_outbox(spark), limit=2) == 2  # ceil(3/2)
-    assert unprocessed_pages(_outbox(spark), limit=1000) == 1
 
 
 def test_compaction_strategies_agree(spark, sf_dir):

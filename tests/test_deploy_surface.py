@@ -220,6 +220,53 @@ def test_make_recipes_name_existing_files():
     assert not [p for p in sorted(paths) if not (root / p).exists()]
 
 
+def test_every_tool_is_run():
+    """Every file under tools/ is run by a Makefile recipe or imported
+    by code under pg2kafka_spark/, perfbench/ or tests/, or by bench.py,
+    so a tool nothing runs cannot linger in the tree."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    recipes = "\n".join(
+        line for line in (root / "Makefile").read_text().splitlines()
+        if line.startswith("\t")
+    )
+    code = "\n".join(
+        path.read_text()
+        for path in [root / "bench.py"]
+        + [p for d in ("pg2kafka_spark", "perfbench", "tests") for p in sorted((root / d).rglob("*.py"))]
+    )
+    unrun = [
+        tool.name
+        for tool in sorted((root / "tools").iterdir())
+        if tool.is_file()
+        and f"tools/{tool.name}" not in recipes
+        and not re.search(rf"^\s*(?:from|import)\s+tools\.{re.escape(tool.stem)}\b", code, re.M)
+    ]
+    assert not unrun
+
+
+def test_daemon_imports_no_analytics_stack():
+    """`python -m pg2kafka_spark` loads the relay and nothing it never
+    calls: pandas and pyarrow stay out of a fresh interpreter that
+    imports the daemon."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    probe = (
+        "import sys, pg2kafka_spark.__main__; "
+        "print(sorted({'pandas', 'pyarrow'} & set(sys.modules)))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True, text=True, check=True,
+    ).stdout
+    assert out.strip() == "[]"
+
+
 # --- migrations bootstrap (PERFORM_MIGRATIONS analog, main.go:58-61) ------
 
 
@@ -288,6 +335,36 @@ def test_daemon_bootstraps_outbox_with_perform_migrations(spark, tmp_path):
     )
     assert rc == 0
     assert (tmp_path / "outbox" / MANIFEST_NAME).exists()
+
+
+def test_perform_migrations_bootstraps_file_uri_and_rejects_remote_outbox(
+    spark, tmp_path, monkeypatch, capsys
+):
+    # a file: URI bootstraps its local path; any other scheme is a
+    # config error, and neither leaves a directory named after the URI
+    # in the working directory
+    from pg2kafka_spark.migrations import MANIFEST_NAME, perform_migrations
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    env = {
+        "PERFORM_MIGRATIONS": "true",
+        "DATABASE": "testdb",
+        "DRY_RUN": "true",
+        "RELAY_ONCE": "true",
+        "CHECKPOINT_DIR": str(tmp_path / "ckpt"),
+    }
+    outbox = tmp_path / "outbox"
+    assert daemon.main({**env, "OUTBOX_DIR": outbox.as_uri()}) == 0
+    assert (outbox / MANIFEST_NAME).exists()
+
+    assert daemon.main({**env, "OUTBOX_DIR": "s3a://bucket/outbox"}) == 2
+    err = capsys.readouterr().err
+    assert "PERFORM_MIGRATIONS" in err and "OUTBOX_DIR" in err
+    with pytest.raises(ValueError, match="file: URI"):
+        perform_migrations("s3a://bucket/outbox")
+    assert list(cwd.iterdir()) == []
 
 
 class TestTextFormatSources:

@@ -17,14 +17,12 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from pg2kafka_spark.event import EVENT_SCHEMA
-from pg2kafka_spark.streaming import (
-    bootstrap_outbox,
+from pg2kafka_spark.streaming import bootstrap_outbox, read_event_stream, start_relay
+from pg2kafka_spark.streaming.windows import (
     dedup_events_by_uuid,
     events_per_session_window,
     events_per_window,
     latest_state_stream,
-    read_event_stream,
-    start_relay,
 )
 
 T0 = datetime(2024, 1, 1, 12, 0, 0)
@@ -326,7 +324,7 @@ def test_snapshot_prefix_precedes_changes_in_drain(spark, outbox, tmp_path):
 
 @pytest.mark.heavy_e2e
 def test_stream_stream_join_within_matches_batch(spark, tmp_path):
-    from pg2kafka_spark.streaming import join_streams_within
+    from pg2kafka_spark.streaming.windows import join_streams_within
 
     # orders feed + payments feed on the same keys; payments join to
     # orders no older than 10 minutes (the bounded-state as-of shape)
@@ -566,7 +564,7 @@ def test_transform_with_state_change_stats_folds_across_batches(
         "google.protobuf.descriptor",
         reason="transformWithState state server requires protobuf",
     )
-    from pg2kafka_spark.streaming import change_stats_stream
+    from pg2kafka_spark.streaming.windows import change_stats_stream
 
     rows_a = [
         _event(1, "users", "INSERT", "{}", key="a", ts=T0),

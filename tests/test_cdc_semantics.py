@@ -207,6 +207,48 @@ def test_wire_shape_and_null_key(spark):
         assert hdrs == {"created_at": json.loads(w.value)["created_at"]}
 
 
+def test_wire_bytes_golden(spark):
+    """Exact ``value`` and ``headers`` bytes of three messages: a
+    non-ASCII key (multi-byte UTF-8, a 4-byte emoji), a NULL key and a
+    non-ASCII payload. Any change to how the value is spliced shows
+    here as a string difference, not only as a JSON-level one."""
+    events = spark.createDataFrame(
+        [
+            ("00000000-0000-0000-0000-000000000001", "clé-ü-😀", "INSERT", '{"name":"plain"}'),
+            ("00000000-0000-0000-0000-000000000002", None, "DELETE", "{}"),
+            ("00000000-0000-0000-0000-000000000003", "k-3", "UPDATE", '{"name":"Grüße, 東京 😀"}'),
+        ],
+        "uuid string, external_id string, statement string, data string",
+    ).select(
+        "*",
+        F.to_timestamp(F.lit("2018-01-01 12:34:56.789012")).alias("created_at"),
+        F.lit("users").alias("table_name"),
+    )
+    wire = to_wire(events, "mydb").orderBy("value").collect()
+    ts = "2018-01-01T12:34:56.789012Z"
+    assert [(w.key, w.value) for w in wire] == [
+        (
+            "clé-ü-😀",
+            '{"uuid":"00000000-0000-0000-0000-000000000001","external_id":"clé-ü-😀",'
+            f'"statement":"INSERT","created_at":"{ts}","data":{{"name":"plain"}}}}',
+        ),
+        (
+            None,
+            '{"uuid":"00000000-0000-0000-0000-000000000002","external_id":null,'
+            f'"statement":"DELETE","created_at":"{ts}","data":{{}}}}',
+        ),
+        (
+            "k-3",
+            '{"uuid":"00000000-0000-0000-0000-000000000003","external_id":"k-3",'
+            f'"statement":"UPDATE","created_at":"{ts}","data":{{"name":"Grüße, 東京 😀"}}}}',
+        ),
+    ]
+    for w in wire:
+        assert [(h.key, bytes(h.value)) for h in w.headers] == [
+            ("created_at", ts.encode())
+        ]
+
+
 def test_legacy_statement_passes_through_wire_untouched(spark):
     """The reference's own fixtures insert a legacy ``CREATE``
     statement value (main_test.go:43) and the relay produces it

@@ -3,6 +3,8 @@ config builders (the parts that need no live Postgres/Kafka)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import Row
 
@@ -265,6 +267,68 @@ def test_daemon_imports_no_analytics_stack():
         capture_output=True, text=True, check=True,
     ).stdout
     assert out.strip() == "[]"
+
+
+# --- driver JVM options (session.DRIVER_JIT_OPTIONS) ----------------------
+
+
+def _jit_thresholds() -> dict[str, str]:
+    """``session.DRIVER_JIT_OPTIONS`` as ``{flag name: value}``."""
+    from pg2kafka_spark.session import DRIVER_JIT_OPTIONS
+
+    pairs = (opt.removeprefix("-XX:").split("=") for opt in DRIVER_JIT_OPTIONS.split())
+    return dict(pairs)
+
+
+def test_session_jvm_runs_with_the_jit_thresholds(spark):
+    """The fixture's driver JVM, launched by ``get_spark``, runs with
+    the four C2 thresholds of ``session.DRIVER_JIT_OPTIONS``."""
+    want = _jit_thresholds()
+    assert sorted(want) == [
+        "Tier4BackEdgeThreshold",
+        "Tier4CompileThreshold",
+        "Tier4InvocationThreshold",
+        "Tier4MinInvocationThreshold",
+    ]
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert {name: bean.getVMOption(name).getValue() for name in want} == want
+
+
+def test_jit_thresholds_survive_caller_extra_java_options(tmp_path):
+    """A caller's ``spark.driver.extraJavaOptions`` (perfbench passes
+    its temp dir that way) adds to the thresholds instead of replacing
+    them: a fresh JVM holds both."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    names = sorted(_jit_thresholds())
+    probe = f"""
+import json
+from pg2kafka_spark.session import get_spark
+spark = get_spark("jit-probe", cpus=1, extra_conf={{
+    "spark.driver.extraJavaOptions": "-Djava.io.tmpdir={tmp_path}"}})
+jvm = spark._jvm
+bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+print(json.dumps({{
+    "tmpdir": jvm.java.lang.System.getProperty("java.io.tmpdir"),
+    "options": {{n: bean.getVMOption(n).getValue() for n in {names!r}}},
+}}))
+spark.stop()
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=Path(__file__).resolve().parent.parent,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        capture_output=True, text=True, check=True, timeout=300,
+    ).stdout
+    got = json.loads(out.strip().splitlines()[-1])
+    assert got == {"tmpdir": str(tmp_path), "options": _jit_thresholds()}
 
 
 # --- migrations bootstrap (PERFORM_MIGRATIONS analog, main.go:58-61) ------

@@ -53,9 +53,9 @@ def envelope(
 ) -> DataFrame:
     """Project ``frame`` to outbox rows in ``EVENT_COLUMNS`` order — the
     one place the outbox column defaults (sql/migrations.sql:7-13) are
-    decided. ``id`` is ``id_column`` or ``monotonically_increasing_id()``
-    (unique, ascending within a write's partition, NOT ordered across
-    writes — ROADMAP item 1); ``uuid()``, ``current_timestamp()`` and
+    decided. ``id`` is ``id_column`` or ``monotonically_increasing_id()``;
+    :func:`~pg2kafka_spark.streaming.relay.append_outbox` replaces it
+    with the log's next ids. ``uuid()``, ``current_timestamp()`` and
     ``processed = false`` fill the rest. ``external_id`` None ⇒ NULL
     key (untracked table, unkeyed Kafka message)."""
     cols = {

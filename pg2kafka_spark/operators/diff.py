@@ -117,8 +117,10 @@ def capture_changes(
     (sql/triggers.sql:1-47): key extraction from NEW on INSERT else OLD
     (lines 14-18), payload build (20-32), no-op filter (34-37), outbox
     append with defaults (39-41), the defaults set by
-    :func:`~pg2kafka_spark.event.envelope` (``id_column`` overrides
-    the outbox id).
+    :func:`~pg2kafka_spark.event.envelope`. Write the events with
+    :func:`~pg2kafka_spark.streaming.relay.append_outbox`, which gives
+    them the log's next ids (``id_column`` only sets the id of a frame
+    written another way).
 
     Scale: narrow map-only pipeline — preserves source partitioning, no
     shuffle; safe to run on an arbitrarily wide change feed.

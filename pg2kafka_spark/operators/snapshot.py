@@ -11,13 +11,10 @@ straight to event rows; Catalyst prunes unread columns if the caller
 projects, and the JSON serialization runs inside whole-stage codegen.
 
 ``id`` ordering: the reference gets a global sequence from Postgres.
-Here the id is the :func:`~pg2kafka_spark.event.envelope` default,
-``monotonically_increasing_id()``: unique, but it restarts at
-``partition << 33`` on every write, so it does NOT order a snapshot
-before later writes. Per-key delivery order (README.md:38-40) holds
-only when every later writer's ids, and its outbox files' times,
-exceed the snapshot's; with default ids on both sides a key's UPDATE
-can be delivered before its SNAPSHOT (ROADMAP item 1).
+Here :func:`~pg2kafka_spark.streaming.relay.bootstrap_outbox` appends
+the snapshot through ``append_outbox``, which gives it the log's next
+ids and publishes its files before any later write's, so a key's
+SNAPSHOT precedes its later changes (README.md:38-40).
 """
 
 from __future__ import annotations

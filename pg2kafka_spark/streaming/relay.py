@@ -14,9 +14,11 @@ Spark-first mapping — none of that machinery survives as code:
   analog; the checkpoint's committed source offsets replace the
   ``processed`` flag as the cursor (O12/O14): a restart delivers
   every outbox file not yet committed, at least once. The file source
-  pages by file modification time, not by ``id``, so id order holds
-  within a micro-batch (per key, below) but across batches only when
-  the writer's files become visible in id order.
+  pages by file modification time; :func:`append_outbox`, the one
+  writer of the outbox, assigns ids above every earlier append's and
+  publishes its files in id order with ascending times, so the pages
+  follow the log's id order (the reference's BIGSERIAL + ``ORDER BY
+  id``, eventqueue/event_queue.go:15-21).
 * Backlog drain is ``Trigger.AvailableNow`` (O13/O19): process
   everything present, in bounded micro-batches, then stop. The
   long-running relay is the same query with a processing-time trigger
@@ -31,11 +33,12 @@ Spark-first mapping — none of that machinery survives as code:
 At 100 TB the relay is embarrassingly parallel: the wire projection is
 stateless, so throughput scales with source partitions. Per-key
 ordering (README.md:38-40, the reference's core delivery contract)
-always holds and needs one more step at the sink edge: a micro-batch's
-rows for one key can span source files/partitions, so a parallel
-producer must first co-locate and sort them — ``operators/wire.py::
-ordered_for_delivery`` (repartition on key + sortWithinPartitions on
-(key, id)) on every micro-batch, pinned end-to-end by
+holds for an outbox written only through :func:`append_outbox`, by one
+writer at a time, and needs one more step at the sink edge: a
+micro-batch's rows for one key can span source files/partitions, so a
+parallel producer must first co-locate and sort them —
+``operators/wire.py::ordered_for_delivery`` (repartition on key +
+sortWithinPartitions on (key, id)) on every micro-batch, pinned end-to-end by
 tests/test_streaming.py::test_per_key_order_survives_parallel_sink.
 A micro-batch whose planned input is at or below AQE's coalescing
 floor (1 MB by default) skips that shuffle: it is read and sorted as
@@ -46,19 +49,27 @@ exchange.
 The relay and every maintained-state loop start their streams here:
 :func:`read_file_stream`, :func:`start_stream` (which first scrubs a
 checkpoint with no committed progress, so a kill during the first
-offset write never blocks the restart) and :func:`await_drain`.
+offset write never blocks the restart) and :func:`await_drain`; its
+writer twin :func:`append_files` publishes a frame to a file log.
 """
 
 from __future__ import annotations
 
+import time
+import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from pg2kafka_spark.event import EVENT_SCHEMA
+from pg2kafka_spark.event import EVENT_COLUMNS, EVENT_SCHEMA
 from pg2kafka_spark.operators.snapshot import snapshot_events
 from pg2kafka_spark.operators.wire import ordered_for_delivery, wire_columns
+
+
+#: The outbox's high-water mark: the next id :func:`append_outbox`
+#: assigns. The underscore keeps it out of the file source's listing.
+HIGH_WATER_FILE = "_outbox_next_id"
 
 
 def bootstrap_outbox(
@@ -67,26 +78,125 @@ def bootstrap_outbox(
     table_name: str,
     external_id_column: str | None,
 ) -> None:
-    """O10 setup/snapshot: write the current table state into the
-    outbox log as SNAPSHOT events *before* the change feed starts
-    appending.
+    """O10 setup/snapshot: append the current table state to the outbox
+    log as SNAPSHOT events *before* the change feed starts appending.
 
     The reference guarantees no gap/overlap between snapshot and
     trigger installation with an ACCESS EXCLUSIVE lock
     (sql/triggers.sql:100-111), and its BIGSERIAL id orders the
-    snapshot before every later event. Here the write only appends —
-    an overwrite would erase the log. The snapshot is delivered before
-    a key's later changes only when every later writer's outbox ids
-    AND file modification times exceed the snapshot's: the file source
-    pages by file time and ``ordered_for_delivery`` sorts by id. The
-    default ids (``monotonically_increasing_id()``, restarted per
-    write) do not guarantee that — ROADMAP item 1 reproduces an UPDATE
-    delivered before its key's SNAPSHOT. On a Kafka/Delta log the same
-    holds with offsets: record the offset after the snapshot write,
-    start the change producer at it.
+    snapshot before every later event. Here :func:`append_outbox` gives
+    the same order: every later append's ids and files follow the
+    snapshot's. On a Kafka/Delta log the same holds with offsets:
+    record the offset after the snapshot write, start the change
+    producer at it.
     """
-    events = snapshot_events(table_df, table_name, external_id_column)
-    events.write.mode("append").parquet(outbox_dir)
+    append_outbox(snapshot_events(table_df, table_name, external_id_column), outbox_dir)
+
+
+def append_outbox(events: DataFrame, outbox_dir: str) -> None:
+    """O8: append outbox rows (e.g. ``capture_changes`` output) to the
+    outbox log — the reference's INSERT with a BIGSERIAL ``id``
+    (sql/migrations.sql:7), drained ``ORDER BY id``.
+
+    ``id`` becomes ``high_water + monotonically_increasing_id()``, in
+    the frame's row order, replacing any id the frame carries; a fresh
+    outbox starts at 0. The new high water is observed on the write and
+    persisted before :func:`append_files` publishes any file, so a
+    crash leaves hidden staging files or an unused id range, never a
+    reused id. One writer at a time: concurrent appends can reuse ids.
+    """
+    spark = events.sparkSession
+    fs, root = _file_system(spark, outbox_dir)
+    state = spark._jvm.org.apache.hadoop.fs.Path(root, HIGH_WATER_FILE)
+    high_water = int(_read_text(spark, fs, state)) if fs.exists(state) else 0
+    observed = Observation("outbox_high_water")
+    log = (
+        events.withColumn("id", F.lit(high_water) + F.monotonically_increasing_id())
+        .select(*EVENT_COLUMNS)
+        .observe(observed, F.max("id").alias("max_id"))
+    )
+
+    def persist_high_water() -> None:
+        max_id = observed.get["max_id"]
+        if max_id is not None:  # an empty append assigns no id
+            _replace_text(spark, fs, state, str(max_id + 1))
+
+    append_files(log, outbox_dir, before_publish=persist_high_water)
+
+
+def append_files(
+    frame: DataFrame,
+    path: str,
+    before_publish: Callable[[], None] | None = None,
+) -> None:
+    """Append ``frame`` to the parquet file log under ``path`` — the
+    writer twin of :func:`read_file_stream`. The frame is written under
+    a hidden ``_staging-<uuid>`` directory in ``path``; after
+    ``before_publish``, its part files get mtimes above every published
+    file, ascending in part (= partition) order, and are renamed into
+    ``path`` in that order. The file source lists visible names only,
+    oldest first, so a reader sees each append whole or as a prefix of
+    its parts, in write order.
+    """
+    spark = frame.sparkSession
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    fs, root = _file_system(spark, path)
+    staging = hadoop_path(root, f"_staging-{uuid.uuid4().hex}")
+    frame.write.parquet(staging.toString())
+    if before_publish is not None:
+        before_publish()
+    parts = sorted(
+        (st.getPath() for st in fs.listStatus(staging) if _visible(st.getPath().getName())),
+        key=lambda p: p.getName(),
+    )
+    published = [
+        st.getModificationTime()
+        for st in fs.listStatus(root)
+        if st.isFile() and _visible(st.getPath().getName())
+    ]
+    first_mtime = max([int(time.time() * 1000)] + [t + 1 for t in published])
+    for i, part in enumerate(parts):
+        fs.setTimes(part, first_mtime + i, -1)
+        _publish(fs, part, hadoop_path(root, part.getName()))
+    fs.delete(staging, True)
+
+
+def _publish(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"could not publish {src.toString()} as {dst.toString()}")
+
+
+def _visible(name: str) -> bool:
+    """Whether the file source lists a file of this name."""
+    return not name.startswith(("_", "."))
+
+
+def _file_system(spark: SparkSession, path: str):
+    """The Hadoop FileSystem of ``path``, and ``path`` as a Hadoop Path."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return root.getFileSystem(spark._jsc.hadoopConfiguration()), root
+
+
+def _read_text(spark: SparkSession, fs, path) -> str:
+    stream = fs.open(path)
+    try:
+        return spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream).decode()
+    finally:
+        stream.close()
+
+
+def _replace_text(spark: SparkSession, fs, path, text: str) -> None:
+    """Write ``text`` to a temp file beside ``path``, then rename it
+    over ``path`` in one step (FileContext's overwriting rename)."""
+    jvm = spark._jvm
+    tmp = path.suffix(f".{uuid.uuid4().hex}.tmp")
+    jvm.org.apache.hadoop.fs.FileUtil.write(fs, tmp, text)
+    rename = jvm.org.apache.hadoop.fs.Options.Rename
+    overwrite = spark.sparkContext._gateway.new_array(rename, 1)
+    overwrite[0] = rename.OVERWRITE
+    jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        fs.makeQualified(path).toUri(), spark._jsc.hadoopConfiguration()
+    ).rename(tmp, path, overwrite)
 
 
 def read_file_stream(
@@ -255,8 +365,7 @@ def scrub_virgin_checkpoint(spark: SparkSession, checkpoint_dir: str) -> int:
     if jvm is None:
         return 0
     hadoop_path = jvm.org.apache.hadoop.fs.Path
-    root = hadoop_path(checkpoint_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root = _file_system(spark, checkpoint_dir)
     offsets = hadoop_path(root, "offsets")
     if not fs.exists(offsets):
         return 0

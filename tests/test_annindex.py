@@ -6,8 +6,8 @@ retention partials carry."""
 
 from __future__ import annotations
 
+import glob
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +24,7 @@ from pg2kafka_spark.streaming.annindex import (
     retrain_flag,
     start_index_ingest_stream,
 )
+from pg2kafka_spark.streaming.relay import append_files
 
 # Every test here drives a streaming accretion/retrain/maintenance
 # cycle against an at-rest store (9-110 s each sequentially, ~860 s
@@ -55,19 +56,11 @@ def _topk_rows(df, sim_col="cos_sim"):
 
 
 def _write_vector_slices(spark, df, cuts, incoming):
-    """One parquet file per (lo, hi) vec_id slice, mtime ascending so
-    the file source delivers them in order."""
-    os.makedirs(incoming, exist_ok=True)
-    t0 = 1_700_000_000
-    for i, (lo, hi) in enumerate(cuts):
+    """One parquet file per (lo, hi) vec_id slice, published in order
+    so the file source delivers them in order."""
+    for lo, hi in cuts:
         sl = df.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-        stage = os.path.join(incoming, f"__stage_{i}")
-        sl.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dst = os.path.join(incoming, f"batch_{i:03d}.parquet")
-        shutil.move(os.path.join(stage, part), dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (t0 + i, t0 + i))
+        append_files(sl.coalesce(1), incoming)
 
 
 def _bootstrap(spark, tmp_path):
@@ -683,7 +676,7 @@ def test_pq_retrain_from_manifest_pointer_store(spark, tmp_path):
     assert retrain_flag(spark, path).count() == 0
 
     # a vanished source file must refuse the retrain loudly
-    victim = os.path.join(incoming, "batch_000.parquet")
+    victim = min(glob.glob(os.path.join(incoming, "*.parquet")), key=os.path.getmtime)
     os.remove(victim)
     try:
         retrain_pq_index(spark, path)

@@ -182,6 +182,43 @@ def test_streaming_modules_share_one_stream_runner():
     assert calls == ["relay.py"]
 
 
+def test_package_writes_the_outbox_only_through_append_outbox():
+    """No module of the package hands an outbox path to a DataFrame
+    writer (``.write….parquet`` / ``.save``) or to ``append_files``
+    outside ``append_outbox``, so every outbox row gets the log's next
+    id and every outbox file its place in the publish order."""
+    import ast
+    from pathlib import Path
+
+    import pg2kafka_spark
+
+    package = Path(pg2kafka_spark.__file__).parent
+    offenders = []
+    for path in sorted(package.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        inside_append_outbox = {
+            id(node)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "append_outbox"
+            for node in ast.walk(fn)
+        }
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call) or id(call) in inside_append_outbox:
+                continue
+            f = call.func
+            writer = (
+                isinstance(f, ast.Attribute)
+                and f.attr in ("parquet", "save")
+                and ".write" in ast.unparse(f.value)
+            )
+            publish = ast.unparse(f).endswith("append_files")
+            if (writer or publish) and any(
+                "outbox" in ast.unparse(a) for a in [*call.args, *call.keywords]
+            ):
+                offenders.append((path.name, call.lineno))
+    assert not offenders
+
+
 def test_streaming_stores_share_one_directory_swap():
     """Only streaming/swap.py renames a store directory or names its
     .__old__ copy: every compaction, retrain and label fold goes

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pg2kafka_spark.operators import graph as G
+from pg2kafka_spark.streaming.relay import append_files
 
 
 @pytest.fixture(autouse=True)
@@ -278,22 +279,8 @@ def test_incremental_components_equals_cold_rebuild(spark):
 
 
 def _write_pair_slices(spark, pair_lists, incoming):
-    import os
-    import shutil
-
-    os.makedirs(incoming, exist_ok=True)
-    t0 = 1_700_000_000
-    for i, pl in enumerate(pair_lists):
-        df = spark.createDataFrame(pl, "id_a bigint, id_b bigint")
-        stage = os.path.join(incoming, f"__stage_{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
-        )
-        dst = os.path.join(incoming, f"batch_{i:03d}.parquet")
-        shutil.move(os.path.join(stage, part), dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (t0 + i, t0 + i))
+    for pl in pair_lists:
+        append_files(spark.createDataFrame(pl, "id_a bigint, id_b bigint").coalesce(1), incoming)
 
 
 @pytest.mark.heavy_e2e

@@ -14,6 +14,7 @@ from pg2kafka_spark.operators.retention import (
     retention_day_partial,
     retention_from_partials,
 )
+from pg2kafka_spark.streaming.relay import append_files
 
 SF = "/root/testdata/sf0.001"
 
@@ -218,30 +219,17 @@ def test_hll_plan_has_no_user_keyed_aggregation(spark):
 # same replay evidence the ingest store has.
 
 
-def _write_day_slice_files(spark, ev_raw, slices, incoming, offset=0):
-    """Write one parquet FILE per day slice into ``incoming``, named
-    and mtime-stamped ascending so the file stream source (which
-    orders by timestamp) delivers them in event-time order — the
-    documented arrival contract."""
-    import os
-    import shutil
-
-    os.makedirs(incoming, exist_ok=True)
-    t0 = 1_700_000_000
-    for i, (lo, hi) in enumerate(slices, start=offset):
+def _write_day_slice_files(spark, ev_raw, slices, incoming):
+    """Publish one parquet FILE per day slice into ``incoming``, in
+    slice order, so the file stream source (which orders by timestamp)
+    delivers them in event-time order — the documented arrival
+    contract."""
+    for lo, hi in slices:
         day = ev_raw.filter(
             (F.unix_micros("ts") >= F.lit(lo * DAY_US))
             & (F.unix_micros("ts") < F.lit(hi * DAY_US))
         )
-        stage = os.path.join(incoming, f"__stage_{i}")
-        day.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
-        )
-        dst = os.path.join(incoming, f"slice_{i:03d}.parquet")
-        shutil.move(os.path.join(stage, part), dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (t0 + i, t0 + i))
+        append_files(day.coalesce(1), incoming)
 
 
 @pytest.mark.heavy_e2e
@@ -465,8 +453,8 @@ def test_run_retention_maintenance_drains_and_compacts(spark, tmp_path):
     part_dir = str(tmp_path / "partials")
     ckpt = str(tmp_path / "ckpt")
 
-    def cycle(sl, offset=0):
-        _write_day_slice_files(spark, ev_raw, sl, incoming, offset=offset)
+    def cycle(sl):
+        _write_day_slice_files(spark, ev_raw, sl, incoming)
         run_retention_maintenance(
             spark,
             incoming,
@@ -482,7 +470,7 @@ def test_run_retention_maintenance_drains_and_compacts(spark, tmp_path):
     assert cands.count() == cands.select("user_id").distinct().count()
     assert not os.path.exists(_compaction_sentinel(fs_dir))
 
-    cycle(slices[3:], offset=3)
+    cycle(slices[3:])
     partials = spark.read.parquet(part_dir)
     # partitioned layout on disk: hive-style cohort_day=N directories
     assert any(

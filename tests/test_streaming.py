@@ -17,7 +17,8 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from pg2kafka_spark.event import EVENT_SCHEMA
-from pg2kafka_spark.streaming import bootstrap_outbox, read_event_stream, start_relay
+from pg2kafka_spark.streaming import append_outbox, bootstrap_outbox, read_event_stream, start_relay
+from pg2kafka_spark.streaming.relay import append_files
 from pg2kafka_spark.streaming.windows import (
     dedup_events_by_uuid,
     events_per_session_window,
@@ -42,8 +43,9 @@ def _event(eid, table, stmt, data, key=None, ts=None, uid=None):
 
 
 def _write_events(spark, rows, path, n_files=1):
-    df = spark.createDataFrame(rows, EVENT_SCHEMA).repartition(n_files)
-    df.write.mode("append").parquet(path)
+    """Publish ``rows`` with their own ids as ``n_files`` files, after
+    every file already in ``path``."""
+    append_files(spark.createDataFrame(rows, EVENT_SCHEMA).repartition(n_files), path)
 
 
 @pytest.fixture()
@@ -61,6 +63,28 @@ def _drain_to_memory(spark, outbox, name, transform=None, output_mode=None, page
     q = writer.start()
     q.awaitTermination(120)
     return spark.table(name)
+
+
+def _relay_batches(spark, outbox, ckpt, page_files=None):
+    """The wire rows of each micro-batch one availableNow relay run
+    delivers, in delivery order."""
+    batches: list[list[Row]] = []
+    q = start_relay(
+        read_event_stream(spark, outbox, max_files_per_trigger=page_files),
+        database="testdb",
+        checkpoint_dir=ckpt,
+        available_now=True,
+        foreach_batch=lambda df, _b: batches.append(df.collect()),
+    )
+    assert q.awaitTermination(120)
+    return batches
+
+
+def _relay_messages(spark, outbox, ckpt, page_files=None):
+    """``(table, key, statement, data)`` of every delivered message."""
+    msgs = [(r.topic, r.key, json.loads(r.value))
+            for b in _relay_batches(spark, outbox, ckpt, page_files) for r in b]
+    return [(t.rsplit(".", 1)[1], k, v["statement"], v["data"]) for t, k, v in msgs]
 
 
 def test_relay_snapshot_then_changes_to_memory(spark, outbox, tmp_path):
@@ -119,17 +143,7 @@ def test_relay_pages_bound_micro_batches(spark, outbox, tmp_path):
     # the LIMIT-1000 page loop as micro-batch pacing.
     for i in range(3):
         _write_events(spark, [_event(i, "orders", "INSERT", "{}", key=str(i))], outbox)
-    batches: list[int] = []
-
-    events = read_event_stream(spark, outbox, max_files_per_trigger=1)
-    q = start_relay(
-        events,
-        database="testdb",
-        checkpoint_dir=str(tmp_path / "ckpt2"),
-        available_now=True,
-        foreach_batch=lambda df, epoch: batches.append(df.count()),
-    )
-    q.awaitTermination(120)
+    batches = [len(b) for b in _relay_batches(spark, outbox, str(tmp_path / "ckpt2"), 1)]
     assert sum(batches) == 3
     assert len(batches) >= 3  # one page per file (plus possible empty tail batch)
 
@@ -251,75 +265,152 @@ def test_checkpoint_resume_processes_only_new_events(spark, outbox, tmp_path):
     # more events, drain again with the SAME checkpoint — only the new
     # events flow; with a FRESH checkpoint everything replays.
     ckpt = str(tmp_path / "ckpt_resume")
-    batches: list[list] = []
 
-    def drain(collector):
-        events = read_event_stream(spark, outbox)
-        q = start_relay(
-            events,
-            database="testdb",
-            checkpoint_dir=ckpt,
-            available_now=True,
-            foreach_batch=lambda df, _e: collector.append([r.key for r in df.collect()]),
-        )
-        q.awaitTermination(120)
+    def keys(checkpoint):
+        return sorted(r.key for b in _relay_batches(spark, outbox, checkpoint) for r in b)
 
     _write_events(spark, [_event(1, "users", "INSERT", "{}", key="a")], outbox)
-    first: list[list] = []
-    drain(first)
-    assert sorted(k for b in first for k in b) == ["a"]
+    assert keys(ckpt) == ["a"]
 
     _write_events(spark, [_event(2, "users", "UPDATE", '{"x":1}', key="b")], outbox)
-    second: list[list] = []
-    drain(second)
-    assert sorted(k for b in second for k in b) == ["b"]  # "a" not redelivered
+    assert keys(ckpt) == ["b"]  # "a" not redelivered
 
     # a fresh checkpoint replays the whole outbox (at-least-once floor)
-    third: list[list] = []
-    events = read_event_stream(spark, outbox)
-    q = start_relay(
-        events,
-        database="testdb",
-        checkpoint_dir=str(tmp_path / "ckpt_fresh"),
-        available_now=True,
-        foreach_batch=lambda df, _e: third.append([r.key for r in df.collect()]),
+    assert keys(str(tmp_path / "ckpt_fresh")) == ["a", "b"]
+
+
+def _updates(spark, keys, table="t"):
+    """capture_changes events that raise ``v`` by one for each key of a
+    ``(k, v = 10 * k)`` table, captured from one partition."""
+    from pg2kafka_spark.operators.diff import capture_changes
+
+    changes = spark.createDataFrame(
+        [Row(op="UPDATE", before=Row(k=k, v=10 * k), after=Row(k=k, v=10 * k + 1)) for k in keys],
+        "op string, before struct<k:bigint,v:bigint>, after struct<k:bigint,v:bigint>",
+    ).coalesce(1)
+    return capture_changes(changes, table, "k", ["k", "v"])
+
+
+def _table(spark, n, partitions):
+    return spark.range(0, n, 1, partitions).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    q.awaitTermination(120)
-    assert sorted(k for b in third for k in b) == ["a", "b"]
 
 
 def test_snapshot_prefix_precedes_changes_in_drain(spark, outbox, tmp_path):
-    # O10 handoff: bootstrap writes the snapshot as the log prefix;
-    # a paged drain must deliver every SNAPSHOT before any change
-    # event (file order == commit order in the outbox log).
-    users = spark.createDataFrame([Row(uid=f"u{i}", name=f"n{i}") for i in range(5)])
-    bootstrap_outbox(users, outbox, "users", "uid")
-    _write_events(
-        spark,
-        [_event(10 + i, "users", "UPDATE", '{"x":1}', key=f"u{i}") for i in range(3)],
-        outbox,
-    )
-    seen: list[str] = []
-    events = read_event_stream(spark, outbox, max_files_per_trigger=1)
-
-    def collect_stmts(df, _epoch):
-        import json as _json
-
-        for r in df.collect():
-            seen.append(_json.loads(r.value)["statement"])
-
-    q = start_relay(
-        events,
-        database="testdb",
-        checkpoint_dir=str(tmp_path / "ckpt_prefix"),
-        available_now=True,
-        foreach_batch=collect_stmts,
-    )
-    q.awaitTermination(120)
-    assert len(seen) == 8
+    """O10 handoff with the package's default ids: a 64-row table
+    snapshotted from 4 partitions, then one UPDATE to key 57 captured
+    from one partition. One unbounded batch delivers the key's SNAPSHOT
+    before its UPDATE; one-file pages deliver every SNAPSHOT before any
+    change (file order == commit order in the outbox log)."""
+    bootstrap_outbox(_table(spark, 64, 4), outbox, "t", "k")
+    append_outbox(_updates(spark, [57]), outbox)
+    for page_files in (None, 1):
+        got = _relay_messages(spark, outbox, str(tmp_path / f"ckpt{page_files}"), page_files)
+        assert len(got) == 65
+        assert [(s, d) for _t, k, s, d in got if k == "57"] == [
+            ("SNAPSHOT", {"k": 57, "v": 570}),
+            ("UPDATE", {"v": 571}),
+        ]
+    seen = [s for *_, s, _d in got]
     first_change = seen.index("UPDATE")
     assert all(s == "SNAPSHOT" for s in seen[:first_change])
     assert all(s == "UPDATE" for s in seen[first_change:])
+
+
+def test_append_outbox_continues_above_the_persisted_high_water(spark, outbox):
+    """The first append into a fresh outbox gets the default ids
+    (partition << 33 | row); a second append, in a new call, reads the
+    high water back from the state file and numbers its rows above
+    every id of the first, in its frame's row order."""
+    import os
+
+    from pg2kafka_spark.streaming.relay import HIGH_WATER_FILE
+
+    def high_water():
+        with open(os.path.join(outbox, HIGH_WATER_FILE)) as f:
+            return int(f.read())
+
+    bootstrap_outbox(_table(spark, 8, 4), outbox, "first", "k")
+    first = [r.id for r in spark.read.parquet(outbox).collect()]
+    assert sorted(first) == [(p << 33) | r for p in range(4) for r in range(2)]
+    assert high_water() == max(first) + 1
+
+    append_outbox(_updates(spark, range(6), table="second"), outbox)
+    second = spark.read.parquet(outbox).filter(F.col("table_name") == "second")
+    by_key = {int(r.external_id): r.id for r in second.collect()}
+    assert min(by_key.values()) == max(first) + 1
+    assert [by_key[k] for k in range(6)] == sorted(by_key.values())
+    assert high_water() == max(by_key.values()) + 1
+
+
+def test_multi_file_append_is_published_in_id_order(spark, outbox, tmp_path):
+    """One append of 4 files, each key's versions spread over all of
+    them: the files land at the outbox root with strictly ascending
+    mtimes in part order, so a one-file-per-batch drain (a relay that
+    lists the outbox mid-publish sees a prefix of these files) delivers
+    every key's versions in id order."""
+    import os
+
+    from pg2kafka_spark.operators.snapshot import snapshot_events
+
+    n_keys, n_versions, n_files = 4, 8, 4
+    rows = [Row(k=f"k{k}", v=v) for v in range(n_versions) for k in range(n_keys)]
+    frame = spark.createDataFrame(spark.sparkContext.parallelize(rows, n_files))
+    append_outbox(snapshot_events(frame, "t", "k"), outbox)
+
+    parts = sorted(f for f in os.listdir(outbox) if f.endswith(".parquet"))
+    assert len(parts) == n_files
+    mtimes = [os.stat(os.path.join(outbox, f)).st_mtime_ns for f in parts]
+    assert mtimes == sorted(set(mtimes))
+
+    got = _relay_messages(spark, outbox, str(tmp_path / "ckpt"), page_files=1)
+    versions: dict[str, list[int]] = {}
+    for _t, k, _s, d in got:
+        versions.setdefault(k, []).append(d["v"])
+    assert versions == {f"k{k}": list(range(n_versions)) for k in range(n_keys)}
+
+
+def test_crashed_append_publishes_nothing_and_burns_its_ids(
+    spark, outbox, tmp_path, monkeypatch
+):
+    """A leftover ``_staging-*`` directory holding parquet parts, and an
+    append that dies at its first publish rename (after its high water
+    is persisted), deliver nothing; the next append numbers its rows
+    above the abandoned range, and per-key order still holds."""
+    import glob
+    import os
+
+    from pg2kafka_spark.operators.snapshot import snapshot_events
+    from pg2kafka_spark.streaming import relay
+
+    bootstrap_outbox(_table(spark, 8, 2), outbox, "t", "k")
+    snapshot_events(_table(spark, 8, 2), "planted", "k").write.parquet(
+        os.path.join(outbox, "_staging-planted")
+    )
+
+    def killed(_fs, _src, _dst):
+        raise OSError("killed mid-publish")
+
+    monkeypatch.setattr(relay, "_publish", killed)
+    with pytest.raises(OSError, match="killed mid-publish"):
+        append_outbox(_updates(spark, range(8), table="lost"), outbox)
+    monkeypatch.undo()
+    (abandoned,) = [
+        d for d in glob.glob(os.path.join(outbox, "_staging-*")) if not d.endswith("planted")
+    ]
+    abandoned_ids = [r.id for r in spark.read.parquet(abandoned).collect()]
+    assert len(abandoned_ids) == 8
+
+    append_outbox(_updates(spark, range(8)), outbox)
+    updates = spark.read.parquet(outbox).filter(F.col("statement") == "UPDATE")
+    assert min(r.id for r in updates.collect()) > max(abandoned_ids)
+
+    got = _relay_messages(spark, outbox, str(tmp_path / "ckpt"))
+    assert {t for t, *_ in got} == {"t"}
+    assert len(got) == 16
+    for k in range(8):
+        assert [s for _t, key, s, _d in got if key == str(k)] == ["SNAPSHOT", "UPDATE"]
 
 
 @pytest.mark.heavy_e2e
@@ -743,18 +834,10 @@ def _ingest_dirs(tmp_path):
     }
 
 
-def _write_wave(spark, rows, incoming_dir, idx):
-    import os
-
-    df = spark.createDataFrame(rows, "doc_id int, text string").coalesce(1)
-    path = f"{incoming_dir}/wave={idx}"
-    df.write.mode("overwrite").parquet(path)
-    # Deterministic trigger order for maxFilesPerTrigger=1: the file
-    # source orders by modification time — stamp each wave idx seconds
-    # apart so wave k is always batch k.
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            os.utime(os.path.join(root, f), (1700000000 + idx, 1700000000 + idx))
+def _write_wave(spark, rows, incoming_dir):
+    # one file per wave, published after the earlier waves: with
+    # maxFilesPerTrigger=1 wave k is always batch k
+    append_files(spark.createDataFrame(rows, "doc_id int, text string").coalesce(1), incoming_dir)
 
 
 @pytest.mark.heavy_e2e
@@ -772,8 +855,8 @@ def test_ingest_stream_equals_sequential_batches(spark, tmp_path):
     )
 
     d = _ingest_dirs(tmp_path)
-    for i, rows in enumerate(_INGEST_WAVES):
-        _write_wave(spark, rows, d["incoming"], i)
+    for rows in _INGEST_WAVES:
+        _write_wave(spark, rows, d["incoming"])
 
     schema = "doc_id int, text string"
     q = start_ingest_stream(
@@ -832,8 +915,8 @@ def test_ingest_replay_is_idempotent_against_grown_store(spark, tmp_path):
     )
 
     d = _ingest_dirs(tmp_path)
-    for i, rows in enumerate(_INGEST_WAVES):
-        _write_wave(spark, rows, d["incoming"], i)
+    for rows in _INGEST_WAVES:
+        _write_wave(spark, rows, d["incoming"])
     schema = "doc_id int, text string"
     q = start_ingest_stream(
         spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
@@ -877,8 +960,8 @@ def test_ingest_stream_bucketed_store_same_results(spark, tmp_path):
     from pg2kafka_spark.streaming.ingest import start_ingest_stream
 
     d = _ingest_dirs(tmp_path)
-    for i, rows in enumerate(_INGEST_WAVES):
-        _write_wave(spark, rows, d["incoming"], i)
+    for rows in _INGEST_WAVES:
+        _write_wave(spark, rows, d["incoming"])
     schema = "doc_id int, text string"
     try:
         q = start_ingest_stream(
@@ -916,7 +999,7 @@ def test_ingest_bucketed_store_survives_catalog_loss(spark, tmp_path):
     schema = "doc_id int, text string"
     tbl = "ingest_store_restart_test"
     try:
-        _write_wave(spark, _INGEST_WAVES[0], d["incoming"], 0)
+        _write_wave(spark, _INGEST_WAVES[0], d["incoming"])
         q = start_ingest_stream(
             spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
             max_files_per_trigger=1, available_now=True,
@@ -943,7 +1026,7 @@ def test_ingest_bucketed_store_survives_catalog_loss(spark, tmp_path):
                 1,
             ),
         )
-        _write_wave(spark, survivors + [near], d["incoming"], 1)
+        _write_wave(spark, survivors + [near], d["incoming"])
         q = start_ingest_stream(
             spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
             max_files_per_trigger=1, available_now=True,
@@ -1040,8 +1123,8 @@ def test_ingest_band_table_mode_same_results_and_restart(spark, tmp_path):
     schema = "doc_id int, text string"
     stbl, btbl = "ingest_band_store_t", "ingest_band_keys_t"
     try:
-        for i in (0, 1):
-            _write_wave(spark, _INGEST_WAVES[i], d["incoming"], i)
+        for rows in _INGEST_WAVES[:2]:
+            _write_wave(spark, rows, d["incoming"])
         q = start_ingest_stream(
             spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
             max_files_per_trigger=1, available_now=True,
@@ -1059,7 +1142,7 @@ def test_ingest_band_table_mode_same_results_and_restart(spark, tmp_path):
         spark.sql(f"DROP TABLE {stbl}")
         spark.sql(f"DROP TABLE {btbl}")
 
-        _write_wave(spark, _INGEST_WAVES[2], d["incoming"], 2)
+        _write_wave(spark, _INGEST_WAVES[2], d["incoming"])
         q = start_ingest_stream(
             spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
             max_files_per_trigger=1, available_now=True,
@@ -1197,13 +1280,10 @@ def _run_funnel_parity(spark, tmp_path, window_us):
         "user_id", "event_type", "ts"
     )
     src = str(tmp_path / "ev_src")
-    # four ts-quartile slices written as SEQUENTIAL appends: the file
-    # stream source orders files by modification time, so separate
-    # writes (not one multi-file write, whose files share an mtime and
-    # tie-break arbitrarily) replay the slices in event-time order —
-    # the outbox delivery contract the operator documents
-    import time as _time
-
+    # four ts-quartile slices published one after another: the file
+    # stream source orders files by modification time, so they replay
+    # in event-time order — the outbox delivery contract the operator
+    # documents
     bounds = ev.agg(
         *[F.expr(f"percentile(unix_micros(ts), {q})").alias(f"q{i}")
           for i, q in enumerate((0.25, 0.5, 0.75))]
@@ -1216,8 +1296,7 @@ def _run_funnel_parity(spark, tmp_path, window_us):
             & (F.lit(True) if cuts[i + 1] is None
                else F.unix_micros("ts") <= F.lit(int(cuts[i + 1])))
         )
-        sl.coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(0.05)
+        append_files(sl.coalesce(1), src)
 
     stream = spark.readStream.schema(
         spark.read.parquet(src).schema
@@ -1519,14 +1598,10 @@ def test_per_key_order_survives_parallel_sink(spark, outbox, tmp_path):
     producer — every key must land in exactly one sink partition per
     batch and its full event sequence, concatenated across batches,
     must be its outbox-id order."""
-    import os
-
     from pg2kafka_spark.operators.wire import ordered_for_delivery, to_wire
 
     n_keys, n_versions, n_chunks = 12, 24, 6
     per_chunk = n_versions // n_chunks
-    stamped: set[str] = set()
-    t0 = 1_700_000_000
     for c in range(n_chunks):
         rows = []
         for v in range(c * per_chunk, (c + 1) * per_chunk):
@@ -1539,12 +1614,6 @@ def test_per_key_order_survives_parallel_sink(spark, outbox, tmp_path):
         # 2 files per chunk: one key's versions inside a chunk can
         # span source partitions — the interleaving the sink must fix
         _write_events(spark, rows, outbox, n_files=2)
-        # pin the source's oldest-first file order to chunk order
-        for f in sorted(os.listdir(outbox)):
-            fp = os.path.join(outbox, f)
-            if f.endswith(".parquet") and fp not in stamped:
-                stamped.add(fp)
-                os.utime(fp, (t0 + c, t0 + c))
 
     captured: list[tuple[int, int, list]] = []
 
@@ -1632,8 +1701,6 @@ def test_funnel_state_stream_stages_matches_batch_4stage(spark, tmp_path):
         "user_id", "event_type", "ts"
     )
     src = str(tmp_path / "ev4_src")
-    import time as _time
-
     bounds = ev.agg(
         *[F.expr(f"percentile(unix_micros(ts), {q})").alias(f"q{i}")
           for i, q in enumerate((0.25, 0.5, 0.75))]
@@ -1646,8 +1713,7 @@ def test_funnel_state_stream_stages_matches_batch_4stage(spark, tmp_path):
             & (F.lit(True) if cuts[i + 1] is None
                else F.unix_micros("ts") <= F.lit(int(cuts[i + 1])))
         )
-        sl.coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(0.05)
+        append_files(sl.coalesce(1), src)
 
     stream = spark.readStream.schema(
         spark.read.parquet(src).schema
@@ -1711,9 +1777,6 @@ def _write_scattered_chunks(spark, outbox, n_keys, n_chunks, per_chunk):
     micro-batch span source partitions; file mtimes follow write order.
     Event ``v * n_keys + k`` is version ``v`` of key ``k<k>`` and
     carries ``{"v": id}``, with a NULL-key row per chunk."""
-    import os
-
-    stamped: set[str] = set()
     for c in range(n_chunks):
         rows = [
             _event(v * n_keys + k, "users", "UPDATE",
@@ -1723,11 +1786,6 @@ def _write_scattered_chunks(spark, outbox, n_keys, n_chunks, per_chunk):
         ]
         rows.append(_event(10_000 + c, "users", "INSERT", '{"v": null}'))
         _write_events(spark, rows, outbox, n_files=2)
-        for f in sorted(os.listdir(outbox)):
-            fp = os.path.join(outbox, f)
-            if f.endswith(".parquet") and fp not in stamped:
-                stamped.add(fp)
-                os.utime(fp, (1_700_000_000 + c, 1_700_000_000 + c))
 
 
 @pytest.mark.parametrize(

@@ -12,10 +12,13 @@ test-serial:
 
 # the quick lane for relay-core edits (event.py, operators/{snapshot,
 # diff,wire,compaction}.py, streaming/relay.py, sources.py,
-# __main__.py): the relay e2e, daemon and source/sink tests plus the
-# capture/diff/fold unit tests
+# __main__.py): the relay e2e, daemon and source/sink tests, the
+# capture/diff/fold unit tests, and the CDC oracle cases, which run
+# capture_changes, snapshot_events, topic_column and apply_change_feed
+# against DuckDB
 test-relay:
 	python -m pytest tests/test_streaming.py tests/test_deploy_surface.py tests/test_cdc_semantics.py tests/test_diff_fuzz.py -q -p no:cacheprovider
+	python -m pytest tests/test_oracle_parity.py -k "diff or replayed or wire or snapshot_part or topic_routing" -q -p no:cacheprovider
 
 # the analytics timing of every registered query (not the relay
 # benchmark; see perf): stdout is one JSON line, the full payload —

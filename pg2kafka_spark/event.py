@@ -20,7 +20,6 @@ STMT_SNAPSHOT = "SNAPSHOT"
 STMT_INSERT = "INSERT"
 STMT_UPDATE = "UPDATE"
 STMT_DELETE = "DELETE"
-STATEMENTS = (STMT_SNAPSHOT, STMT_INSERT, STMT_UPDATE, STMT_DELETE)
 
 #: Full envelope (outbox analog). ``id`` is LONG: at 100 TB a 32-bit
 #: sequence overflows; source offsets are 64-bit anyway.
@@ -36,9 +35,6 @@ EVENT_SCHEMA = T.StructType(
         T.StructField("processed", T.BooleanType(), nullable=False),
     ]
 )
-
-#: Wire fields, in wire order (README.md:76-86).
-WIRE_FIELDS = ("uuid", "external_id", "statement", "data", "created_at")
 
 EVENT_COLUMNS = tuple(f.name for f in EVENT_SCHEMA.fields)
 

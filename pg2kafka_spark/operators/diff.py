@@ -119,8 +119,9 @@ def capture_changes(
     append with defaults (39-41), the defaults set by
     :func:`~pg2kafka_spark.event.envelope`. Write the events with
     :func:`~pg2kafka_spark.streaming.relay.append_outbox`, which gives
-    them the log's next ids (``id_column`` only sets the id of a frame
-    written another way).
+    them the log's next ids. ``id_column`` sets the id of a frame that
+    is not appended, e.g. a feed folded straight back to state with
+    ``apply_change_feed`` in its source's version order.
 
     Scale: narrow map-only pipeline — preserves source partitioning, no
     shuffle; safe to run on an arbitrarily wide change feed.

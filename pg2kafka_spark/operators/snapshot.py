@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from pg2kafka_spark.event import STMT_SNAPSHOT, envelope
+from pg2kafka_spark.operators.diff import full_row_json
 
 
 def snapshot_events(
@@ -39,5 +40,5 @@ def snapshot_events(
     key = F.col(external_id_column).cast("string") if external_id_column is not None else None
     # row_to_json(rec) analog (sql/triggers.sql:66); nulls kept as
     # JSON null — an explicit reference behavior (sql/sql_test.go:92-110).
-    data = F.to_json(F.struct(*[F.col(c) for c in df.columns]), {"ignoreNullFields": "false"})
+    data = full_row_json(F.struct("*"), df.columns)
     return envelope(df, table_name, key, F.lit(STMT_SNAPSHOT), data)

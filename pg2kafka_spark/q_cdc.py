@@ -3,12 +3,43 @@ events table (see qreg docstring for determinism rules)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from pg2kafka_spark.catalog import load_table
+from pg2kafka_spark.event import STMT_INSERT, STMT_UPDATE
 from pg2kafka_spark.qreg import query
 
 PAGE_SIZE = 1000  # reference's hard-coded LIMIT (eventqueue/event_queue.go:20)
+
+
+def _versions(ev: DataFrame, cols: list[str]) -> DataFrame:
+    """Each user's successive ``events`` rows (by ``event_id``) as
+    ``capture_changes`` input: the first version is an INSERT, every
+    later one an UPDATE whose ``before`` image is the previous version
+    and whose ``after`` image is the current one. Both images carry
+    ``user_id`` (the key) and ``cols``."""
+    w = Window.partitionBy("user_id").orderBy("event_id")
+    row = F.struct("user_id", *cols)
+    before = F.lag(row).over(w)
+    op = F.when(before.isNull(), STMT_INSERT).otherwise(STMT_UPDATE)
+    return ev.select(
+        "user_id", "event_id", op.alias("op"), before.alias("before"), row.alias("after")
+    )
+
+
+def _captured_versions(ev: DataFrame, cols: list[str]) -> DataFrame:
+    """The outbox events the trigger emits for ``_versions(ev, cols)``
+    (``capture_changes``: full-row INSERT, changed-columns-only UPDATE,
+    no-op UPDATEs dropped), keyed back to ``user_id`` and ``event_id``."""
+    from pg2kafka_spark.operators.diff import capture_changes
+
+    feed = capture_changes(
+        _versions(ev, cols), "events", "user_id", cols, id_column=F.col("event_id")
+    )
+    user_id = F.col("external_id").cast(ev.schema["user_id"].dataType)
+    return feed.select(user_id.alias("user_id"), F.col("id").alias("event_id"), "statement", "data")
 
 
 # ---------------------------------------------------------------------------
@@ -137,29 +168,21 @@ def snapshot_part(spark: SparkSession, sf_dir: str) -> DataFrame:
 def update_diff_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O5/O6 relational flavor: changed-columns-only diff between
     successive per-key row versions (sql/triggers.sql:23-37), emitted
-    as typed nullable columns; rows where nothing changed are
-    suppressed. One shuffle (window by user_id).
+    as typed nullable columns over the UPDATE rows of ``_versions``;
+    rows where nothing changed are suppressed. One shuffle (window by
+    user_id).
     """
-    ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    staged = ev.select(
+    updates = _versions(load_table(spark, "events", sf_dir), ["event_type", "value"])
+
+    def changed(c: str) -> Column:
+        new = F.col("after").getField(c)
+        return F.when(~new.eqNullSafe(F.col("before").getField(c)), new)
+
+    diffed = updates.filter(F.col("op") == STMT_UPDATE).select(
         "user_id",
         "event_id",
-        "event_type",
-        "value",
-        F.lag("event_id").over(w).alias("prev_id"),
-        F.lag("event_type").over(w).alias("prev_type"),
-        F.lag("value").over(w).alias("prev_value"),
-    ).filter(F.col("prev_id").isNotNull())
-    diffed = staged.select(
-        "user_id",
-        "event_id",
-        F.when(~F.col("event_type").eqNullSafe(F.col("prev_type")), F.col("event_type")).alias(
-            "changed_event_type"
-        ),
-        F.when(~F.col("value").eqNullSafe(F.col("prev_value")), F.col("value")).alias(
-            "changed_value"
-        ),
+        changed("event_type").alias("changed_event_type"),
+        changed("value").alias("changed_value"),
     )
     return diffed.filter(
         F.col("changed_event_type").isNotNull() | F.col("changed_value").isNotNull()
@@ -192,34 +215,16 @@ def update_diff_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def update_diff_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O5/O6 in wire form: the changed-columns-only JSON payload the
-    trigger emits (sql/triggers.sql:23-37), built from consecutive
-    per-key row versions with the fragment-concat machinery in
-    ``operators/diff.py``, empty diffs suppressed. String columns
-    only in the oracle-checked payload (double→JSON formatting is not
-    engine-portable; numeric diffs are covered typed by
-    ``update_diff_events`` and fuzz-tested in unit tests)."""
-    from pg2kafka_spark.operators.diff import changed_columns_json
-
-    ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    staged = ev.select(
-        "user_id",
-        "event_id",
-        F.struct(
-            F.lag("event_type").over(w).alias("event_type"),
-            F.lag("props").over(w).alias("props"),
-        ).alias("__old"),
-        F.struct(F.col("event_type"), F.col("props")).alias("__new"),
-        F.lag("event_id").over(w).alias("prev_id"),
-    ).filter(F.col("prev_id").isNotNull())
-    diffed = staged.select(
-        "user_id",
-        "event_id",
-        changed_columns_json(
-            F.col("__old"), F.col("__new"), ["event_type", "props"]
-        ).alias("diff"),
+    trigger emits (sql/triggers.sql:23-37) — the UPDATE rows of
+    ``capture_changes`` over consecutive per-key row versions, so its
+    no-op suppression (``suppress_noops``) drops the empty diffs.
+    String columns only in the oracle-checked payload (double→JSON
+    formatting is not engine-portable; numeric diffs are covered typed
+    by ``update_diff_events`` and fuzz-tested in unit tests)."""
+    feed = _captured_versions(load_table(spark, "events", sf_dir), ["event_type", "props"])
+    return feed.filter(F.col("statement") == STMT_UPDATE).select(
+        "user_id", "event_id", F.col("data").alias("diff")
     )
-    return diffed.filter(F.col("diff") != "{}")
 
 
 @query(
@@ -291,23 +296,7 @@ def queue_lag_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-ts broadcast; exact percentile is the sf-scale spelling —
     at 100 TB switch to ``approx_percentile`` (the
     ``user_value_sketches`` trade, documented there)."""
-    ev = load_table(spark, "events", sf_dir)
-    now = ev.agg(F.max(F.unix_micros("ts")).alias("now_us"))
-    u = ev.filter(F.col("event_type") != "error").select(
-        F.unix_micros("ts").alias("ts_us")
-    )
-    return u.crossJoin(F.broadcast(now)).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_unprocessed"),
-        F.max(F.col("now_us") - F.col("ts_us"))
-        .cast("bigint")
-        .alias("oldest_age_us"),
-        F.round(F.expr("percentile(now_us - ts_us, 0.5)"), 4).alias(
-            "p50_age_us"
-        ),
-        F.round(F.expr("percentile(now_us - ts_us, 0.95)"), 4).alias(
-            "p95_age_us"
-        ),
-    )
+    return _queue_lag(spark, sf_dir, lambda age, q: F.round(F.percentile(age, q), 4))
 
 
 @query("queue_lag_stats_approx")
@@ -322,22 +311,28 @@ def queue_lag_stats_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact twin IS the oracle evidence, and
     tests/test_cdc_semantics.py pins every non-sketch column equal to
     it and both percentiles within rank tolerance."""
+    return _queue_lag(
+        spark, sf_dir, lambda age, q: F.percentile_approx(age, q, 10000).cast("double")
+    )
+
+
+def _queue_lag(
+    spark: SparkSession, sf_dir: str, percentile: Callable[[Column, float], Column]
+) -> DataFrame:
+    """The ``queue_lag_stats`` row with ``percentile(age, q)`` as the
+    p50/p95 estimator: count and oldest age of the unprocessed events,
+    ages against the newest event as the now-proxy."""
     ev = load_table(spark, "events", sf_dir)
     now = ev.agg(F.max(F.unix_micros("ts")).alias("now_us"))
     u = ev.filter(F.col("event_type") != "error").select(
         F.unix_micros("ts").alias("ts_us")
     )
+    age = F.col("now_us") - F.col("ts_us")
     return u.crossJoin(F.broadcast(now)).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_unprocessed"),
-        F.max(F.col("now_us") - F.col("ts_us"))
-        .cast("bigint")
-        .alias("oldest_age_us"),
-        F.expr("approx_percentile(now_us - ts_us, 0.5, 10000)")
-        .cast("double")
-        .alias("p50_age_us"),
-        F.expr("approx_percentile(now_us - ts_us, 0.95, 10000)")
-        .cast("double")
-        .alias("p95_age_us"),
+        F.max(age).cast("bigint").alias("oldest_age_us"),
+        percentile(age, 0.5).alias("p50_age_us"),
+        percentile(age, 0.95).alias("p95_age_us"),
     )
 
 
@@ -356,29 +351,31 @@ def queue_lag_stats_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def wire_encode_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O15+O16+O17 sink shape: the Kafka message projection —
-    ``key`` = external id, per-row ``topic``, ``value`` = wire JSON
-    with the row payload spliced in raw (never re-parsed). The
-    deterministic envelope subset only (uuid/created_at are generated
-    at capture; their wire formatting is covered by streaming tests).
-    Map-only: encode runs inside codegen next to the scan.
-    """
-    nation = load_table(spark, "nation", sf_dir)
-    payload = F.to_json(
-        F.struct("n_nationkey", "n_name", "n_regionkey"),
-        {"ignoreNullFields": "false"},
-    )
-    return nation.select(
-        F.col("n_nationkey").cast("string").alias("key"),
-        F.concat_ws(
-            ".", F.lit("pg2kafka"), F.lit("staging.testdb"), F.lit("nation")
-        ).alias("topic"),
+    """O15+O16+O17 sink shape: the Kafka message projection of the
+    nation table's SNAPSHOT events (``_snapshot_wire``), the row
+    payload spliced in raw (never re-parsed). Map-only: encode runs
+    inside codegen next to the scan."""
+    return _snapshot_wire(load_table(spark, "nation", sf_dir))
+
+
+def _snapshot_wire(nation: DataFrame) -> DataFrame:
+    """``snapshot_events`` of ``nation`` (keyed on ``n_nationkey``) as
+    sink rows: ``key``, ``topic`` from ``wire.topic_column`` (database
+    ``testdb``, namespace ``staging``) and a ``value`` of
+    ``external_id``, ``statement`` and the raw ``data`` payload. It is
+    only the deterministic subset of the wire value: ``uuid`` and
+    ``created_at`` are generated at capture, so no oracle can check
+    them (streaming tests cover their wire formatting)."""
+    from pg2kafka_spark.operators.snapshot import snapshot_events
+    from pg2kafka_spark.operators.wire import topic_column
+
+    events = snapshot_events(nation, "nation", "n_nationkey")
+    return events.select(
+        F.col("external_id").alias("key"),
+        topic_column("testdb", "staging").alias("topic"),
         F.concat(
-            F.lit('{"external_id":"'),
-            F.col("n_nationkey").cast("string"),
-            F.lit('","statement":"SNAPSHOT","data":'),
-            payload,
-            F.lit("}"),
+            F.lit('{"external_id":"'), "external_id", F.lit('","statement":"'), "statement",
+            F.lit('","data":'), "data", F.lit("}"),
         ).alias("value"),
     )
 
@@ -438,7 +435,8 @@ def wire_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def wire_rescued_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O15 SCHEMA DRIFT (r16): a drifted producer — upstream added
     two columns the consumer's pinned schema doesn't know — encoded
-    to the wire, decoded with ``from_wire(rescue=True)``, and the
+    to the wire (``_snapshot_wire``), decoded with
+    ``from_wire(rescue=True)``, and the
     RESCUED key/value pairs emitted one row each. The reference
     forwards added columns unasked (schemaless jsonb row_to_json,
     sql/triggers.sql:21-29, README.md:75-90); a pinned from_json
@@ -453,24 +451,14 @@ def wire_rescued_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pg2kafka_spark.operators.wire import from_wire
 
     nation = load_table(spark, "nation", sf_dir)
-    payload = F.to_json(
-        F.struct(
+    drifted = _snapshot_wire(
+        nation.select(
             "n_nationkey",
             "n_name",
             "n_regionkey",
             F.lower("n_name").alias("n_name_lc"),
             (F.col("n_nationkey") * F.col("n_nationkey")).alias("n_key_sq"),
-        ),
-        {"ignoreNullFields": "false"},
-    )
-    drifted = nation.select(
-        F.concat(
-            F.lit('{"external_id":"'),
-            F.col("n_nationkey").cast("string"),
-            F.lit('","statement":"SNAPSHOT","data":'),
-            payload,
-            F.lit("}"),
-        ).alias("value")
+        )
     )
     decoded = from_wire(
         drifted, "n_nationkey int, n_name string, n_regionkey int", rescue=True
@@ -637,52 +625,23 @@ def order_event_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def replayed_state_from_diffs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full CDC roundtrip: each user's event history is re-encoded as
-    a pg2kafka feed — first version a full-row INSERT, later versions
-    changed-columns-only UPDATE JSON (sql/triggers.sql:20-37), no-ops
-    suppressed — then folded back to current state with
+    """Full CDC roundtrip through the relay's own operators: each
+    user's event history is captured with ``capture_changes`` — first
+    version a full-row INSERT, later versions changed-columns-only
+    UPDATE JSON (sql/triggers.sql:20-37), no-ops suppressed — then
+    folded back to current state with
     ``operators/compaction.apply_change_feed``. The oracle computes
     final state directly from the raw table, so a hash match proves
-    diff encode → wire JSON → parse → ordered fold is lossless.
+    capture → payload JSON → parse → ordered fold is lossless.
     """
     from pg2kafka_spark.operators.compaction import apply_change_feed
-    from pg2kafka_spark.operators.diff import changed_columns_json
 
     cols = ["event_type", "props"]
-    ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    staged = ev.select(
-        "user_id",
-        "event_id",
-        F.struct(
-            F.lag("event_type").over(w).alias("event_type"),
-            F.lag("props").over(w).alias("props"),
-        ).alias("__old"),
-        F.struct("event_type", "props").alias("__new"),
-        F.lag("event_id").over(w).alias("prev_id"),
-    )
-    inserts = staged.filter(F.col("prev_id").isNull()).select(
-        "user_id",
-        "event_id",
-        F.lit("INSERT").alias("statement"),
-        F.to_json(F.col("__new")).alias("payload"),
-    )
-    updates = (
-        staged.filter(F.col("prev_id").isNotNull())
-        .select(
-            "user_id",
-            "event_id",
-            F.lit("UPDATE").alias("statement"),
-            changed_columns_json(F.col("__old"), F.col("__new"), cols).alias("payload"),
-        )
-        .filter(F.col("payload") != "{}")
-    )
-    feed = inserts.unionByName(updates)
     return apply_change_feed(
-        feed,
+        _captured_versions(load_table(spark, "events", sf_dir), cols),
         key_cols=["user_id"],
         version_col="event_id",
-        payload_col="payload",
+        payload_col="data",
         columns=cols,
     )
 

@@ -103,7 +103,8 @@ def append_outbox(events: DataFrame, outbox_dir: str) -> None:
     outbox starts at 0. The new high water is observed on the write and
     persisted before :func:`append_files` publishes any file, so a
     crash leaves hidden staging files or an unused id range, never a
-    reused id. One writer at a time: concurrent appends can reuse ids.
+    reused id; an empty frame assigns no id and publishes nothing. One
+    writer at a time: concurrent appends can reuse ids.
     """
     spark = events.sparkSession
     fs, root = _file_system(spark, outbox_dir)
@@ -117,9 +118,7 @@ def append_outbox(events: DataFrame, outbox_dir: str) -> None:
     )
 
     def persist_high_water() -> None:
-        max_id = observed.get["max_id"]
-        if max_id is not None:  # an empty append assigns no id
-            _replace_text(spark, fs, state, str(max_id + 1))
+        _replace_text(spark, fs, state, str(observed.get["max_id"] + 1))
 
     append_files(log, outbox_dir, before_publish=persist_high_water)
 
@@ -131,18 +130,29 @@ def append_files(
 ) -> None:
     """Append ``frame`` to the parquet file log under ``path`` — the
     writer twin of :func:`read_file_stream`. The frame is written under
-    a hidden ``_staging-<uuid>`` directory in ``path``; after
-    ``before_publish``, its part files get mtimes above every published
-    file, ascending in part (= partition) order, and are renamed into
-    ``path`` in that order. The file source lists visible names only,
-    oldest first, so a reader sees each append whole or as a prefix of
-    its parts, in write order.
+    a hidden ``_staging-<uuid>`` directory in ``path``; a write of no
+    rows publishes nothing. Otherwise, after ``before_publish``, its
+    part files get mtimes above every published file, ascending in
+    part (= partition) order, and are renamed into ``path`` in that
+    order. The file source lists visible names only, oldest first, so
+    a reader sees each append whole or as a prefix of its parts, in
+    write order. One writer at a time: every other ``_staging-*``
+    directory is a crashed append's, and is deleted.
     """
     spark = frame.sparkSession
     hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
     fs, root = _file_system(spark, path)
     staging = hadoop_path(root, f"_staging-{uuid.uuid4().hex}")
-    frame.write.parquet(staging.toString())
+    written = Observation()
+    frame.observe(written, F.count(F.lit(1)).alias("rows")).write.parquet(staging.toString())
+    listing = fs.listStatus(root)
+    for st in listing:
+        name = st.getPath().getName()
+        if name.startswith("_staging-") and name != staging.getName():
+            fs.delete(st.getPath(), True)
+    if written.get["rows"] == 0:
+        fs.delete(staging, True)
+        return
     if before_publish is not None:
         before_publish()
     parts = sorted(
@@ -151,7 +161,7 @@ def append_files(
     )
     published = [
         st.getModificationTime()
-        for st in fs.listStatus(root)
+        for st in listing
         if st.isFile() and _visible(st.getPath().getName())
     ]
     first_mtime = max([int(time.time() * 1000)] + [t + 1 for t in published])

@@ -219,6 +219,38 @@ def test_package_writes_the_outbox_only_through_append_outbox():
     assert not offenders
 
 
+def test_trigger_rules_live_in_event_and_operators():
+    """Outside ``event.py`` and ``operators/``, no module of the package
+    builds a diff payload (``changed_columns_json``), chooses a JSON
+    null rule (an ``ignoreNullFields`` option) or spells a statement or
+    the topic prefix as a string: the trigger's rules, the envelope and
+    the topic have one owner each. An ast scan, so SQL text (the
+    oracles) does not count."""
+    import ast
+    from pathlib import Path
+
+    import pg2kafka_spark
+
+    package = Path(pg2kafka_spark.__file__).parent
+    owned = {"INSERT", "UPDATE", "DELETE", "SNAPSHOT", "pg2kafka", "ignoreNullFields"}
+    offenders = []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package)
+        if rel.parts[0] == "operators" or rel.as_posix() == "event.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                called = ast.unparse(node.func).rsplit(".", 1)[-1]
+                hit = called == "changed_columns_json" or any(
+                    k.arg == "ignoreNullFields" for k in node.keywords
+                )
+            else:
+                hit = isinstance(node, ast.Constant) and node.value in owned
+            if hit:
+                offenders.append((rel.as_posix(), node.lineno))
+    assert not offenders
+
+
 def test_streaming_stores_share_one_directory_swap():
     """Only streaming/swap.py renames a store directory or names its
     .__old__ copy: every compaction, retrain and label fold goes

@@ -403,6 +403,7 @@ def test_crashed_append_publishes_nothing_and_burns_its_ids(
     assert len(abandoned_ids) == 8
 
     append_outbox(_updates(spark, range(8)), outbox)
+    assert not glob.glob(os.path.join(outbox, "_staging-*"))
     updates = spark.read.parquet(outbox).filter(F.col("statement") == "UPDATE")
     assert min(r.id for r in updates.collect()) > max(abandoned_ids)
 
@@ -411,6 +412,28 @@ def test_crashed_append_publishes_nothing_and_burns_its_ids(
     assert len(got) == 16
     for k in range(8):
         assert [s for _t, key, s, _d in got if key == str(k)] == ["SNAPSHOT", "UPDATE"]
+
+
+def test_empty_append_publishes_nothing(spark, outbox):
+    """A captured batch of only no-op UPDATEs has no rows: appending it
+    publishes no file, and the high water stays where it was."""
+    import os
+    from pathlib import Path
+
+    from pg2kafka_spark.operators.diff import capture_changes
+    from pg2kafka_spark.streaming.relay import HIGH_WATER_FILE
+
+    bootstrap_outbox(_table(spark, 8, 2), outbox, "t", "k")
+    files = sorted(os.listdir(outbox))
+    high_water = Path(outbox, HIGH_WATER_FILE).read_text()
+    noop = spark.createDataFrame(
+        [Row(op="UPDATE", before=Row(k=1, v=10), after=Row(k=1, v=10))],
+        "op string, before struct<k:bigint,v:bigint>, after struct<k:bigint,v:bigint>",
+    )
+    for _ in range(2):
+        append_outbox(capture_changes(noop, "t", "k", ["k", "v"]), outbox)
+    assert sorted(os.listdir(outbox)) == files
+    assert Path(outbox, HIGH_WATER_FILE).read_text() == high_water
 
 
 @pytest.mark.heavy_e2e

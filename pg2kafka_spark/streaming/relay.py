@@ -62,7 +62,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from pg2kafka_spark.event import EVENT_COLUMNS, EVENT_SCHEMA
+from pg2kafka_spark.event import EVENT_COLUMNS, EVENT_SCHEMA, by_reference
 from pg2kafka_spark.operators.snapshot import snapshot_events
 from pg2kafka_spark.operators.wire import ordered_for_delivery, wire_columns
 
@@ -111,8 +111,11 @@ def append_outbox(events: DataFrame, outbox_dir: str) -> None:
     state = spark._jvm.org.apache.hadoop.fs.Path(root, HIGH_WATER_FILE)
     high_water = int(_read_text(spark, fs, state)) if fs.exists(state) else 0
     observed = Observation("outbox_high_water")
+    # cast: a small high water is an INT literal, which compiles apart from a LONG one
     log = (
-        events.withColumn("id", F.lit(high_water) + F.monotonically_increasing_id())
+        events.withColumn(
+            "id", by_reference(F.lit(high_water).cast("long")) + F.monotonically_increasing_id()
+        )
         .select(*EVENT_COLUMNS)
         .observe(observed, F.max("id").alias("max_id"))
     )

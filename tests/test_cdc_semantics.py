@@ -6,6 +6,8 @@ SURVEY.md §5 layer 2/3 translated to in-memory DataFrames.
 from __future__ import annotations
 
 import json
+import re
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,6 +40,38 @@ def test_snapshot_products(spark):
     assert list(ev[0].asDict()) == list(EVENT_COLUMNS)
     assert all(not r.processed for r in ev)
     assert all(r.uuid for r in ev)
+
+
+UUID_V4 = re.compile(r"^[0-9a-f]{8}-[0-9a-f]{4}-4[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}$")
+
+
+def test_envelope_uuid_and_created_at_per_call(spark):
+    """Each event gets its own version-4 uuid, distinct within a call
+    and across calls; each call stamps all its events with one
+    ``created_at``, read from the clock during the call; executing one
+    frame twice gives the same uuids (Spark's per-partition seeded
+    generator, which a re-executed task relies on)."""
+    table = spark.range(0, 200, 1, 4).select(F.col("id").alias("k"))
+
+    def call():
+        before = time.time_ns() // 1000
+        frame = snapshot_events(table, "t", "k").select(
+            "uuid", F.unix_micros("created_at").alias("at")
+        )
+        return frame, before, time.time_ns() // 1000
+
+    first, before, after = call()
+    rows = first.collect()
+    assert [r.uuid for r in first.collect()] == [r.uuid for r in rows]
+    assert all(UUID_V4.match(r.uuid) for r in rows)
+    assert len({r.uuid for r in rows}) == len(rows) == 200
+    (at,) = {r.at for r in rows}
+    assert before <= at <= after
+
+    second, *_ = call()
+    again = second.collect()
+    assert not {r.uuid for r in again} & {r.uuid for r in rows}
+    assert len({r.at for r in again}) == 1
 
 
 def test_snapshot_no_key_column(spark):

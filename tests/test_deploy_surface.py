@@ -251,6 +251,45 @@ def test_trigger_rules_live_in_event_and_operators():
     assert not offenders
 
 
+def test_per_call_values_enter_the_code_only_through_by_reference():
+    """No module of the package calls ``current_timestamp`` or Spark's
+    ``uuid()`` (as a function or in SQL text) outside
+    ``event.by_reference``: both are spelled into the generated Java as
+    per-call literals, so every call of a plan carrying them compiles
+    its classes anew. An ast scan, so docstrings do not count."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import pg2kafka_spark
+
+    package = Path(pg2kafka_spark.__file__).parent
+    per_call = ("current_timestamp", "uuid")
+    offenders = []
+    for path in sorted(package.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        inside_helper = {
+            id(node)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "by_reference"
+            for node in ast.walk(fn)
+        }
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call) or id(call) in inside_helper:
+                continue
+            sql = [
+                a.value for a in [*call.args, *(k.value for k in call.keywords)]
+                if isinstance(a, ast.Constant) and isinstance(a.value, str)
+            ]
+            if ast.unparse(call.func).rsplit(".", 1)[-1] in per_call or any(
+                re.search(rf"\b{name}\s*\(", text, re.IGNORECASE)
+                for text in sql
+                for name in per_call
+            ):
+                offenders.append((path.relative_to(package).as_posix(), call.lineno))
+    assert not offenders
+
+
 def test_streaming_stores_share_one_directory_swap():
     """Only streaming/swap.py renames a store directory or names its
     .__old__ copy: every compaction, retrain and label fold goes

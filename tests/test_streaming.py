@@ -436,6 +436,48 @@ def test_empty_append_publishes_nothing(spark, outbox):
     assert Path(outbox, HIGH_WATER_FILE).read_text() == high_water
 
 
+def test_snapshot_and_capture_compile_once_per_session(spark, outbox, tmp_path):
+    """The envelope's per-call values (uuid seed, ``created_at``) and the
+    append's high water stay out of the generated Java, so a second
+    ``bootstrap_outbox`` into a fresh outbox, and a second
+    ``append_outbox(capture_changes(...))`` above a new high water,
+    compile no class (Spark's ``CodegenMetrics`` count does not move).
+    The inputs are parquet: a ``createDataFrame`` frame is evaluated on
+    the driver and never compiles."""
+    from pathlib import Path
+
+    from pg2kafka_spark.operators.diff import capture_changes
+    from pg2kafka_spark.streaming.relay import HIGH_WATER_FILE
+
+    table, changes = str(tmp_path / "table"), str(tmp_path / "changes")
+    _table(spark, 64, 4).write.parquet(table)
+
+    def image(dv):
+        return F.struct(F.col("k"), (F.col("v") + dv).alias("v"))
+
+    _table(spark, 64, 4).select(
+        F.lit("UPDATE").alias("op"), image(0).alias("before"), image(1).alias("after")
+    ).write.parquet(changes)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles(call) -> int:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        call()
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    snapshots, appends, high_waters = [], [], []
+    for i in range(2):
+        fresh = str(tmp_path / f"snapshot{i}")
+        snapshots.append(compiles(
+            lambda: bootstrap_outbox(spark.read.parquet(table), fresh, "t", "k")))
+    for _ in range(2):
+        appends.append(compiles(lambda: append_outbox(
+            capture_changes(spark.read.parquet(changes), "t", "k", ["k", "v"]), outbox)))
+        high_waters.append(Path(outbox, HIGH_WATER_FILE).read_text())
+    assert high_waters[0] != high_waters[1]
+    assert (snapshots[1], appends[1]) == (0, 0), (snapshots, appends)
+
+
 @pytest.mark.heavy_e2e
 def test_stream_stream_join_within_matches_batch(spark, tmp_path):
     from pg2kafka_spark.streaming.windows import join_streams_within

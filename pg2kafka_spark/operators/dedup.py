@@ -1275,12 +1275,11 @@ def incremental_near_dup(
     the default.
 
     ``store_bands`` IS that maintained table: an (``id_col``, band,
-    bkey) frame of the store's already-computed band keys (the
-    streaming ingest loop appends survivors' keys each batch,
-    streaming/ingest.py). When given, the store's TEXT is touched
-    only for verification — and only for the docs the band join
-    actually hit (a semi-join restricts the shingle pass to candidate
-    store ids) — so per-batch work is O(batch + band table join +
+    bkey) frame of the store's already-computed band keys (an ingest
+    job appends survivors' keys each batch). When given, the store's
+    TEXT is touched only for verification — and only for the docs the
+    band join actually hit (a semi-join restricts the shingle pass to
+    candidate store ids) — so per-batch work is O(batch + band table join +
     matching docs), not O(store text). Band rows for ids absent from
     ``store`` (the crash-replay phantom window) are harmless: the
     verification join finds no store shingles, so the pair drops out.

@@ -8,9 +8,7 @@ stage k filters events to one type AT THE SCAN (pushed predicate),
 reduces to a user-sized min, and joins the previous stage's frame on
 the SAME uniform user key, so frames only shrink down the funnel and
 every exchange hashes one key. No windows, no per-user sorts;
-timestamps compare as integer epoch-µs (the qreg rule). The streaming
-twin keeps one scalar per stage per live user
-(streaming/windows.funnel_state_stream).
+timestamps compare as integer epoch-µs (the qreg rule).
 
 Consumer-side analytics over the reference's CDC feed — the outbox
 delivers the events (eventqueue/event_queue.go:60-75); the reference

@@ -90,9 +90,9 @@ def load_ivf_topk(
     size. Results are bit-identical to ``ivf_topk`` over the same
     corpus (deterministic training + assignment).
 
-    ``absorb_duplicates=True`` is the serve mode for a MAINTAINED
-    index (streaming/annindex.py): an at-least-once replayed ingest
-    batch appends duplicate (id, vec) rows, and ranking duplicates
+    ``absorb_duplicates=True`` is the serve mode for an index
+    accreted by ``streaming/annindex.index_ingest_batch``: an
+    at-least-once replayed batch appends duplicate (id, vec) rows, and ranking duplicates
     would surface the same id twice in a top-k. A (query, id)
     max-aggregate before the ranking window collapses them —
     value-identical when no replay happened (max over one row), one
@@ -177,8 +177,6 @@ def save_ivf_pq_index(
     vec_col: str = "embedding",
     train_sample: int | None = None,
     train_corpus: DataFrame | None = None,
-    keep_raw: bool = False,
-    manifest_source: str | None = None,
 ) -> None:
     """The COMPRESSED index at rest (FAISS ``IVFx,PQy`` storage
     shape): coarse centroids + PQ codebooks (both tiny tables) and a
@@ -186,35 +184,13 @@ def save_ivf_pq_index(
     ``m·log2(n_codes)`` bits per vector that make a billion-vector
     index fit storage budgets; the raw vectors are NOT stored.
 
-    ``keep_raw=True`` ALSO writes ``raw/`` — ``(id, vec)``
-    cid-partitioned, the uncompressed side store that makes the index
-    self-retrainable: PQ code words are not invertible, so without it
-    a drift-gated retrain must re-read the source corpus
-    (``streaming/annindex.retrain_pq_index``). The trade is explicit:
-    raw costs the full ``dim × 8`` bytes/vector the codes avoided
-    (e.g. 64-dim doubles = 512 B vs 8 B of codes — the serving index
-    stays tiny; the side store is cold storage the serve path never
-    reads, only retrain does). Skip it when the source corpus is
-    durably retained elsewhere.
-
-    ``manifest_source`` (r17) is the cheap alternative for exactly
-    that durably-retained case: write ``manifest/`` — ``(id,
-    source_path)`` POINTER rows naming where each vector's source row
-    lives — instead of the vectors themselves. A drift-gated retrain
-    then re-reads only the referenced source files and semi-joins the
-    manifest ids (``retrain_pq_index``), costing ~a path string per
-    vector at rest instead of ``dim × 8`` bytes, at the price of a
-    hard dependency on the source still existing (a missing path
-    fails the retrain loudly; it never silently shrinks the corpus).
-    The ingest stream accretes manifest rows in lockstep using the
-    batch files' own paths (``_metadata.file_path``).
-
     ``train_corpus`` (default: the corpus itself) trains BOTH the
     coarse quantizer and every subspace codebook on a different frame
-    — the incremental-ingest mode's one-pass twin: the maintenance
-    loop (streaming/annindex.py) codes arriving batches against
-    frozen models, and an index accreted that way must equal this
-    build with ``train_corpus`` = the bootstrap store."""
+    — the incremental-ingest mode's one-pass twin: the batch fold
+    (``streaming/annindex.pq_index_ingest_batch``) codes arriving
+    batches against frozen models, and an index accreted that way
+    must equal this build with ``train_corpus`` = the bootstrap
+    store."""
     from pg2kafka_spark.operators.similarity import pq_codebooks
 
     tr = train_corpus if train_corpus is not None else corpus
@@ -225,9 +201,9 @@ def save_ivf_pq_index(
         tr, m, sub_dim, n_codes, iters, id_col, vec_col, train_sample
     )
     # r19: cell assignment and PQ coding are both per-row functions of
-    # the broadcast models, so each write is ONE map pass over the
-    # corpus — previously codes ⋈ cells (and raw ⋈ cells) were
-    # id-keyed joins, each an exchange carrying the code/raw payload
+    # the broadcast models, so the cells write is ONE map pass over the
+    # corpus — previously codes ⋈ cells was an id-keyed join, an
+    # exchange carrying the code payload
     base = (
         corpus.select(
             F.col(id_col), as_double(F.col(vec_col)).alias("__dv")
@@ -242,16 +218,6 @@ def save_ivf_pq_index(
     base.crossJoin(F.broadcast(codebook_array(books))).select(
         F.col(id_col), pq_codes_expr(m, sub_dim).alias("codes"), "cid"
     ).write.mode("overwrite").partitionBy("cid").parquet(f"{path}/cells")
-    if keep_raw:
-        base.select(
-            F.col(id_col), F.col("__dv").alias("vec"), "cid"
-        ).write.mode("overwrite").partitionBy("cid").parquet(
-            f"{path}/raw"
-        )
-    if manifest_source is not None:
-        corpus.select(
-            F.col(id_col), F.lit(manifest_source).alias("source_path")
-        ).write.mode("overwrite").parquet(f"{path}/manifest")
 
 
 def load_ivf_pq_topk(

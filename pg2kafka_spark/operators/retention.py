@@ -11,8 +11,7 @@ same shape: every query re-aggregates the outbox table
 through per query).
 
 The standard fix is a per-ingest-day pre-aggregate, maintained by the
-daily ingest job (same loop precedent as streaming/ingest.py's
-self-maintaining dedup store):
+daily ingest job:
 
 * ``first_seen_update`` folds a day's events into the user→first-event
   table — O(day) work, one user-keyed shuffle of user-sized frames;

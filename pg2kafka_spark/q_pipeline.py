@@ -2010,10 +2010,9 @@ def _ensure_components_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the MAINTAINED label store once per session per
     source — bootstrap on yesterday's pairs (both ids < 300, the same
     split the incremental query uses), then fold today's pairs in two
-    batches through ``fold_pairs_batch`` — the exact per-batch work
-    the streaming loop (streaming/graphstore.py) does, pinned equal
-    to it by tests/test_graph.py. Same source-identity keying and
-    _COMPLETE-marker skip gate as the ANN stores (r16 conventions)."""
+    batches through ``streaming/graphstore.fold_pairs_batch``. Same
+    source-identity keying and _COMPLETE-marker skip gate as the ANN
+    stores (r16 conventions)."""
     import os
     import tempfile
 
@@ -2074,8 +2073,8 @@ def near_dup_components_served(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The MAINTAINED label store SERVED (r16): component labels read
-    from the at-rest table the streaming fold keeps up
-    (streaming/graphstore.py) — bootstrap on yesterday's pairs, two
+    from the at-rest table ``_ensure_components_store`` builds with
+    ``fold_pairs_batch`` — bootstrap on yesterday's pairs, two
     batch folds for today's arrivals — this query pays only the serve
     path: one labels scan + the isolate join. Hash-checked against
     the FULL-graph recursive closure, which proves the whole loop
@@ -2158,8 +2157,8 @@ def near_dup_canonical_served(
     """Canonical-document selection SERVED from the maintained label
     store (r17, r16 verdict item 6): the keep-list decision a daily
     pipeline actually reads — ``canonical_per_component`` composed
-    over the at-rest labels the streaming fold keeps up
-    (streaming/graphstore.py), so the serve pays one labels scan, the
+    over the at-rest labels ``_ensure_components_store`` serves, so
+    the serve pays one labels scan, the
     isolate join, and ONE window pass on component_id; the historical
     pair log is never touched. Same rank spelling as
     ``near_dup_canonical`` and the same recursive-closure oracle, so
@@ -3409,11 +3408,10 @@ def _ensure_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the MAINTAINED at-rest IVF index once per session
     per source — bootstrap on the store subset (vec_id < 400, the
     same split the incremental query uses), then accrete the
-    remaining vectors through the maintenance fold
+    remaining vectors through the batch fold
     (streaming/annindex.index_ingest_batch) in two batches, each
     appending to the cid-partitioned cells table and logging a drift
-    row — the exact per-batch work the streaming loop does, pinned
-    equal to it by tests/test_annindex.py. Keyed by the SOURCE's
+    row (``drift_stats``). Keyed by the SOURCE's
     identity (name/size/mtime_ns) so regenerated testdata can never
     serve a stale index — same convention as the retention store."""
     import os
@@ -3483,7 +3481,7 @@ def ann_ivf_served_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells without retraining — but computed the production way: the
     index lives on disk as the cid-partitioned
     ``operators/index_store.py`` layout, batches accreted to it by
-    the maintenance fold (streaming/annindex.py), and this query only
+    ``streaming/annindex.index_ingest_batch``, and this query only
     pays the SERVE path — broadcast centroid probe + a cells scan
     partition-pruned to the probed lists, duplicates from
     at-least-once replays absorbed before ranking. Hash-checked
@@ -3639,8 +3637,8 @@ _DRIFT_CUT = 250  # snapshot split: OLD = vec_id < cut, NEW = the rest
 def embedding_cell_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-DISTRIBUTION drift between two corpus snapshots,
     measured through the frozen quantizer — the registered-query form
-    of the maintenance loop's per-batch drift log
-    (streaming/annindex.py): train the portable k-means on the OLD
+    of the served index's per-batch drift log
+    (streaming/annindex.drift_stats): train the portable k-means on the OLD
     snapshot, assign BOTH snapshots to its cells, and report each
     cell's population share then vs now in exact integer micros.
     A cell whose share moved is where the corpus changed; the max

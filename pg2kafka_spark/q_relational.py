@@ -98,8 +98,7 @@ def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregation (batch analog of the streaming
-    windowed agg, SURVEY §7 M4): event-time bucketing + hash agg.
+    """Tumbling-window aggregation: event-time bucketing + hash agg.
     Hour emitted as a formatted string so ns-vs-µs parquet precision
     cannot affect the comparison.
     """
@@ -366,9 +365,9 @@ def daily_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     on their first active day, RETURNING after. Same active-user-day
     frame as the retention family (one events-sized distinct), a
     user-keyed min for the first day (the first_seen fold), and a
-    day-keyed conditional rollup — at scale the first-seen join is
-    the same maintained table streaming/retention.py keeps, so the
-    daily job pays only the day's pairs."""
+    day-keyed conditional rollup — at scale the first-seen join reads
+    the same maintained table `_ensure_retention_store` serves
+    (`first_seen`), so the daily job pays only the day's pairs."""
     ev = load_table(spark, "events", sf_dir)
     du = ev.select(
         F.expr("unix_micros(ts) div 86400000000").cast("bigint").alias("day"),
@@ -2937,10 +2936,10 @@ def weekly_retention_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ensure_retention_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the maintained retention state once per session per
-    sf_dir — the tables `start_retention_stream`
-    (streaming/retention.py) keeps up per micro-batch, backfilled here
-    in one pass (the nightly-backfill spelling; the day-by-day and
-    streaming folds are pinned equal to it by tests/test_retention.py).
+    sf_dir — the tables the day-by-day fold of operators/retention.py
+    (`first_seen_update`, `retention_day_partial`) keeps up, backfilled
+    here in one pass (the nightly-backfill spelling; the day-by-day
+    fold is pinned equal to it by tests/test_retention.py).
     Same idempotence convention as `_ensure_bucketed_tables`: skip
     only when the store's `_COMPLETE` marker (written LAST, removed
     before any rebuild — r17, the ANN-store convention) and data
@@ -3045,8 +3044,8 @@ def _build_retention_store(
 )
 def weekly_retention_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The retention triangle SERVED from the maintained partials
-    table — the read path of the streaming maintenance loop
-    (streaming/retention.py). Where `weekly_retention_incremental`
+    table that `_ensure_retention_store` builds. Where
+    `weekly_retention_incremental`
     demonstrates the pre-aggregate's ALGEBRA by rebuilding partials
     in-query, this query reads the at-rest table the maintenance job
     keeps up and only pays `retention_from_partials`: a

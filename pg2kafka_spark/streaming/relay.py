@@ -46,11 +46,9 @@ one task, the shape AQE would have coalesced the shuffle into anyway.
 Above the floor, ``spark.sql.shuffle.partitions`` sizes the keyed
 exchange.
 
-The relay and every maintained-state loop start their streams here:
-:func:`read_file_stream`, :func:`start_stream` (which first scrubs a
-checkpoint with no committed progress, so a kill during the first
-offset write never blocks the restart) and :func:`await_drain`; its
-writer twin :func:`append_files` publishes a frame to a file log.
+:func:`start_relay` is the package's one stream. Before it starts, it
+scrubs a checkpoint with no committed progress, so a kill during the
+first offset write never blocks the restart.
 """
 
 from __future__ import annotations
@@ -131,8 +129,8 @@ def append_files(
     path: str,
     before_publish: Callable[[], None] | None = None,
 ) -> None:
-    """Append ``frame`` to the parquet file log under ``path`` — the
-    writer twin of :func:`read_file_stream`. The frame is written under
+    """Append ``frame`` to the parquet file log under ``path``, in the
+    order a file stream source reads it. The frame is written under
     a hidden ``_staging-<uuid>`` directory in ``path``; a write of no
     rows publishes nothing. Otherwise, after ``before_publish``, its
     part files get mtimes above every published file, ascending in
@@ -212,20 +210,6 @@ def _replace_text(spark: SparkSession, fs, path, text: str) -> None:
     ).rename(tmp, path, overwrite)
 
 
-def read_file_stream(
-    spark: SparkSession,
-    path: str,
-    schema,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Parquet files landing under ``path`` as a stream of ``schema``
-    rows; ``max_files_per_trigger`` bounds each micro-batch."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    return reader.parquet(path)
-
-
 def read_event_stream(
     spark: SparkSession,
     outbox_dir: str,
@@ -239,47 +223,10 @@ def read_event_stream(
     ``max_files_per_trigger`` bounds each micro-batch like the
     reference's ``LIMIT 1000`` page bounds a drain iteration.
     """
-    return read_file_stream(spark, outbox_dir, EVENT_SCHEMA, max_files_per_trigger)
-
-
-def start_stream(
-    stream: DataFrame,
-    process: Callable[[DataFrame, int], None],
-    checkpoint_dir: str | None,
-    available_now: bool = False,
-    processing_time: str | None = None,
-    query_name: str | None = None,
-) -> StreamingQuery:
-    """Run ``process`` on every micro-batch of ``stream``, after
-    :func:`scrub_virgin_checkpoint` on ``checkpoint_dir``.
-    ``available_now`` drains what is present and stops; otherwise the
-    query runs until stopped, every ``processing_time`` if given."""
-    if checkpoint_dir is not None:
-        scrub_virgin_checkpoint(stream.sparkSession, checkpoint_dir)
-    writer = stream.writeStream.foreachBatch(process)
-    if query_name is not None:
-        writer = writer.queryName(query_name)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def await_drain(query: StreamingQuery, timeout_s: float, what: str) -> None:
-    """Wait up to ``timeout_s`` for an availableNow ``query``; past it,
-    stop the query and raise ``TimeoutError``. A maintenance cycle must
-    not compact, retrain or serve over a still-running drain: a staged
-    swap drops the rows appended in its read-to-swap window."""
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"{what} exceeded {timeout_s}s; stream stopped and the rest "
-            "of the cycle skipped — re-run the cycle (the drain is "
-            "checkpointed, so no progress is lost)"
-        )
+    reader = spark.readStream.schema(EVENT_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
+    return reader.parquet(outbox_dir)
 
 
 def start_relay(
@@ -327,8 +274,8 @@ def start_relay(
 
     ``available_now=True`` = drain-the-backlog-then-stop (O19's start
     phase); a ``processing_time`` trigger = the steady-state loop.
-    :func:`start_stream` scrubs a ``checkpoint_dir`` with no committed
-    progress (a kill during the first offset write) before the start.
+    :func:`scrub_virgin_checkpoint` runs on ``checkpoint_dir`` before
+    the start.
 
     ``ordered`` accepts only ``True``: it stays because perfbench still
     passes ``ordered=True``, and goes with perfbench's next change.
@@ -349,20 +296,26 @@ def start_relay(
             return
         wire.write.format(sink).options(**(kafka_options or {})).save()
 
-    return start_stream(
-        events, _deliver, checkpoint_dir, available_now, processing_time, query_name
-    )
+    writer = events.writeStream.foreachBatch(_deliver).queryName(query_name)
+    if checkpoint_dir is not None:
+        scrub_virgin_checkpoint(events.sparkSession, checkpoint_dir)
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time is not None:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
 
 
 def scrub_virgin_checkpoint(spark: SparkSession, checkpoint_dir: str) -> int:
     """Remove orphan metadata-log temp files from a checkpoint that has
     made NO committed progress; returns how many files were removed.
-    :func:`start_stream` runs it before every query start.
+    :func:`start_relay` runs it before every query start.
 
-    A ``q.stop()`` (a maintenance cycle's drain timeout) or a kill that
-    interrupts the very FIRST offset write leaves only a
-    ``.0.<uuid>.tmp`` behind in ``<checkpoint>/offsets``: the batch
-    never committed, yet Spark 4.x's restart validation
+    A ``q.stop()`` or a kill that interrupts the very FIRST offset
+    write leaves only a ``.0.<uuid>.tmp`` behind in
+    ``<checkpoint>/offsets``: the batch never committed, yet Spark
+    4.x's restart validation
     (MicroBatchExecution.verifyNewCheckpointDirectory) sees a non-empty
     directory for what the empty offset log says is a NEW checkpoint
     and refuses to start with

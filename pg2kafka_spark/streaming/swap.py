@@ -1,7 +1,8 @@
-"""The one crash-safe directory swap every maintained store uses.
+"""The crash-safe directory swap of the label store's fold
+(streaming/graphstore.py).
 
-A compaction, retrain or label fold writes its result to a staged
-directory, then swaps it in for the live one. The two renames leave a
+A fold writes its result to a staged directory, then swaps it in for
+the live one. The two renames leave a
 window where the live directory is missing, so a sentinel file
 brackets them: a reader that finds the sentinel raises
 (:func:`refuse_mid_swap`) instead of reading a missing store as an
@@ -42,8 +43,7 @@ def swap_in(staging: str, target: str, sentinel: str) -> None:
 def refuse_mid_swap(sentinel: str, store: str, state: str) -> None:
     """Raise when ``sentinel`` is on disk: the store named ``store``
     may be missing or half-swapped, and must be neither read as empty
-    nor appended to. ``state`` words the error (``"mid-swap"``,
-    ``"mid-compaction"``, ``"mid-retrain"``)."""
+    nor appended to. ``state`` words the error (``"mid-swap"``)."""
     if os.path.exists(sentinel):
         raise RuntimeError(
             f"{store} is {state} (sentinel present) — a swap into it is "

@@ -8,15 +8,15 @@ from pg2kafka_spark.session import get_spark
 
 # A plain `pytest tests/` run is ONE sequential process, often under a
 # wall budget; on a 4x-degraded host the full run overran such a
-# budget with zero failures. The multi-minute streaming/store-
-# maintenance e2e tests carry ~half the sequential wall, so they sit
-# behind this env-gated marker: skipped (visibly, with a reason) in a
-# plain `pytest tests/` run, always executed by tools/run_tests.sh
-# (which exports the env, so `make test` has full coverage). The
-# default run keeps every operator's functional tests plus the full
-# 191-query oracle-parity sweep; the skipped e2es' serve-path surface is still
-# exercised by the parity rows that build and serve the same at-rest
-# stores (ann_ivf_*_served_incremental, near_dup_components_served,
+# budget with zero failures. A few long store and tokenizer e2e tests
+# (production-size BPE, index round trips, the store-bands dedup plan
+# and the label-store rebuild) sit behind this env-gated marker:
+# skipped (visibly, with a reason) in a plain `pytest tests/` run,
+# always executed by tools/run_tests.sh (which exports the env, so
+# `make test` has full coverage). The default run keeps every
+# operator's functional tests plus the full oracle-parity sweep,
+# whose rows build and serve the same at-rest stores
+# (ann_ivf_*_served_incremental, near_dup_components_served,
 # weekly_retention_served*).
 HEAVY_E2E_ENV = "PG2KAFKA_HEAVY_E2E"
 
@@ -27,7 +27,7 @@ def pytest_configure(config):
     )
     config.addinivalue_line(
         "markers",
-        "heavy_e2e: multi-minute streaming/store e2e — skipped unless "
+        "heavy_e2e: long store/tokenizer e2e — skipped unless "
         f"{HEAVY_E2E_ENV}=1 (tools/run_tests.sh sets it)",
     )
 

@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pg2kafka_spark.operators import graph as G
-from pg2kafka_spark.streaming.relay import append_files
 
 
 @pytest.fixture(autouse=True)
@@ -278,56 +277,6 @@ def test_incremental_components_equals_cold_rebuild(spark):
     assert warm[7] == warm[8] == 7
 
 
-def _write_pair_slices(spark, pair_lists, incoming):
-    for pl in pair_lists:
-        append_files(spark.createDataFrame(pl, "id_a bigint, id_b bigint").coalesce(1), incoming)
-
-
-@pytest.mark.heavy_e2e
-def test_components_stream_folds_equal_one_pass(spark, tmp_path):
-    """The 4th maintained-state loop (r16): candidate-pair batches
-    streamed through start_components_stream leave a label table
-    identical to cold connected_components over ALL pairs — the same
-    streamed ≡ one-pass evidence the dedup/retention/ANN loops
-    carry."""
-    from pg2kafka_spark.operators.graph import connected_components
-    from pg2kafka_spark.streaming.graphstore import (
-        start_components_stream,
-    )
-
-    slices = [
-        [(1, 2), (3, 4)],          # two clusters
-        [(2, 3), (10, 11)],        # bridge them + a new cluster
-        [(11, 12), (4, 1)],        # grow + a redundant edge
-    ]
-    incoming = str(tmp_path / "incoming")
-    labels_dir = str(tmp_path / "labels")
-    _write_pair_slices(spark, slices, incoming)
-    q = start_components_stream(
-        spark,
-        incoming,
-        "id_a bigint, id_b bigint",
-        labels_dir=labels_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-    )
-    # 600 s bound: availableNow terminates the moment the last slice
-    # folds (quiet host ~45 s), so the headroom is free there; the slow
-    # sandbox host class under 8-lane contention ran the same stream
-    # ~157 s and falsely tripped the old 120 s bound (r19 re-entry 6).
-    assert q.awaitTermination(600)
-    folded = sorted(
-        tuple(r) for r in spark.read.parquet(labels_dir).collect()
-    )
-    all_pairs = spark.createDataFrame(
-        [p for sl in slices for p in sl], "id_a bigint, id_b bigint"
-    )
-    cold = sorted(
-        tuple(r) for r in connected_components(all_pairs).collect()
-    )
-    assert folded == cold
-
-
 def test_components_fold_is_replay_idempotent(spark, tmp_path):
     """Crash-before-checkpoint replay: folding the SAME batch twice
     leaves the label table unchanged (the labels' star edges already
@@ -351,7 +300,7 @@ def test_components_fold_is_replay_idempotent(spark, tmp_path):
 
 def test_components_store_mid_swap_raises(spark, tmp_path):
     """A fold crashed inside the swap bracket must fail the next
-    reader AND the next stream loudly — never read as 'no labels
+    reader AND the next fold loudly — never read as 'no labels
     yet' (that would silently fork every historical cluster)."""
     import pytest
 
@@ -359,7 +308,6 @@ def test_components_store_mid_swap_raises(spark, tmp_path):
         _labels_or_empty,
         _swap_sentinel,
         fold_pairs_batch,
-        start_components_stream,
     )
 
     labels_dir = str(tmp_path / "labels")
@@ -370,118 +318,7 @@ def test_components_store_mid_swap_raises(spark, tmp_path):
     with pytest.raises(RuntimeError, match="mid-swap"):
         _labels_or_empty(spark, labels_dir)
     with pytest.raises(RuntimeError, match="mid-swap"):
-        start_components_stream(
-            spark,
-            str(tmp_path / "incoming"),
-            "id_a bigint, id_b bigint",
-            labels_dir=labels_dir,
-            checkpoint_dir=str(tmp_path / "ckpt2"),
-        )
-
-
-@pytest.mark.heavy_e2e
-def test_run_components_maintenance_drains_and_times_out(spark, tmp_path):
-    """r17 (r16 verdict item 4): the label store's scheduled cycle —
-    a drain exceeding the timeout stops the stream and raises (never
-    returns over a still-running fold), and the re-run completes from
-    the checkpoint to the same labels one cold pass produces (the
-    drain is checkpointed; the fold is idempotent)."""
-    import pytest
-
-    from pg2kafka_spark.operators.graph import connected_components
-    from pg2kafka_spark.streaming.graphstore import (
-        run_components_maintenance,
-    )
-
-    slices = [
-        [(1, 2), (3, 4)],
-        [(2, 3), (10, 11)],
-        [(11, 12), (4, 1)],
-    ]
-    incoming = str(tmp_path / "incoming")
-    labels_dir = str(tmp_path / "labels")
-    _write_pair_slices(spark, slices, incoming)
-    with pytest.raises(TimeoutError):
-        run_components_maintenance(
-            spark,
-            incoming,
-            "id_a bigint, id_b bigint",
-            labels_dir=labels_dir,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            max_files_per_trigger=1,
-            timeout_s=1,  # 3 files at 1/trigger never drain in 1 s
-        )
-    run_components_maintenance(
-        spark,
-        incoming,
-        "id_a bigint, id_b bigint",
-        labels_dir=labels_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-        timeout_s=300,
-    )
-    folded = sorted(
-        tuple(r) for r in spark.read.parquet(labels_dir).collect()
-    )
-    all_pairs = spark.createDataFrame(
-        [p for sl in slices for p in sl], "id_a bigint, id_b bigint"
-    )
-    cold = sorted(
-        tuple(r) for r in connected_components(all_pairs).collect()
-    )
-    assert folded == cold
-
-
-@pytest.mark.heavy_e2e
-def test_maintenance_restarts_over_interrupted_first_offset_write(
-    spark, tmp_path
-):
-    """A stop/crash that interrupts the very FIRST offset write leaves
-    only an orphan ``.0.<uuid>.tmp`` in ``ckpt/offsets``; Spark 4.x's
-    restart validation then refuses to start over the non-empty "new"
-    checkpoint (STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY — observed
-    as a drain-timeout race at r19 re-entry 7). The scheduled cycle
-    must scrub the zero-progress crud and complete to the cold-pass
-    labels; a checkpoint with ANY committed offset must be left alone
-    (scrub_virgin_checkpoint unit-covered in test_streaming.py)."""
-    import os
-
-    from pg2kafka_spark.operators.graph import connected_components
-    from pg2kafka_spark.streaming.graphstore import (
-        run_components_maintenance,
-    )
-
-    slices = [[(1, 2), (3, 4)], [(2, 3), (10, 11)]]
-    incoming = str(tmp_path / "incoming")
-    labels_dir = str(tmp_path / "labels")
-    ckpt = str(tmp_path / "ckpt")
-    _write_pair_slices(spark, slices, incoming)
-    os.makedirs(os.path.join(ckpt, "offsets"))
-    with open(
-        os.path.join(
-            ckpt, "offsets", ".0.6ba7b810-9dad-11d1-80b4-00c04fd430c8.tmp"
-        ),
-        "w",
-    ):
-        pass
-    run_components_maintenance(
-        spark,
-        incoming,
-        "id_a bigint, id_b bigint",
-        labels_dir=labels_dir,
-        checkpoint_dir=ckpt,
-        timeout_s=300,
-    )
-    folded = sorted(
-        tuple(r) for r in spark.read.parquet(labels_dir).collect()
-    )
-    all_pairs = spark.createDataFrame(
-        [p for sl in slices for p in sl], "id_a bigint, id_b bigint"
-    )
-    cold = sorted(
-        tuple(r) for r in connected_components(all_pairs).collect()
-    )
-    assert folded == cold
+        fold_pairs_batch(spark, batch, labels_dir)
 
 
 @pytest.mark.heavy_e2e

@@ -14,7 +14,6 @@ from pg2kafka_spark.operators.retention import (
     retention_day_partial,
     retention_from_partials,
 )
-from pg2kafka_spark.streaming.relay import append_files
 
 SF = "/root/testdata/sf0.001"
 
@@ -213,127 +212,6 @@ def test_hll_plan_has_no_user_keyed_aggregation(spark):
     assert plan.count("Exchange hashpartitioning(user_id") == 1
 
 
-# ---------------------------------------------------------------------------
-# Streaming maintenance loop (streaming/retention.py) — the r13-verdict
-# item: the fold operators wired into a self-maintaining job, with the
-# same replay evidence the ingest store has.
-
-
-def _write_day_slice_files(spark, ev_raw, slices, incoming):
-    """Publish one parquet FILE per day slice into ``incoming``, in
-    slice order, so the file stream source (which orders by timestamp)
-    delivers them in event-time order — the documented arrival
-    contract."""
-    for lo, hi in slices:
-        day = ev_raw.filter(
-            (F.unix_micros("ts") >= F.lit(lo * DAY_US))
-            & (F.unix_micros("ts") < F.lit(hi * DAY_US))
-        )
-        append_files(day.coalesce(1), incoming)
-
-
-@pytest.mark.heavy_e2e
-def test_retention_stream_maintains_partials_e2e(spark, tmp_path):
-    """N micro-batches through start_retention_stream produce a
-    partials table whose served triangle EQUALS the one-pass batch
-    build — the fold-equivalence test lifted into the streaming loop
-    (r13 verdict item 3)."""
-    import os
-
-    from pg2kafka_spark.streaming.retention import start_retention_stream
-
-    ev_raw = load_table(spark, "events", SF).select("user_id", "ts")
-    slices = _day_slices(_events(spark), 5)
-    assert len(slices) >= 3
-    incoming = str(tmp_path / "incoming")
-    _write_day_slice_files(spark, ev_raw, slices, incoming)
-
-    q = start_retention_stream(
-        spark,
-        incoming,
-        "user_id bigint, ts timestamp",
-        first_seen_dir=str(tmp_path / "first_seen"),
-        partials_dir=str(tmp_path / "partials"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-        available_now=True,
-    )
-    q.awaitTermination(120)
-
-    partials = spark.read.parquet(str(tmp_path / "partials"))
-    # one batch per slice file (ordering contract held)
-    n_batches = partials.select("batch_id").distinct().count()
-    assert n_batches == len(slices)
-    got = _triangle_rows(retention_from_partials(partials))
-    assert got == _batch_triangle(spark)
-    # the candidates table folds to the exact batch first-seen
-    cands = spark.read.parquet(str(tmp_path / "first_seen"))
-    folded = {
-        (r.user_id, r.f_us)
-        for r in cands.groupBy("user_id")
-        .agg(F.min("f_us").alias("f_us"))
-        .collect()
-    }
-    want = {
-        (r.user_id, r.f_us)
-        for r in _events(spark)
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("f_us"))
-        .collect()
-    }
-    assert folded == want
-    assert os.path.isdir(str(tmp_path / "ckpt"))
-
-
-def test_retention_maintain_batch_replay_idempotent(spark):
-    """At-least-once replay of a micro-batch (crash after both writes,
-    before checkpoint commit) changes NEITHER the folded first-seen
-    table NOR the served triangle — the module's crash contract,
-    driven through the pure per-batch function."""
-    from pg2kafka_spark.streaming.retention import retention_maintain_batch
-
-    ev = _events(spark)
-    slices = _day_slices(ev, 4)
-    assert len(slices) >= 2
-    empty = spark.createDataFrame([], "user_id bigint, f_us bigint")
-
-    def day(lo, hi):
-        return ev.filter(
-            (F.col("ts_us") >= F.lit(lo * DAY_US))
-            & (F.col("ts_us") < F.lit(hi * DAY_US))
-        )
-
-    b1 = day(*slices[0])
-    b2 = day(*slices[1])
-    dm1, p1 = retention_maintain_batch(b1, empty)
-    cands = empty.unionByName(dm1).localCheckpoint()
-    dm2, p2 = retention_maintain_batch(b2, cands)
-    cands2 = cands.unionByName(dm2).localCheckpoint()
-    served = _triangle_rows(
-        retention_from_partials(p1.unionByName(p2).localCheckpoint())
-    )
-
-    # replay b2: its candidate rows are already in the table
-    dm2r, p2r = retention_maintain_batch(b2, cands2)
-    cands_replayed = cands2.unionByName(dm2r)
-    served_replayed = _triangle_rows(
-        retention_from_partials(
-            p1.unionByName(p2).unionByName(p2r).localCheckpoint()
-        )
-    )
-    assert served_replayed == served
-
-    def fold(df):
-        return {
-            (r.user_id, r.f_us)
-            for r in df.groupBy("user_id")
-            .agg(F.min("f_us").alias("f_us"))
-            .collect()
-        }
-
-    assert fold(cands_replayed) == fold(cands2)
-
-
 def test_served_query_reads_maintained_table_and_matches(spark):
     """weekly_retention_served must equal the in-query rebuild — the
     serve path reads ONLY the at-rest partials table."""
@@ -344,42 +222,6 @@ def test_served_query_reads_maintained_table_and_matches(spark):
         QUERIES["weekly_retention_incremental"](spark, SF)
     )
     assert served == inq
-
-
-def test_compact_first_seen_preserves_fold_and_shrinks(spark, tmp_path):
-    """Compaction rewrites the candidates table to one row per user
-    with the identical fold — and the served triangle is unchanged."""
-    from pg2kafka_spark.streaming.retention import (
-        compact_first_seen,
-        retention_maintain_batch,
-    )
-
-    ev = _events(spark)
-    slices = _day_slices(ev, 4)
-    empty = spark.createDataFrame([], "user_id bigint, f_us bigint")
-    fs_dir = str(tmp_path / "first_seen")
-    cands = empty
-    for lo, hi in slices:
-        day = ev.filter(
-            (F.col("ts_us") >= F.lit(lo * DAY_US))
-            & (F.col("ts_us") < F.lit(hi * DAY_US))
-        )
-        dm, _p = retention_maintain_batch(day, cands)
-        dm.write.mode("append").parquet(fs_dir)
-        cands = spark.read.parquet(fs_dir)
-    before = spark.read.parquet(fs_dir)
-    n_before = before.count()
-    folded_before = {
-        (r.user_id, r.f_us)
-        for r in before.groupBy("user_id")
-        .agg(F.min("f_us").alias("f_us"))
-        .collect()
-    }
-    compact_first_seen(spark, fs_dir)
-    after = spark.read.parquet(fs_dir)
-    assert after.count() == after.select("user_id").distinct().count()
-    assert after.count() <= n_before
-    assert {(r.user_id, r.f_us) for r in after.collect()} == folded_before
 
 
 def test_retention_store_rekeys_when_source_changes(spark, tmp_path):
@@ -409,304 +251,3 @@ def test_retention_store_rekeys_when_source_changes(spark, tmp_path):
     assert root1 != root2, "changed source must not reuse the store"
 
 
-def test_candidates_reader_raises_mid_compaction(spark, tmp_path):
-    """A retention micro-batch racing compact_first_seen's directory
-    swap must FAIL (checkpoint retries it), never fold against an
-    'empty' store — the silent-wrong-cohorts race the r14 advice
-    named. The sentinel brackets the swap window."""
-    import pytest as _pytest
-
-    from pg2kafka_spark.streaming.retention import (
-        _candidates_or_empty,
-        _compaction_sentinel,
-    )
-
-    fs_dir = str(tmp_path / "first_seen")
-    like = spark.createDataFrame([], "user_id bigint, f_us bigint")
-    # never-written store: empty frame, no error
-    assert _candidates_or_empty(spark, fs_dir, like).count() == 0
-    # mid-compaction (sentinel present, dir missing): loud failure
-    open(_compaction_sentinel(fs_dir), "w").close()
-    with _pytest.raises(RuntimeError, match="mid-compaction"):
-        _candidates_or_empty(spark, fs_dir, like)
-
-
-@pytest.mark.heavy_e2e
-def test_run_retention_maintenance_drains_and_compacts(spark, tmp_path):
-    """The scheduled cycle (drain → compact between runs) serves the
-    same triangle as the one-pass batch build, leaves the candidates
-    table folded to one row per user, and clears its sentinel —
-    and a SECOND cycle over new arrivals keeps all three properties
-    (the maintenance loop is re-enterable)."""
-    import os
-
-    from pg2kafka_spark.streaming.retention import (
-        _compaction_sentinel,
-        run_retention_maintenance,
-    )
-
-    ev_raw = load_table(spark, "events", SF).select("user_id", "ts")
-    slices = _day_slices(_events(spark), 5)
-    assert len(slices) >= 4
-    incoming = str(tmp_path / "incoming")
-    fs_dir = str(tmp_path / "first_seen")
-    part_dir = str(tmp_path / "partials")
-    ckpt = str(tmp_path / "ckpt")
-
-    def cycle(sl):
-        _write_day_slice_files(spark, ev_raw, sl, incoming)
-        run_retention_maintenance(
-            spark,
-            incoming,
-            "user_id bigint, ts timestamp",
-            first_seen_dir=fs_dir,
-            partials_dir=part_dir,
-            checkpoint_dir=ckpt,
-            max_files_per_trigger=1,
-        )
-
-    cycle(slices[:3])
-    cands = spark.read.parquet(fs_dir)
-    assert cands.count() == cands.select("user_id").distinct().count()
-    assert not os.path.exists(_compaction_sentinel(fs_dir))
-
-    cycle(slices[3:])
-    partials = spark.read.parquet(part_dir)
-    # partitioned layout on disk: hive-style cohort_day=N directories
-    assert any(
-        d.startswith("cohort_day=") for d in os.listdir(part_dir)
-    )
-    assert _triangle_rows(retention_from_partials(partials)) == (
-        _batch_triangle(spark)
-    )
-    cands = spark.read.parquet(fs_dir)
-    assert cands.count() == cands.select("user_id").distinct().count()
-
-
-@pytest.mark.heavy_e2e
-def test_sketch_stream_maintains_cells_e2e(spark, tmp_path):
-    """Sketch-mode maintenance (PB-scale twin): N micro-batches
-    through start_retention_sketch_stream estimate every cell
-    identically to the one-pass registered HLL query, and a manual
-    replay of one batch's sketch rows changes nothing (union is
-    idempotent)."""
-    from pg2kafka_spark.operators.retention import retention_from_sketches
-    from pg2kafka_spark.queries import QUERIES
-    from pg2kafka_spark.streaming.retention import (
-        start_retention_sketch_stream,
-    )
-
-    ev_raw = load_table(spark, "events", SF).select("user_id", "ts")
-    slices = _day_slices(_events(spark), 4)
-    incoming = str(tmp_path / "incoming")
-    _write_day_slice_files(spark, ev_raw, slices, incoming)
-
-    q = start_retention_sketch_stream(
-        spark,
-        incoming,
-        "user_id bigint, ts timestamp",
-        first_seen_dir=str(tmp_path / "first_seen"),
-        sketches_dir=str(tmp_path / "sketches"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-
-    sk = spark.read.parquet(str(tmp_path / "sketches"))
-    assert sk.select("batch_id").distinct().count() == len(slices)
-    folded = {
-        (r.cohort_day, r.week_offset): r.n_users_approx
-        for r in retention_from_sketches(sk).collect()
-    }
-    one_pass = {
-        (r.cohort_day, r.week_offset): r.n_users_approx
-        for r in QUERIES["weekly_retention_hll"](spark, SF).collect()
-    }
-    assert folded == one_pass
-
-    # replay: re-append the last batch's rows — estimates unchanged
-    last = sk.filter(F.col("batch_id") == len(slices) - 1)
-    last.write.mode("append").parquet(str(tmp_path / "sketches"))
-    replayed = {
-        (r.cohort_day, r.week_offset): r.n_users_approx
-        for r in retention_from_sketches(
-            spark.read.parquet(str(tmp_path / "sketches"))
-        ).collect()
-    }
-    assert replayed == folded
-
-
-def test_compact_sketches_preserves_estimates(spark, tmp_path):
-    """Pre-merging the batch-stamped sketch rows to one per cell
-    (HLL union is associative) must leave every served estimate
-    unchanged and cap the table at O(cells) rows."""
-    from pg2kafka_spark.operators.retention import retention_from_sketches
-    from pg2kafka_spark.streaming.retention import (
-        compact_sketches,
-        retention_maintain_batch_sketch,
-    )
-
-    ev = _events(spark)
-    slices = _day_slices(ev, 4)
-    sk_dir = str(tmp_path / "sketches")
-    cands = spark.createDataFrame([], "user_id bigint, f_us bigint")
-    for bid, (lo, hi) in enumerate(slices):
-        day = ev.filter(
-            (F.col("ts_us") >= F.lit(lo * DAY_US))
-            & (F.col("ts_us") < F.lit(hi * DAY_US))
-        )
-        dm, sk = retention_maintain_batch_sketch(day, cands)
-        cands = cands.unionByName(dm).localCheckpoint()
-        sk.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(
-            sk_dir
-        )
-
-    def served():
-        return {
-            (r.cohort_day, r.week_offset): r.n_users_approx
-            for r in retention_from_sketches(
-                spark.read.parquet(sk_dir)
-            ).collect()
-        }
-
-    before = served()
-    n_before = spark.read.parquet(sk_dir).count()
-    compact_sketches(spark, sk_dir)
-    after_df = spark.read.parquet(sk_dir)
-    assert after_df.count() == len(before)  # one row per cell
-    assert after_df.count() <= n_before
-    assert served() == before
-
-
-@pytest.mark.heavy_e2e
-def test_run_retention_maintenance_timeout_aborts_before_compaction(
-    spark, tmp_path
-):
-    """r16 (r15 advice): a drain that exceeds the timeout must STOP
-    the stream and raise — never run compact_first_seen while the
-    stream could still be appending — and a re-run with a sane
-    timeout completes the cycle losslessly (the drain is
-    checkpointed)."""
-    import pytest
-
-    from pg2kafka_spark.streaming.retention import run_retention_maintenance
-
-    ev_raw = load_table(spark, "events", SF).select("user_id", "ts")
-    slices = _day_slices(_events(spark), 3)
-    incoming = str(tmp_path / "incoming")
-    fs_dir = str(tmp_path / "first_seen")
-    part_dir = str(tmp_path / "partials")
-    ckpt = str(tmp_path / "ckpt")
-    _write_day_slice_files(spark, ev_raw, slices, incoming)
-
-    with pytest.raises(TimeoutError):
-        run_retention_maintenance(
-            spark,
-            incoming,
-            "user_id bigint, ts timestamp",
-            first_seen_dir=fs_dir,
-            partials_dir=part_dir,
-            checkpoint_dir=ckpt,
-            max_files_per_trigger=1,
-            timeout_s=1,  # expires while the drain is still running
-            # (3 files at 1/trigger never finish in 1 s)
-        )
-    # recovery: the normal cycle finishes and compacts
-    run_retention_maintenance(
-        spark,
-        incoming,
-        "user_id bigint, ts timestamp",
-        first_seen_dir=fs_dir,
-        partials_dir=part_dir,
-        checkpoint_dir=ckpt,
-        max_files_per_trigger=1,
-    )
-    cands = spark.read.parquet(fs_dir)
-    assert cands.count() == cands.select("user_id").distinct().count()
-    assert _triangle_rows(
-        retention_from_partials(spark.read.parquet(part_dir))
-    ) == _batch_triangle(spark)
-
-
-def test_compactions_recover_from_stale_old_dir(spark, tmp_path):
-    """r17 (advice, same class as the graphstore fold): a crash after
-    a prior swap's sentinel removal but before its __old__ rmtree
-    leaves a stale __old__; the NEXT compaction must clear it and
-    swap cleanly instead of wedging ENOTEMPTY mid-swap."""
-    import os
-
-    from pg2kafka_spark.streaming.retention import (
-        _compaction_sentinel,
-        compact_first_seen,
-        compact_sketches,
-    )
-
-    fs_dir = str(tmp_path / "first_seen")
-    spark.createDataFrame(
-        [(1, 10), (1, 5), (2, 7)], "user_id bigint, f_us bigint"
-    ).write.parquet(fs_dir)
-    old = fs_dir.rstrip("/") + ".__old__"
-    os.makedirs(old, exist_ok=True)
-    with open(os.path.join(old, "stale.parquet"), "w") as fh:
-        fh.write("stale")
-    compact_first_seen(spark, fs_dir)  # must not raise
-    assert not os.path.exists(old)
-    got = {(r.user_id, r.f_us) for r in spark.read.parquet(fs_dir).collect()}
-    assert got == {(1, 5), (2, 7)}
-
-    # the sketch compaction: two batches of one cell fold to one row,
-    # through the same stale-__old__ clear and a sentinel it removes
-    sk_dir = str(tmp_path / "sketches")
-    spark.createDataFrame(
-        [(0, 0, 1, 0), (0, 0, 2, 1)],
-        "cohort_day int, week_offset int, user_id bigint, batch_id int",
-    ).groupBy("cohort_day", "week_offset", "batch_id").agg(
-        F.hll_sketch_agg("user_id").alias("sketch")
-    ).write.parquet(sk_dir)
-    old = sk_dir + ".__old__"
-    os.makedirs(old, exist_ok=True)
-    with open(os.path.join(old, "stale.parquet"), "w") as fh:
-        fh.write("stale")
-    compact_sketches(spark, sk_dir)  # must not raise
-    assert not os.path.exists(old)
-    assert not os.path.exists(_compaction_sentinel(sk_dir))
-    assert [
-        (r.batch_id, r.n)
-        for r in spark.read.parquet(sk_dir)
-        .select("batch_id", F.hll_sketch_estimate("sketch").alias("n"))
-        .collect()
-    ] == [(-1, 2)]
-
-
-def test_sketch_stream_raises_mid_compaction(spark, tmp_path):
-    """A compact_sketches crashed inside its swap leaves the sketch
-    table's sentinel on disk; the sketch stream's next batch must
-    fail loudly instead of appending a fresh sketches/ directory
-    that the next compaction would overwrite along with the only
-    copies of the history."""
-    import os
-
-    import pytest as _pytest
-
-    from pg2kafka_spark.streaming.retention import (
-        _compaction_sentinel,
-        start_retention_sketch_stream,
-    )
-
-    incoming = str(tmp_path / "incoming")
-    sk_dir = str(tmp_path / "sketches")
-    spark.createDataFrame(
-        [(1, 86_400_000_000)], "user_id bigint, ts bigint"
-    ).write.parquet(incoming)
-    open(_compaction_sentinel(sk_dir), "w").close()
-    q = start_retention_sketch_stream(
-        spark,
-        incoming,
-        "user_id bigint, ts bigint",
-        first_seen_dir=str(tmp_path / "first_seen"),
-        sketches_dir=sk_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    with _pytest.raises(Exception, match="mid-compaction"):
-        q.awaitTermination(120)
-    assert not os.path.exists(sk_dir)

@@ -1,10 +1,10 @@
-"""Structured Streaming relay + event-time operator tests.
+"""Structured Streaming relay tests.
 
 Mirrors the reference's e2e relay test strategy (main_test.go: seed
 outbox rows, run the drain, assert message count/keys/payloads —
 SURVEY.md §5 layer 3) with file-source → availableNow → foreachBatch
-relay runs and memory-sink streams, plus parity checks that the
-streaming window operators agree with their batch formulations.
+relay runs and memory-sink streams, plus parity checks that batch
+operators compose unchanged into a stream.
 """
 
 from __future__ import annotations
@@ -19,12 +19,6 @@ from pyspark.sql import Row, functions as F
 from pg2kafka_spark.event import EVENT_SCHEMA
 from pg2kafka_spark.streaming import append_outbox, bootstrap_outbox, read_event_stream, start_relay
 from pg2kafka_spark.streaming.relay import append_files
-from pg2kafka_spark.streaming.windows import (
-    dedup_events_by_uuid,
-    events_per_session_window,
-    events_per_window,
-    latest_state_stream,
-)
 
 T0 = datetime(2024, 1, 1, 12, 0, 0)
 
@@ -146,118 +140,6 @@ def test_relay_pages_bound_micro_batches(spark, outbox, tmp_path):
     batches = [len(b) for b in _relay_batches(spark, outbox, str(tmp_path / "ckpt2"), 1)]
     assert sum(batches) == 3
     assert len(batches) >= 3  # one page per file (plus possible empty tail batch)
-
-
-def test_dedup_events_by_uuid_effectively_once(spark, outbox):
-    # Redelivery scenario: the same uuid appears in two source files
-    # (crash between produce and mark, main.go:161-172).
-    dup = str(uuidlib.uuid4())
-    _write_events(spark, [_event(1, "users", "INSERT", "{}", key="a", uid=dup)], outbox)
-    _write_events(
-        spark,
-        [
-            _event(1, "users", "INSERT", "{}", key="a", uid=dup),  # redelivery
-            _event(2, "users", "UPDATE", '{"x": 1}', key="a"),
-        ],
-        outbox,
-    )
-    out = _drain_to_memory(
-        spark, outbox, "dedup_out", transform=dedup_events_by_uuid, page_files=1
-    )
-    rows = out.collect()
-    assert len(rows) == 2
-    assert len({r.uuid for r in rows}) == 2
-
-
-def test_streaming_window_counts_match_batch(spark, outbox):
-    rows = [
-        _event(i, "users" if i % 2 else "orders", "INSERT", "{}", key=str(i),
-               ts=T0 + timedelta(minutes=7 * i))
-        for i in range(20)
-    ]
-    _write_events(spark, rows, outbox)
-    out = _drain_to_memory(
-        spark,
-        outbox,
-        "win_out",
-        transform=lambda ev: events_per_window(ev, "1 hour"),
-        output_mode="complete",
-    )
-    batch = (
-        spark.createDataFrame(rows, EVENT_SCHEMA)
-        .groupBy(F.window("created_at", "1 hour").alias("w"), "table_name")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "table_name",
-            "n_events",
-        )
-    )
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch.collect()))
-
-
-def test_streaming_session_windows_match_batch(spark, outbox):
-    # two sessions for key "a" (gap > 30 min between minute 0-10 and 60+),
-    # one session for key "b"
-    rows = [
-        _event(1, "users", "INSERT", "{}", key="a", ts=T0),
-        _event(2, "users", "UPDATE", "{}", key="a", ts=T0 + timedelta(minutes=10)),
-        _event(3, "users", "UPDATE", "{}", key="a", ts=T0 + timedelta(minutes=60)),
-        _event(4, "users", "INSERT", "{}", key="b", ts=T0 + timedelta(minutes=5)),
-    ]
-    _write_events(spark, rows, outbox)
-    out = _drain_to_memory(
-        spark,
-        outbox,
-        "sess_out",
-        transform=lambda ev: events_per_session_window(ev, gap="30 minutes"),
-        output_mode="complete",
-    )
-    got = {(r.external_id, r.n_events) for r in out.collect()}
-    assert got == {("a", 2), ("a", 1), ("b", 1)}
-
-
-@pytest.mark.heavy_e2e
-def test_latest_state_stream_folds_across_batches(spark, outbox):
-    # Two micro-batches (page_files=1 over two files); the stateful
-    # operator must carry key state across them.
-    _write_events(
-        spark,
-        [
-            _event(1, "users", "INSERT", '{"v": 1}', key="a", ts=T0),
-            _event(2, "users", "INSERT", '{"v": 10}', key="b", ts=T0),
-        ],
-        outbox,
-    )
-    _write_events(
-        spark,
-        [
-            _event(3, "users", "UPDATE", '{"v": 2}', key="a", ts=T0 + timedelta(seconds=5)),
-        ],
-        outbox,
-    )
-    out = _drain_to_memory(
-        spark,
-        outbox,
-        "state_out",
-        transform=latest_state_stream,
-        output_mode="update",
-        page_files=1,
-    )
-    # update-mode memory sink appends every emitted update; the final
-    # state per key is the one with the highest lifetime counter.
-    rows = out.collect()
-    final: dict[str, Row] = {}
-    for r in rows:
-        if r.external_id not in final or r.n_changes > final[r.external_id].n_changes:
-            final[r.external_id] = r
-    a, b = final["a"], final["b"]
-    assert json.loads(a.data) == {"v": 2}
-    assert a.statement == "UPDATE"
-    assert a.n_changes == 2
-    assert json.loads(b.data) == {"v": 10}
-    assert b.n_changes == 1
 
 
 def test_checkpoint_resume_processes_only_new_events(spark, outbox, tmp_path):
@@ -478,64 +360,6 @@ def test_snapshot_and_capture_compile_once_per_session(spark, outbox, tmp_path):
     assert (snapshots[1], appends[1]) == (0, 0), (snapshots, appends)
 
 
-@pytest.mark.heavy_e2e
-def test_stream_stream_join_within_matches_batch(spark, tmp_path):
-    from pg2kafka_spark.streaming.windows import join_streams_within
-
-    # orders feed + payments feed on the same keys; payments join to
-    # orders no older than 10 minutes (the bounded-state as-of shape)
-    orders = [
-        _event(1, "orders", "INSERT", '{"total": 10}', key="k1", ts=T0),
-        _event(2, "orders", "INSERT", '{"total": 20}', key="k2", ts=T0 + timedelta(minutes=1)),
-        _event(3, "orders", "INSERT", '{"total": 30}', key="k1", ts=T0 + timedelta(minutes=5)),
-    ]
-    payments = [
-        _event(10, "payments", "INSERT", "{}", key="k1", ts=T0 + timedelta(minutes=2)),   # -> order 1
-        _event(11, "payments", "INSERT", "{}", key="k1", ts=T0 + timedelta(minutes=6)),   # -> orders 1(too old? no: 6-10<=0) and 3
-        _event(12, "payments", "INSERT", "{}", key="k2", ts=T0 + timedelta(minutes=30)),  # beyond lookback
-        _event(13, "payments", "INSERT", "{}", key="k3", ts=T0 + timedelta(minutes=3)),   # no such order key
-    ]
-    opath, ppath = str(tmp_path / "orders"), str(tmp_path / "payments")
-    _write_events(spark, orders, opath)
-    _write_events(spark, payments, ppath)
-
-    joined = join_streams_within(
-        read_event_stream(spark, ppath),
-        read_event_stream(spark, opath),
-        key_cols=[("external_id", "external_id")],
-        left_ts="created_at",
-        right_ts="created_at",
-        lookback="10 minutes",
-        watermark="10 minutes",
-    )
-    q = (
-        joined.select("id", "r_id")
-        .writeStream.queryName("ssj")
-        .format("memory")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r["id"], r["r_id"]) for r in spark.table("ssj").collect()}
-    assert got == {(10, 1), (11, 1), (11, 3)}
-
-    # batch twin: same inputs, same predicate, plain join
-    p = spark.read.parquet(ppath).alias("l")
-    o = spark.read.parquet(opath).alias("r")
-    exp = {
-        (r["id"], r["r_id"])
-        for r in p.join(
-            o,
-            (F.col("l.external_id") == F.col("r.external_id"))
-            & (F.col("r.created_at") >= F.col("l.created_at") - F.expr("INTERVAL 10 minutes"))
-            & (F.col("r.created_at") <= F.col("l.created_at")),
-        )
-        .select(F.col("l.id").alias("id"), F.col("r.id").alias("r_id"))
-        .collect()
-    }
-    assert got == exp
-
-
 def test_crash_between_sink_write_and_commit_redelivers_then_converges(
     spark, outbox, tmp_path
 ):
@@ -544,8 +368,8 @@ def test_crash_between_sink_write_and_commit_redelivers_then_converges(
     # the sink write succeeds, then the query dies BEFORE the epoch
     # commit. On restart the uncommitted batch is redelivered — the
     # delivered log must contain duplicates (at-least-once, not magic)
-    # — and dedup_events_by_uuid over that log converges back to
-    # effectively-once.
+    # — and the consumer's fold over that log converges to the fold of
+    # the distinct events.
     delivered = str(tmp_path / "delivered")
     ckpt = str(tmp_path / "ckpt_crash")
     _write_events(
@@ -593,20 +417,17 @@ def test_crash_between_sink_write_and_commit_redelivers_then_converges(
     )
     assert redelivered == first_attempt  # exactly the crashed batch
 
-    # downstream consumer applies the uuid dedup -> effectively-once
-    dedup_stream = dedup_events_by_uuid(
-        spark.readStream.schema(EVENT_SCHEMA).parquet(delivered)
-    )
-    dq = (
-        dedup_stream.writeStream.queryName("crash_dedup_out")
-        .format("memory")
-        .trigger(availableNow=True)
-        .start()
-    )
-    dq.awaitTermination(120)
-    rows = spark.table("crash_dedup_out").collect()
-    assert len(rows) == 5
-    assert len({r.uuid for r in rows}) == 5
+    # the consumer's fold absorbs the redelivery: apply_change_feed over
+    # the delivered log equals the fold of the 5 distinct outbox events
+    from pg2kafka_spark.operators.compaction import apply_change_feed
+
+    def fold(feed):
+        state = apply_change_feed(feed, ["external_id"], "id", "data", ["x"])
+        return sorted(map(tuple, state.collect()))
+
+    assert spark.read.parquet(outbox).count() == 5
+    assert fold(log) == fold(spark.read.parquet(outbox))
+    assert fold(log) == [("0", None), ("1", None), ("2", None), ("3", "1"), ("4", "1")]
 
 
 def test_quality_gate_composes_unchanged_into_a_stream(spark, tmp_path):
@@ -706,69 +527,6 @@ def test_streaming_ingest_dedups_against_static_store(spark, tmp_path):
     assert len(got_fps) > 0
 
 
-def test_transform_with_state_change_stats_folds_across_batches(
-    spark, outbox, tmp_path
-):
-    """Spark 4 transformWithStateInPandas: the per-key ValueState must
-    fold across micro-batches (page_files=1 forces one file per
-    batch) and the final emitted totals must equal the batch
-    aggregate. The TWS runtime speaks protobuf to its state server —
-    absent from this container, so the e2e skips where the wire
-    dependency is missing (same honesty rule as the multimodal
-    codecs); the operator itself is plain pyspark."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState state server requires protobuf",
-    )
-    from pg2kafka_spark.streaming.windows import change_stats_stream
-
-    rows_a = [
-        _event(1, "users", "INSERT", "{}", key="a", ts=T0),
-        _event(2, "users", "UPDATE", "{}", key="a", ts=T0 + timedelta(minutes=1)),
-        _event(3, "users", "UPDATE", "{}", key="b", ts=T0 + timedelta(minutes=2)),
-    ]
-    rows_b = [
-        _event(4, "users", "UPDATE", "{}", key="a", ts=T0 + timedelta(minutes=9)),
-        _event(5, "users", "DELETE", "{}", key="b", ts=T0 + timedelta(minutes=5)),
-    ]
-    _write_events(spark, rows_a, outbox)
-    _write_events(spark, rows_b, outbox, n_files=2)
-
-    events = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(outbox)
-    )
-    q = (
-        change_stats_stream(events)
-        .writeStream.queryName("tws_stats")
-        .format("memory")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", str(tmp_path / "tws_ckpt")
-        )
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql(
-        "select * from tws_stats"
-    ).collect()
-    # update mode re-emits per batch; the LAST emission per key is the
-    # folded total
-    latest = {}
-    for r in rows:
-        cur = latest.get(r["external_id"])
-        if cur is None or r["n_changes"] > cur["n_changes"]:
-            latest[r["external_id"]] = r
-    assert latest["a"]["n_changes"] == 3
-    assert latest["b"]["n_changes"] == 2
-    import calendar
-
-    want_last_a = int((T0 + timedelta(minutes=9)).timestamp() * 1_000_000)
-    assert latest["a"]["last_us"] == want_last_a
-
-
 def test_legacy_create_statement_through_full_relay(spark, outbox, tmp_path):
     """Round-6 verdict optional item: the reference's own fixtures
     seed a legacy ``CREATE`` statement row (main_test.go:43) and the
@@ -851,383 +609,6 @@ def test_streaming_embedding_assignment_matches_batch(spark, tmp_path):
         ).collect()
     }
     assert got == want and len(got) > 0
-
-
-# ---------------------------------------------------------------------------
-# Continuous-ingest dedup loop (streaming/ingest.py) — the
-# self-maintaining store e2e the module docstring promises.
-# ---------------------------------------------------------------------------
-
-_INGEST_WAVES = [
-    # wave 0: two fresh docs — both survive, seed the store
-    [
-        (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            "lamda mu nu xi omicron pi rho sigma tau upsilon"),
-        (2, "completely different text about spark streaming pipelines "
-            "maintaining dedup state across micro batches"),
-    ],
-    # wave 1: exact dup of doc 1, NEAR dup of doc 1 (one word changed),
-    # a short doc gated by min_tokens, and one genuinely new doc
-    [
-        (3, "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            "lamda mu nu xi omicron pi rho sigma tau upsilon"),
-        (4, "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            "lamda mu nu xi omicron pi rho sigma tau REPLACED"),
-        (5, "hi there"),
-        (6, "training data pipelines need deduplication at scale for "
-            "quality language models and careful curation work"),
-    ],
-    # wave 2: near dup of doc 6 (a WAVE-1 survivor — proves the store
-    # grew between triggers), exact dup of doc 2, and a new doc
-    [
-        (7, "training data pipelines need deduplication at scale for "
-            "quality language models and careful curation REPLACED"),
-        (8, "completely different text about spark streaming pipelines "
-            "maintaining dedup state across micro batches"),
-        (9, "the final wave brings an entirely unrelated document about "
-            "orchestrating nightly crawl output into parquet"),
-    ],
-]
-
-
-def _ingest_dirs(tmp_path):
-    return {
-        "incoming": str(tmp_path / "incoming"),
-        "store": str(tmp_path / "store"),
-        "keep": str(tmp_path / "keep"),
-        "ckpt": str(tmp_path / "ckpt"),
-    }
-
-
-def _write_wave(spark, rows, incoming_dir):
-    # one file per wave, published after the earlier waves: with
-    # maxFilesPerTrigger=1 wave k is always batch k
-    append_files(spark.createDataFrame(rows, "doc_id int, text string").coalesce(1), incoming_dir)
-
-
-@pytest.mark.heavy_e2e
-def test_ingest_stream_equals_sequential_batches(spark, tmp_path):
-    """Sequential-batch equivalence (streaming/ingest.py docstring):
-    3 file waves through start_ingest_stream with maxFilesPerTrigger=1
-    must produce, per micro-batch, exactly the keep-set that running
-    ingest_keep_batch wave-by-wave in batch mode (manually growing the
-    store between waves) produces — including a near-dup of a wave-1
-    survivor arriving in wave 2 being rejected because the store grew
-    in between."""
-    from pg2kafka_spark.streaming.ingest import (
-        ingest_keep_batch,
-        start_ingest_stream,
-    )
-
-    d = _ingest_dirs(tmp_path)
-    for rows in _INGEST_WAVES:
-        _write_wave(spark, rows, d["incoming"])
-
-    schema = "doc_id int, text string"
-    q = start_ingest_stream(
-        spark,
-        d["incoming"],
-        schema,
-        d["store"],
-        d["keep"],
-        d["ckpt"],
-        max_files_per_trigger=1,
-        available_now=True,
-    )
-    # assert + 600 s bound: the old bare awaitTermination(180) expired
-    # silently on a slow contended host (waves 1-2 unprocessed) and the
-    # test failed downstream with a confusing keep-set diff (r19
-    # re-entry 6). availableNow terminates as soon as the third wave
-    # commits, so the headroom costs nothing on a quiet host (~100 s).
-    assert q.awaitTermination(600)
-
-    kept = spark.read.parquet(d["keep"])
-    got = {
-        (r["batch_id"], r["doc_id"]) for r in kept.collect()
-    }
-
-    # batch-mode replay of the same waves, growing the store by hand
-    store = spark.createDataFrame([], schema)
-    want = set()
-    for i, rows in enumerate(_INGEST_WAVES):
-        batch = spark.createDataFrame(rows, schema)
-        keep = ingest_keep_batch(batch, store)
-        for r in keep.collect():
-            want.add((i, r["doc_id"]))
-        store = store.unionByName(keep.select("doc_id", "text"))
-
-    assert got == want
-    # the fixture exercises every path: survivors in every wave,
-    # an exact dup, a near dup of a SAME-ROUND-EARLIER survivor,
-    # and a min_tokens gate drop
-    assert {doc for (_b, doc) in got} == {1, 2, 6, 9}
-    # store holds exactly the survivors (one row each)
-    store_ids = sorted(
-        r["doc_id"] for r in spark.read.parquet(d["store"]).collect()
-    )
-    assert store_ids == [1, 2, 6, 9]
-
-
-@pytest.mark.heavy_e2e
-def test_ingest_replay_is_idempotent_against_grown_store(spark, tmp_path):
-    """Replay contract (streaming/ingest.py:14-24): re-running a batch
-    against the store that already absorbed its survivors yields ZERO
-    new survivors — the at-least-once crash window produces fenced
-    duplicates in keep_dir, never store corruption or double-keeps."""
-    from pg2kafka_spark.streaming.ingest import (
-        ingest_keep_batch,
-        start_ingest_stream,
-    )
-
-    d = _ingest_dirs(tmp_path)
-    for rows in _INGEST_WAVES:
-        _write_wave(spark, rows, d["incoming"])
-    schema = "doc_id int, text string"
-    q = start_ingest_stream(
-        spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
-        max_files_per_trigger=1, available_now=True,
-    )
-    q.awaitTermination(180)
-
-    store = spark.read.parquet(d["store"])
-    for rows in _INGEST_WAVES:
-        batch = spark.createDataFrame(rows, schema)
-        replayed = ingest_keep_batch(batch, store)
-        assert replayed.count() == 0
-
-
-def test_ingest_store_or_empty_only_swallows_missing_path(spark, tmp_path):
-    """_store_or_empty maps ONLY the store-not-yet-written case to an
-    empty frame; a store directory that exists but cannot be read
-    (corrupt footer) must raise so the checkpoint retries the batch
-    instead of silently passing duplicates through the gate."""
-    from pg2kafka_spark.streaming.ingest import _store_or_empty
-
-    like = spark.createDataFrame([], "doc_id int, text string")
-    # missing directory → empty frame with the batch schema
-    empty = _store_or_empty(spark, str(tmp_path / "nope"), like)
-    assert empty.count() == 0 and empty.schema == like.schema
-
-    # corrupt store → raises (any Py4J/Spark error class), not empty
-    bad = tmp_path / "store"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
-    with pytest.raises(Exception):
-        _store_or_empty(spark, str(bad), like).collect()
-
-
-@pytest.mark.heavy_e2e
-def test_ingest_stream_bucketed_store_same_results(spark, tmp_path):
-    """The bucketed-store mode (store_table=...) must produce exactly
-    the plain-store keep-set over the 3 waves, while the store lands
-    as a (fp, 8)-bucketed catalog table whose rows carry the
-    precomputed fingerprint column."""
-    from pg2kafka_spark.streaming.ingest import start_ingest_stream
-
-    d = _ingest_dirs(tmp_path)
-    for rows in _INGEST_WAVES:
-        _write_wave(spark, rows, d["incoming"])
-    schema = "doc_id int, text string"
-    try:
-        q = start_ingest_stream(
-            spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
-            max_files_per_trigger=1, available_now=True,
-            store_table="ingest_store_bkt_test", store_buckets=8,
-        )
-        q.awaitTermination(180)
-        kept = spark.read.parquet(d["keep"])
-        assert {r["doc_id"] for r in kept.collect()} == {1, 2, 6, 9}
-        store = spark.table("ingest_store_bkt_test")
-        assert "fp" in store.columns
-        assert sorted(r["doc_id"] for r in store.collect()) == [1, 2, 6, 9]
-        # bucket metadata is live: the catalog reports the spec
-        ddl = spark.sql(
-            "SHOW CREATE TABLE ingest_store_bkt_test"
-        ).collect()[0][0]
-        assert "CLUSTERED BY (fp)" in ddl and "8 BUCKETS" in ddl
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ingest_store_bkt_test")
-
-
-@pytest.mark.heavy_e2e
-def test_ingest_bucketed_store_survives_catalog_loss(spark, tmp_path):
-    """Driver-restart window (r12 advice, medium): the bucketed store
-    keys its dedup state on a catalog entry that does NOT survive a
-    restart. Simulate the restart by DROPping the table (catalog gone,
-    data files intact) between two stream runs; the second run's
-    batches — an exact dup and a near dup of wave-1 survivors — must
-    still be gated, and the re-attached table must keep the bucket
-    spec."""
-    from pg2kafka_spark.streaming.ingest import start_ingest_stream
-
-    d = _ingest_dirs(tmp_path)
-    schema = "doc_id int, text string"
-    tbl = "ingest_store_restart_test"
-    try:
-        _write_wave(spark, _INGEST_WAVES[0], d["incoming"])
-        q = start_ingest_stream(
-            spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
-            max_files_per_trigger=1, available_now=True,
-            store_table=tbl, store_buckets=8,
-        )
-        q.awaitTermination(180)
-        kept_before = {
-            r["doc_id"] for r in spark.read.parquet(d["keep"]).collect()
-        }
-        assert kept_before, "wave 1 must keep something"
-
-        # "restart": external table dropped from the catalog, files stay
-        spark.sql(f"DROP TABLE {tbl}")
-        assert not spark.catalog.tableExists(tbl)
-
-        # wave 2: byte-identical replays of wave-1 survivors plus a
-        # near-dup rewrite — all must be gated by the re-attached store
-        survivors = [r for r in _INGEST_WAVES[0] if r[0] in kept_before]
-        near = (
-            survivors[0][0] + 100,
-            survivors[0][1].replace(
-                survivors[0][1].split(" ")[0],
-                survivors[0][1].split(" ")[0].upper(),
-                1,
-            ),
-        )
-        _write_wave(spark, survivors + [near], d["incoming"])
-        q = start_ingest_stream(
-            spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
-            max_files_per_trigger=1, available_now=True,
-            store_table=tbl, store_buckets=8,
-        )
-        q.awaitTermination(180)
-
-        kept_after = {
-            r["doc_id"] for r in spark.read.parquet(d["keep"]).collect()
-        }
-        assert kept_after == kept_before, (
-            "historical duplicates passed the gate during the "
-            "catalog-loss window"
-        )
-        # the re-attached table kept the bucketed layout
-        ddl = spark.sql(f"SHOW CREATE TABLE {tbl}").collect()[0][0]
-        assert "CLUSTERED BY" in ddl and "8 BUCKETS" in ddl
-        assert sorted(
-            r["doc_id"] for r in spark.table(tbl).collect()
-        ) == sorted(kept_before)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
-def test_ingest_bucketed_store_anti_join_saves_store_exchange(
-    spark, tmp_path
-):
-    """The point of the bucketed store: the fingerprint anti-join
-    consumes the store scan IN PLACE. A/B on the SAME store data —
-    plain parquet store vs (fp)-bucketed store — the bucketed plan
-    must carry strictly fewer Exchanges (measured: 30 vs 34 — the
-    store feeds several consumers and each store-side shuffle on fp
-    disappears), read the fp column instead of re-hashing text, and
-    report bucket metadata."""
-    import contextlib
-    import io
-
-    from pg2kafka_spark.operators.bucketed import write_bucketed
-    from pg2kafka_spark.operators.text import fingerprint as fpr
-    from pg2kafka_spark.streaming.ingest import ingest_keep_batch
-    from pyspark.sql import functions as F
-
-    rows = [(i, f"stored document number {i} with plenty of tokens "
-                f"for the gate to pass {i}") for i in range(50)]
-    store_plain = spark.createDataFrame(rows, "doc_id int, text string")
-    store_fp = store_plain.withColumn("fp", fpr(F.col("text")))
-    plain_dir = str(tmp_path / "plain_store")
-    store_plain.write.parquet(plain_dir)
-    try:
-        write_bucketed(
-            store_fp, "ingest_ab_bkt", "fp", 8,
-            path=str(tmp_path / "bkt_store"),
-        )
-        batch = spark.createDataFrame(
-            [(100, "a brand new incoming document with many fresh tokens "
-                   "to clear the minimum gate")],
-            "doc_id int, text string",
-        )
-
-        def plan(store_df):
-            df = ingest_keep_batch(batch, store_df)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            return buf.getvalue()
-
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            p_plain = plan(spark.read.parquet(plain_dir))
-            p_bkt = plan(spark.table("ingest_ab_bkt"))
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        n_plain = p_plain.count(" Exchange (")
-        n_bkt = p_bkt.count(" Exchange (")
-        assert n_bkt < n_plain, (n_plain, n_bkt)
-        assert "SelectedBucketsCount" in p_bkt
-        # the bucketed path reads the stored fp — it must NOT re-md5
-        # the store text (md5 still appears once for the BATCH side)
-        assert p_bkt.count("md5(") < p_plain.count("md5(")
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ingest_ab_bkt")
-
-
-@pytest.mark.heavy_e2e
-def test_ingest_band_table_mode_same_results_and_restart(spark, tmp_path):
-    """band_table mode (the maintained LSH-key table): the 3-wave keep
-    set must be unchanged, the band table must hold keys for exactly
-    the survivors, and a catalog loss between runs must re-attach BOTH
-    tables (the near-dup gate keeps working across the restart)."""
-    from pg2kafka_spark.streaming.ingest import start_ingest_stream
-
-    d = _ingest_dirs(tmp_path)
-    schema = "doc_id int, text string"
-    stbl, btbl = "ingest_band_store_t", "ingest_band_keys_t"
-    try:
-        for rows in _INGEST_WAVES[:2]:
-            _write_wave(spark, rows, d["incoming"])
-        q = start_ingest_stream(
-            spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
-            max_files_per_trigger=1, available_now=True,
-            store_table=stbl, store_buckets=8,
-            band_table=btbl, band_dir=str(tmp_path / "bands"),
-            band_buckets=8,
-        )
-        q.awaitTermination(180)
-        # waves 0-1 keep {1, 2, 6}: doc 4 is the NEAR dup the band
-        # table must catch
-        kept = {r["doc_id"] for r in spark.read.parquet(d["keep"]).collect()}
-        assert kept == {1, 2, 6}
-
-        # "restart": both catalog entries lost, data intact
-        spark.sql(f"DROP TABLE {stbl}")
-        spark.sql(f"DROP TABLE {btbl}")
-
-        _write_wave(spark, _INGEST_WAVES[2], d["incoming"])
-        q = start_ingest_stream(
-            spark, d["incoming"], schema, d["store"], d["keep"], d["ckpt"],
-            max_files_per_trigger=1, available_now=True,
-            store_table=stbl, store_buckets=8,
-            band_table=btbl, band_dir=str(tmp_path / "bands"),
-            band_buckets=8,
-        )
-        q.awaitTermination(180)
-        kept = {r["doc_id"] for r in spark.read.parquet(d["keep"]).collect()}
-        # doc 7 (near dup of wave-1 survivor 6) and doc 8 (exact dup)
-        # must be gated even though the catalog was lost in between
-        assert kept == {1, 2, 6, 9}
-        bands = spark.table(btbl)
-        assert set(bands.columns) == {"doc_id", "band", "bkey"}
-        assert {r["doc_id"] for r in bands.select("doc_id").distinct().collect()} == {1, 2, 6, 9}
-        ddl = spark.sql(f"SHOW CREATE TABLE {btbl}").collect()[0][0]
-        assert "CLUSTERED BY (band, bkey)" in ddl
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {stbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {btbl}")
 
 
 @pytest.mark.heavy_e2e
@@ -1329,200 +710,6 @@ def test_store_bands_results_match_recompute(spark):
         )
     )
     assert got_c == got_a
-
-
-def _run_funnel_parity(spark, tmp_path, window_us):
-    """Shared streaming-vs-batch funnel parity harness: drive the
-    sf0.001 events table through funnel_state_stream in 4-file
-    micro-batches and compare every user's FINAL (t1, t2, t3, stage)
-    against the batch formulation's stage frames — unwindowed
-    (event_funnel_counts semantics) when window_us is None, banded
-    (event_funnel_windowed_counts semantics) otherwise."""
-    from pg2kafka_spark.catalog import load_table
-    from pg2kafka_spark.streaming.windows import funnel_state_stream
-
-    ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
-        "user_id", "event_type", "ts"
-    )
-    src = str(tmp_path / "ev_src")
-    # four ts-quartile slices published one after another: the file
-    # stream source orders files by modification time, so they replay
-    # in event-time order — the outbox delivery contract the operator
-    # documents
-    bounds = ev.agg(
-        *[F.expr(f"percentile(unix_micros(ts), {q})").alias(f"q{i}")
-          for i, q in enumerate((0.25, 0.5, 0.75))]
-    ).collect()[0]
-    cuts = [None, bounds.q0, bounds.q1, bounds.q2, None]
-    for i in range(4):
-        sl = ev.filter(
-            (F.lit(True) if cuts[i] is None
-             else F.unix_micros("ts") > F.lit(int(cuts[i])))
-            & (F.lit(True) if cuts[i + 1] is None
-               else F.unix_micros("ts") <= F.lit(int(cuts[i + 1])))
-        )
-        append_files(sl.coalesce(1), src)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).option("maxFilesPerTrigger", 1).parquet(src)
-    qname = f"funnel_stream_{'w' if window_us else 'u'}"
-    q = (
-        funnel_state_stream(stream, window_us=window_us)
-        .writeStream.queryName(qname)
-        .format("memory")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.table(qname).collect()
-    final = {}
-    for r in rows:  # update mode appends; last emission per user wins
-        final[r.user_id] = (r.t1, r.t2, r.t3, r.stage)
-
-    # batch reference: the event_funnel(_windowed)_counts stage
-    # logic, per user
-    def band(prev_col):
-        cond = F.col("us") > F.col(prev_col)
-        if window_us is not None:
-            cond &= F.col("us") <= F.col(prev_col) + F.lit(window_us)
-        return cond
-
-    e = ev.select("user_id", "event_type", F.unix_micros("ts").alias("us"))
-    s1 = (e.filter(F.col("event_type") == "view")
-          .groupBy("user_id").agg(F.min("us").alias("t1")))
-    s2 = (e.filter(F.col("event_type") == "click").join(s1, "user_id")
-          .filter(band("t1"))
-          .groupBy("user_id").agg(F.min("us").alias("t2")))
-    s3 = (e.filter(F.col("event_type") == "purchase").join(s2, "user_id")
-          .filter(band("t2"))
-          .groupBy("user_id").agg(F.min("us").alias("t3")))
-    want = {}
-    for r in s1.collect():
-        want[r.user_id] = [r.t1, None, None, 1]
-    for r in s2.collect():
-        want[r.user_id][1] = r.t2
-        want[r.user_id][3] = 2
-    for r in s3.collect():
-        want[r.user_id][2] = r.t3
-        want[r.user_id][3] = 3
-    got_staged = {u: v for u, v in final.items() if v[3] > 0}
-    assert got_staged == {u: tuple(v) for u, v in want.items()}
-    # users with no view at all never pass stage 0
-    assert all(v[3] == 0 for u, v in final.items() if u not in want)
-    assert len(want) > 0
-    return want
-
-
-@pytest.mark.heavy_e2e
-def test_funnel_state_stream_matches_batch_funnel(spark, tmp_path):
-    _run_funnel_parity(spark, tmp_path, window_us=None)
-
-
-@pytest.mark.heavy_e2e
-def test_funnel_state_stream_windowed_matches_batch(spark, tmp_path):
-    """The 7-day-band streaming funnel reproduces the batch
-    event_funnel_windowed_counts stage frames — and the band binds
-    (some user converts unwindowed but not within the band, so the
-    two parity runs check different machines)."""
-    week_us = 604_800_000_000
-    want_w = _run_funnel_parity(spark, tmp_path, window_us=week_us)
-    n_full_w = sum(1 for v in want_w.values() if v[3] == 3)
-    assert 0 < n_full_w
-    # the band must actually exclude something at sf0.001 (events
-    # span months); otherwise this test degenerates to the unwindowed
-    # one — compare against the unwindowed batch stage counts
-    from pg2kafka_spark.catalog import load_table
-
-    e = (
-        load_table(spark, "events", "/root/testdata/sf0.001")
-        .select("user_id", "event_type", F.unix_micros("ts").alias("us"))
-    )
-    s1 = (e.filter(F.col("event_type") == "view")
-          .groupBy("user_id").agg(F.min("us").alias("t1")))
-    s2 = (e.filter(F.col("event_type") == "click").join(s1, "user_id")
-          .filter(F.col("us") > F.col("t1"))
-          .groupBy("user_id").agg(F.min("us").alias("t2")))
-    s3 = (e.filter(F.col("event_type") == "purchase").join(s2, "user_id")
-          .filter(F.col("us") > F.col("t2"))
-          .groupBy("user_id").agg(F.min("us").alias("t3")))
-    n_s2_u, n_s3_u = s2.count(), s3.count()
-    n_s2_w = sum(1 for v in want_w.values() if v[3] >= 2)
-    assert (n_s2_w, n_full_w) != (n_s2_u, n_s3_u), (
-        "7-day band excluded nothing — widen the fixture or shrink "
-        "the band"
-    )
-
-
-def test_funnel_fold_is_chunk_order_independent():
-    """The per-batch fold concatenates Arrow chunks before taking
-    mins: a view arriving in a LATER chunk than a click must still
-    qualify that click (regression for the chunk-sequential fold,
-    which discarded the click before seeing the view)."""
-    import pandas as pd
-
-    from pg2kafka_spark.streaming.windows import _build_funnel_fn
-
-    class _FakeState:
-        exists = False
-
-        def update(self, v):
-            self.value = v
-
-    chunk_click = pd.DataFrame({"event_type": ["click"], "ts_us": [200]})
-    chunk_view = pd.DataFrame({"event_type": ["view"], "ts_us": [100]})
-    fn = _build_funnel_fn(None)
-    st = _FakeState()
-    out = list(fn((7,), iter([chunk_click, chunk_view]), st))
-    assert st.value == (100, 200, None)
-    assert out[0]["stage"].iloc[0] == 2
-    # windowed: the same pair with a band too narrow to qualify
-    fn_w = _build_funnel_fn(50)
-    st_w = _FakeState()
-    list(fn_w((7,), iter([chunk_click, chunk_view]), st_w))
-    assert st_w.value == (100, None, None)
-
-
-def test_nstage_fold_is_row_order_independent():
-    """Generic-kernel twin of the chunk-order test (r14): the 4-stage
-    fold over a single batch must produce the same state under EVERY
-    permutation of the rows, including the cascading re-qualification
-    (a signup arriving last still qualifies the whole chain)."""
-    import itertools
-
-    import pandas as pd
-
-    from pg2kafka_spark.streaming.windows import _build_funnel_stages_fn
-
-    class _FakeState:
-        exists = False
-
-        def update(self, v):
-            self.value = v
-
-    stages = ["signup", "view", "click", "purchase"]
-    rows = [("purchase", 400), ("click", 300), ("view", 200),
-            ("signup", 100), ("view", 250)]
-    want = (100, 200, 300, 400)
-    fn = _build_funnel_stages_fn(stages, None)
-    for perm in itertools.permutations(rows):
-        pdf = pd.DataFrame(
-            {"event_type": [r[0] for r in perm],
-             "ts_us": [r[1] for r in perm]}
-        )
-        st = _FakeState()
-        out = list(fn((1,), iter([pdf]), st))
-        assert st.value == want, perm
-        assert out[0]["stage"].iloc[0] == 4
-    # banded: no view lands within 50 µs of signup@100 (earliest is
-    # 200), so the chain stops at stage 1
-    fn_w = _build_funnel_stages_fn(stages, 50)
-    st_w = _FakeState()
-    list(fn_w((1,), iter([pd.DataFrame(
-        {"event_type": [r[0] for r in rows],
-         "ts_us": [r[1] for r in rows]})]), st_w))
-    assert st_w.value == (100, None, None, None)
 
 
 def test_jsonl_source_composes_into_a_stream_with_quarantine(
@@ -1749,91 +936,6 @@ def test_per_key_order_survives_parallel_sink(spark, outbox, tmp_path):
         key = f"k{k:02d}"
         want = [v * n_keys + k for v in range(n_versions)]
         assert per_key[key] == want, f"{key} delivered out of order"
-
-
-@pytest.mark.heavy_e2e
-def test_funnel_state_stream_stages_matches_batch_4stage(spark, tmp_path):
-    """The N-stage streaming funnel (r14) over the r13 4-stage list
-    must reproduce the batch cascading-min stage instants per user —
-    the same parity bar the 3-stage machine carries, on the
-    generalized fold (banded, week window)."""
-    from pg2kafka_spark.catalog import load_table
-    from pg2kafka_spark.streaming.windows import funnel_state_stream_stages
-
-    stages = ["signup", "view", "click", "purchase"]
-    week_us = 604_800_000_000
-    ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
-        "user_id", "event_type", "ts"
-    )
-    src = str(tmp_path / "ev4_src")
-    bounds = ev.agg(
-        *[F.expr(f"percentile(unix_micros(ts), {q})").alias(f"q{i}")
-          for i, q in enumerate((0.25, 0.5, 0.75))]
-    ).collect()[0]
-    cuts = [None, bounds.q0, bounds.q1, bounds.q2, None]
-    for i in range(4):
-        sl = ev.filter(
-            (F.lit(True) if cuts[i] is None
-             else F.unix_micros("ts") > F.lit(int(cuts[i])))
-            & (F.lit(True) if cuts[i + 1] is None
-               else F.unix_micros("ts") <= F.lit(int(cuts[i + 1])))
-        )
-        append_files(sl.coalesce(1), src)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).option("maxFilesPerTrigger", 1).parquet(src)
-    q = (
-        funnel_state_stream_stages(stream, stages, window_us=week_us)
-        .writeStream.queryName("funnel4_stream")
-        .format("memory")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    final = {}
-    for r in spark.table("funnel4_stream").collect():
-        final[r.user_id] = (r.t1, r.t2, r.t3, r.t4, r.stage)
-
-    # batch reference: cascading banded mins, one frame per stage
-    e = ev.select("user_id", "event_type", F.unix_micros("ts").alias("us"))
-    prev = (
-        e.filter(F.col("event_type") == stages[0])
-        .groupBy("user_id")
-        .agg(F.min("us").alias("t1"))
-    )
-    frames = {1: prev}
-    for k in range(2, 5):
-        prev = (
-            e.filter(F.col("event_type") == stages[k - 1])
-            .join(prev, "user_id")
-            .filter(
-                (F.col("us") > F.col(f"t{k - 1}"))
-                & (F.col("us") <= F.col(f"t{k - 1}") + week_us)
-            )
-            .groupBy("user_id")
-            .agg(
-                F.min("us").alias(f"t{k}"),
-                *[F.first(f"t{j}").alias(f"t{j}") for j in range(1, k)],
-            )
-        )
-        frames[k] = prev
-    want = {}
-    for k in range(1, 5):
-        for r in frames[k].collect():
-            cur = want.get(r.user_id, [None] * 4 + [0])
-            for j in range(1, k + 1):
-                cur[j - 1] = r[f"t{j}"]
-            cur[4] = k
-            want[r.user_id] = cur
-    want = {u: tuple(v) for u, v in want.items()}
-    # users emitting stage 0 (no signup yet) exist in the stream
-    # output only — drop them from the comparison frame
-    got = {u: v for u, v in final.items() if v[4] > 0}
-    assert got == want
-    n_full = sum(1 for v in want.values() if v[4] == 4)
-    assert n_full > 0, "fixture must drive some user through all 4 stages"
 
 
 def _write_scattered_chunks(spark, outbox, n_keys, n_chunks, per_chunk):

@@ -1,28 +1,18 @@
 #!/bin/bash
-# Default developer test entry: the full suite in EIGHT concurrent
+# Default developer test entry: the full suite in SIX concurrent
 # pytest lanes, so the everyday `make test` pays the overlapped wall
 # instead of the 20+ min single-process run.
 #
 #   make test            # or: bash tools/run_tests.sh
 #   PYTEST_ARGS="-k wire" bash tools/run_tests.sh   # forwarded to ALL lanes
 #
-# Lane split (8 lanes on the 32-core box — the stream lanes are
-# trigger-latency-bound and mostly idle-wait, so the CPU
-# oversubscription is mild). r18 rebalance (r17 verdict item 1: the
-# single-process test_oracle_parity bound the wall at ~997 s on the
-# judge's run / 831 s here): the parity sweep runs as TWO lanes via
-# PARITY_SHARD=k/2 (round-robin over sorted names — the expensive ANN
-# rows scatter evenly; union of shards = full coverage, unsharded
-# pytest unaffected); test_annindex.py — the next-heaviest stream
-# file at 782 s — splits into its PQ and non-PQ halves with -k; and
-# test_multimodal_real.py + test_bpe_production.py move from the
-# streaming lane to the retention+graph lane (the shortest, 486 s
-# solo). Measured on a quiet host after the rebalance (warm store
-# dirs, all green): total wall 696 / 752 / 883 s across three runs
-# (median 752 s ≈ 12.5 min; the swing is host variance — the binding
-# lane alternates between the annindex PQ half and test_pipeline_ops)
-# — vs 833 s / binding-lane 831 s before the split, and the 999 s
-# judge-measured r17 wall. Under the 15-minute line on all three.
+# Lane split: the parity sweep runs as TWO lanes via PARITY_SHARD=k/2
+# (round-robin over sorted names — the expensive ANN rows scatter
+# evenly; union of shards = full coverage, unsharded pytest
+# unaffected); the relay stream tests, the pipeline operators and the
+# store/tokenizer files get one lane each; every other file runs in
+# the "rest" lane. Every lane selects at least one test: pytest exits
+# 5 on an empty selection, which this runner reports as a failure.
 # Each lane gets its OWN TMPDIR: the at-rest session stores
 # (_ensure_bucketed_tables, _ensure_retention_store,
 # _ensure_ann_index, _ensure_components_store) key their paths off
@@ -33,21 +23,20 @@
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
-# Full coverage here, always: the heavy_e2e-marked streaming/store
+# Full coverage here, always: the heavy_e2e-marked store/tokenizer
 # e2e tests (skipped in a PLAIN `pytest tests/` run so a sequential
 # wall-budgeted run finishes even on a 4x-slow host, see
 # tests/conftest.py) are enabled for every lane of this runner.
 export PG2KAFKA_HEAVY_E2E=1
 
 STREAM_A="tests/test_streaming.py"
-STREAM_B="tests/test_annindex.py"
-STREAM_C="tests/test_retention.py tests/test_graph.py \
+STREAM_B="tests/test_annindex.py tests/test_retention.py tests/test_graph.py \
 tests/test_multimodal_real.py tests/test_bpe_production.py"
 HEAVY_A="tests/test_pipeline_ops.py"
 HEAVY_B="tests/test_oracle_parity.py"
 PYTEST_ARGS="${PYTEST_ARGS:-}"
 
-lanes="rest heavy_a heavy_b0 heavy_b1 stream_a stream_b0 stream_b1 stream_c"
+lanes="rest heavy_a heavy_b0 heavy_b1 stream_a stream_b"
 for lane in $lanes; do
   # heavy_b1 deliberately has no directory of its own: the parity
   # twins SHARE heavy_b0's TMPDIR (see the comment at their launch),
@@ -63,17 +52,9 @@ TMPDIR=/tmp/rt_pytest_stream_a_tmp python -m pytest $STREAM_A -q \
   --durations=10 $PYTEST_ARGS > "$stream_a_log" 2>&1 &
 stream_a_pid=$!
 # shellcheck disable=SC2086
-TMPDIR=/tmp/rt_pytest_stream_b0_tmp python -m pytest $STREAM_B -q \
-  -k "pq" --durations=10 $PYTEST_ARGS > "$stream_b0_log" 2>&1 &
-stream_b0_pid=$!
-# shellcheck disable=SC2086
-TMPDIR=/tmp/rt_pytest_stream_b1_tmp python -m pytest $STREAM_B -q \
-  -k "not pq" --durations=10 $PYTEST_ARGS > "$stream_b1_log" 2>&1 &
-stream_b1_pid=$!
-# shellcheck disable=SC2086
-TMPDIR=/tmp/rt_pytest_stream_c_tmp python -m pytest $STREAM_C -q \
-  --durations=10 $PYTEST_ARGS > "$stream_c_log" 2>&1 &
-stream_c_pid=$!
+TMPDIR=/tmp/rt_pytest_stream_b_tmp python -m pytest $STREAM_B -q \
+  --durations=10 $PYTEST_ARGS > "$stream_b_log" 2>&1 &
+stream_b_pid=$!
 # shellcheck disable=SC2086
 TMPDIR=/tmp/rt_pytest_heavy_a_tmp python -m pytest $HEAVY_A -q \
   --durations=10 $PYTEST_ARGS > "$heavy_a_log" 2>&1 &
@@ -94,7 +75,7 @@ TMPDIR=/tmp/rt_pytest_heavy_b0_tmp PARITY_SHARD=1/2 python -m pytest \
 heavy_b1_pid=$!
 # shellcheck disable=SC2086
 TMPDIR=/tmp/rt_pytest_rest_tmp python -m pytest tests/ -q --durations=10 \
-  $(for f in $STREAM_A $STREAM_B $STREAM_C $HEAVY_A $HEAVY_B; do printf -- "--ignore=%s " "$f"; done) \
+  $(for f in $STREAM_A $STREAM_B $HEAVY_A $HEAVY_B; do printf -- "--ignore=%s " "$f"; done) \
   $PYTEST_ARGS > "$rest_log" 2>&1 &
 rest_pid=$!
 
@@ -116,4 +97,4 @@ if [ "$rc" -ne 0 ]; then
   echo "FAILED (logs:$all_logs)"
   exit 1
 fi
-echo "OK: all eight shards green in $((SECONDS - t0))s"
+echo "OK: all six lanes green in $((SECONDS - t0))s"
